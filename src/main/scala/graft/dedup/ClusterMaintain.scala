@@ -193,21 +193,12 @@ object ClusterMaintain {
       s.toArray
     }
     val idx = nodeIds.zipWithIndex.toMap
-    val parent = Array.tabulate(nodeIds.length)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
+    val uf = new UnionFind(nodeIds.length)
     edgeArr.foreach { case (a, b) =>
       val ca = epCluster.getOrElse(a, a)
       val cb = epCluster.getOrElse(b, b)
       if (ca != cb) (idx.get(ca), idx.get(cb)) match {
-        case (Some(x), Some(y)) =>
-          val rx = find(x); val ry = find(y)
-          if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
+        case (Some(x), Some(y)) => uf.union(x, y)
         case _ => () // endpoint outside the node set: not propagated
       }
     }
@@ -215,10 +206,10 @@ object ClusterMaintain {
     // constituent clusters + batch occurrences in the component
     val compMin = scala.collection.mutable.HashMap.empty[Int, Long]
     nodeIds.indices.foreach { i =>
-      val r = find(i)
+      val r = uf.find(i)
       compMin(r) = math.min(compMin.getOrElse(r, Long.MaxValue), nodeIds(i))
     }
-    def labelOf(node: Long): Long = compMin(find(idx(node)))
+    def labelOf(node: Long): Long = compMin(uf.find(idx(node)))
     val sizeOf = scala.collection.mutable.HashMap.empty[Long, Long]
     affectedIds.foreach { c =>
       val l = labelOf(c); sizeOf(l) = sizeOf.getOrElse(l, 0L) + priorSize(c)

@@ -101,29 +101,19 @@ object Clusters {
         .distinct().collect().map(_.getLong(0)).toSet
     val ids = endpoints.filter(member)
     val idx = ids.zipWithIndex.toMap
-    val parent = Array.tabulate(ids.length)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
+    val uf = new UnionFind(ids.length)
     edgeArr.foreach { case (a, b) =>
-      if (member(a) && member(b)) {
-        val ra = find(idx(a)); val rb = find(idx(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
+      if (member(a) && member(b)) uf.union(idx(a), idx(b))
     }
     val compMin = scala.collection.mutable.HashMap.empty[Int, Long]
     ids.indices.foreach { i =>
-      val r = find(i)
+      val r = uf.find(i)
       compMin(r) = math.min(compMin.getOrElse(r, Long.MaxValue), ids(i))
     }
     // only non-identity labels ride the broadcast; singletons (and
     // every non-endpoint node) fall through the coalesce to their id
     val mapRows = ids.indices.iterator
-      .map(i => (ids(i), compMin(find(i))))
+      .map(i => (ids(i), compMin(uf.find(i))))
       .filter { case (id, cl) => id != cl }.toSeq
     nodes.select(col("id"))
       .join(broadcast(mapRows.toDF("id", "__cc")), Seq("id"), "left")
@@ -402,18 +392,7 @@ object Clusters {
     val n = reps.length
     val idxOf = reps.iterator.zipWithIndex
       .map { case ((fp, _, _), i) => fp -> i }.toMap
-    val parent = Array.tabulate(n)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
-    def union(a: Int, b: Int): Unit = {
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
+    val uf = new UnionFind(n)
     // byte-banded candidate buckets (pigeonhole: d ≤ 3 leaves ≥ 1 of
     // the 4 bytes exact); a duplicate candidate pair across bands is
     // harmless — union is idempotent
@@ -437,7 +416,7 @@ object Clusters {
         while (b < bucket.length) {
           val x = bucket(a); val y = bucket(b)
           if (java.lang.Long.bitCount(reps(x)._1 ^ reps(y)._1) <= maxDist)
-            union(x, y)
+            uf.union(x, y)
           b += 1
         }
         a += 1
@@ -448,13 +427,13 @@ object Clusters {
     val compSize = scala.collection.mutable.HashMap.empty[Int, Long]
     i = 0
     while (i < n) {
-      val r = find(i)
+      val r = uf.find(i)
       compMin(r) = math.min(compMin.getOrElse(r, Long.MaxValue), reps(i)._2)
       compSize(r) = compSize.getOrElse(r, 0L) + reps(i)._3
       i += 1
     }
     fps.iterator.map { case (id, fp) =>
-      val r = find(idxOf(fp))
+      val r = uf.find(idxOf(fp))
       (id, compMin(r), compSize(r))
     }.toSeq
   }

@@ -1,251 +1,12 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.schema.{EventRow, OutboxEntry, RawPost}
 import graft.state.OutboxRetry
-
-/** Minimal Delta-style table: versioned parquet snapshots + an
-  * atomically-replaced pointer file recording (version, batchId).
-  * `commit` is IDEMPOTENT per streaming batch — replaying a batch whose
-  * id is already committed is a no-op, which together with Structured
-  * Streaming's checkpointed offsets gives exactly-once table contents
-  * over restarts (the same txn-log idea Delta/Iceberg implement; at
-  * cluster scale swap this class for a real lakehouse MERGE, the sink
-  * code above it is unchanged).
-  */
-final class SnapshotTable(spark: SparkSession, path: String) {
-
-  private val ptrPath = Paths.get(path, "_LATEST")
-
-  /** (snapshot version, last committed streaming batch id). */
-  def latest: Option[(Long, Long)] = pointer().map(p => (p._1, p._2))
-
-  /** Adds the live schema version (third field; 0 in pre-evolution
-    * pointers — see [[TableSchema]]).
-    */
-  private def pointer(): Option[(Long, Long, Long)] =
-    if (!Files.exists(ptrPath)) None
-    else {
-      val f = new String(Files.readAllBytes(ptrPath),
-        StandardCharsets.UTF_8).trim.split(",")
-      Some((f(0).toLong, f(1).toLong,
-        if (f.length >= 3) f(2).toLong else 0L))
-    }
-
-  def read(): Option[DataFrame] = pointer().map { case (v, _, m) =>
-    val base = spark.read.parquet(s"$path/v_$v")
-    TableSchema.applyTo(base, TableSchema.read(path, m))
-  }
-
-  def lastBatchId: Long = latest.map(_._2).getOrElse(-1L)
-
-  /** Live schema version — 0 until an [[addColumn]] commits one. */
-  def schemaVersion: Long = pointer().map(_._3).getOrElse(0L)
-
-  /** ADDITIVE migration, the [[BucketedTable.addColumn]] contract on
-    * the snapshot layout: the current snapshot FILE is not rewritten —
-    * it reads through the declared default until the next `commit`
-    * lands a fresh snapshot carrying the column. Side file first
-    * (orphan), one atomic pointer move, idempotent per column name.
-    */
-  def addColumn(name: String, dataType: String, defaultSql: String): Unit = {
-    val entry = pointer()
-    val (v, batchId, m) = entry.getOrElse(throw new
-      IllegalStateException(s"SnapshotTable.addColumn($name): migrate " +
-        s"after the first commit — $path has none"))
-    val cols = TableSchema.read(path, m)
-    if (cols.exists(_.name == name)) return // idempotent
-    TableSchema.validate(spark, name, dataType, defaultSql)
-    TableSchema.write(path, m + 1,
-      cols :+ TableSchema.AddedColumn(name, dataType, defaultSql),
-      "migrate")
-    guardUnmoved(entry, "migrate")(_._3 >= m + 1) {
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$path/columns_v${m + 1}"))
-    }
-    writePointer(v, batchId, m + 1, "migrate")
-  }
-
-  /** Lost-update detection, the [[BucketedTable]] contract on the
-    * snapshot layout ([[ConcurrentWriteException]]): fail NAMED when
-    * the pointer moved since op entry — `torn` when the competing
-    * writer claimed the same version/file name this op was writing,
-    * clean abort (orphans removed, retry) otherwise.
-    */
-  private def guardUnmoved(expected: Option[(Long, Long, Long)],
-      op: String)(torn: ((Long, Long, Long)) => Boolean)(
-      cleanup: => Unit): Unit = {
-    val now = pointer()
-    if (now == expected) return
-    if (now.exists(torn))
-      throw new ConcurrentWriteException(
-        s"SnapshotTable.$op: another writer claimed the version this " +
-          s"operation was writing at $path (pointer $expected → $now) — " +
-          "its contents are undefined; the tables are single-writer by " +
-          "contract, restore from a retained version")
-    cleanup
-    throw new ConcurrentWriteException(
-      s"SnapshotTable.$op: the pointer at $path moved $expected → $now " +
-        "while the operation was in flight — another writer is active; " +
-        "this operation aborted cleanly (its orphans removed), retry " +
-        "it; the tables are single-writer by contract")
-  }
-
-  private def writePointer(v: Long, batchId: Long, schemaV: Long,
-      op: String): Unit = {
-    val tmp = Paths.get(path, s"_LATEST.tmp.$batchId")
-    Files.createDirectories(Paths.get(path))
-    Failpoints.step(s"$op.pointer.tmp")
-    Files.write(tmp,
-      s"$v,$batchId,$schemaV".getBytes(StandardCharsets.UTF_8))
-    Failpoints.step(s"$op.pointer.move")
-    Files.move(tmp, ptrPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Write a full new snapshot unless `batchId` already committed. */
-  def commit(df: DataFrame, batchId: Long): Unit = {
-    if (lastBatchId >= batchId) return // replayed batch → no-op
-    val p = pointer()
-    val v = p.map(_._1 + 1).getOrElse(0L)
-    val m = p.map(_._3).getOrElse(0L)
-    Failpoints.step("snapshot.data")
-    // pre-write check avoids clobbering a competing claim of v_<v>;
-    // the post-write check closes the window the write itself opens
-    guardUnmoved(p, "commit")(_._1 >= v)(())
-    df.write.mode(SaveMode.Overwrite).parquet(s"$path/v_$v")
-    guardUnmoved(p, "commit")(_._1 >= v) {
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$path/v_$v"))
-    }
-    writePointer(v, batchId, m, "snapshot")
-  }
-
-  /** Snapshot versions still on disk — every commit IS a full
-    * snapshot, so each retained version is independently readable;
-    * [[vacuum]] trims the horizon (without it a per-batch committer
-    * like the outbox leaks one snapshot directory per batch forever).
-    */
-  def versions: Seq[Long] = pointer() match {
-    case None => Seq.empty
-    case Some((v, _, _)) =>
-      // list once, O(live snapshots) — a per-batch committer's id
-      // space grows forever, so never probe per historical id
-      Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("v_"))
-        .map(_.getName.stripPrefix("v_").toLong)
-        .filter(_ <= v).sorted.toSeq
-  }
-
-  /** Time travel, the [[BucketedTable.readAt]] contract on the
-    * snapshot layout: the snapshot AS OF `version`, read through the
-    * LIVE schema; fails NAMED when out of range or vacuumed.
-    */
-  /** The named totality check behind [[readAt]] and [[restore]]. */
-  private def retainedDir(version: Long, op: String): String = {
-    val v = pointer().map(_._1).getOrElse(throw new IllegalStateException(
-      s"SnapshotTable.$op($version): $path has no committed version"))
-    require(version >= 0 && version <= v,
-      s"SnapshotTable.$op($version): version out of range [0, $v]")
-    if (!new java.io.File(s"$path/v_$version").isDirectory)
-      throw new IllegalStateException(
-        s"SnapshotTable.$op($version): v_$version is gone — the " +
-          "version was vacuumed; raise the keepVersions horizon to " +
-          "read further back")
-    s"$path/v_$version"
-  }
-
-  def readAt(version: Long): Option[DataFrame] = {
-    val dir = retainedDir(version, "readAt")
-    Some(TableSchema.applyTo(spark.read.parquet(dir),
-      TableSchema.read(path, pointer().map(_._3).getOrElse(0L))))
-  }
-
-  /** RESTORE, the [[BucketedTable.restore]] contract on the snapshot
-    * layout: copy the retained snapshot forward as a NEW version (the
-    * bad version stays readable evidence; the batch gate does not
-    * move). The raw files are copied — [[read]] applies the live
-    * schema's defaults at read time exactly as it does for any
-    * pre-migration snapshot.
-    */
-  def restore(version: Long): Unit = {
-    val entry = pointer()
-    entry.foreach { case (v, batchId, m) =>
-      if (version == v) return
-      val dir = retainedDir(version, "restore")
-      Failpoints.step("restore.data")
-      guardUnmoved(entry, "restore")(_._1 >= v + 1)(())
-      spark.read.parquet(dir)
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/v_${v + 1}")
-      guardUnmoved(entry, "restore")(_._1 >= v + 1) {
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(s"$path/v_${v + 1}"))
-      }
-      writePointer(v + 1, batchId, m, "restore")
-    }
-  }
-
-  /** Change feed between two retained snapshots, keyed by `keyCol`
-    * (a parameter — the snapshot layout is schema-agnostic): the
-    * shared [[StateDiff]] classification over both snapshots read
-    * WHOLE. The layout rewrites every commit, so there is nothing to
-    * prune — cost is both snapshots; use the bucketed store when
-    * feed cost must be ∝ delta.
-    */
-  def changesBetween(vFrom: Long, vTo: Long, keyCol: String): DataFrame = {
-    require(vFrom <= vTo,
-      s"SnapshotTable.changesBetween($vFrom, $vTo): vFrom must be ≤ vTo")
-    val f = readAt(vFrom)
-    val t = readAt(vTo)
-    StateDiff.classify(f, t, keyCol, t.orElse(f).get)
-  }
-
-  /** Named tag pinning a snapshot against [[vacuum]] — the
-    * [[BucketedTable.tag]] contract on the snapshot layout.
-    */
-  def tag(name: String, version: Long): Unit = {
-    retainedDir(version, "tag")
-    TagFiles.write(path, name, version)
-  }
-
-  /** Every tag → pinned snapshot version. */
-  def tags: Map[String, Long] = TagFiles.all(path)
-
-  /** Release a tag; the next [[vacuum]] may collect the snapshot. */
-  def untag(name: String): Unit = TagFiles.remove(path, name)
-
-  /** Delete every snapshot older than the last `keepVersions` (tagged
-    * snapshots retained regardless) — no pointer write, retained
-    * reads total at every kill boundary, a vacuumed version fails
-    * [[readAt]] NAMED. The GC the per-batch outbox committer needs
-    * to not leak one directory per batch.
-    */
-  def vacuum(keepVersions: Int): Unit = {
-    require(keepVersions >= 1, s"keepVersions must be ≥ 1: $keepVersions")
-    pointer().foreach { case (v, _, _) =>
-      val retainFrom = math.max(0L, v - keepVersions + 1)
-      val tagged = tags.values.toSet
-      // list once: the delete set is O(what exists), not O(lifetime
-      // batch count) — this runs on the sink's maintenance tick
-      Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("v_"))
-        .map(f => (f.getName.stripPrefix("v_").toLong, f))
-        .filter { case (u, _) => u < retainFrom && !tagged.contains(u) }
-        .sortBy(_._1)
-        .foreach { case (u, f) =>
-          Failpoints.step(s"vacuum.dir.v_$u")
-          org.apache.commons.io.FileUtils.deleteQuietly(f)
-        }
-    }
-  }
-}
 
 /** S7/S8/A10 — the real sink wiring: the streaming event upsert lands
   * in a versioned events table via an idempotent `foreachBatch` MERGE,
@@ -344,10 +105,6 @@ object EventSink {
     }.toDF()
   }
 
-  /** Start the full pipeline: posts stream → dedup → keyed upsert →
-    * foreachBatch MERGE into `eventsPath` + outbox enqueue/step into
-    * `outboxPath`, checkpointed at `checkpoint`.
-    */
   /** One micro-batch of the sink, idempotent PER TABLE: a crash
     * between the events commit and the outbox commit leaves the two
     * tables at different batch ids, and the replayed batch must then
@@ -426,6 +183,10 @@ object EventSink {
     runMaintenance()
   }
 
+  /** Start the full pipeline: posts stream → dedup → keyed upsert →
+    * foreachBatch MERGE into `eventsPath` + outbox enqueue/step into
+    * `outboxPath`, checkpointed at `checkpoint`.
+    */
   def start(posts: Dataset[RawPost], eventsPath: String, outboxPath: String,
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
       deliver: OutboxEntry => Boolean = _ => true,

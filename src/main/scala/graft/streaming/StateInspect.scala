@@ -55,6 +55,69 @@ object StateInspect {
     ls(path).filter(f => f.isDirectory && f.getName.startsWith(prefix))
       .map(_.getName).sorted.toSeq
 
+  // The raw pointer of each layout, parsed by the inspector's OWN
+  // codec (one per layout, shared by inspect and repair) — never the
+  // table classes' — so a codec bug there cannot hide here.
+
+  /** `<last>` then optional `compact=`/`epoch=`/`tomb=` lines. */
+  private final case class AppendPtr(last: Long, ct: Long, epoch: Long,
+      tomb: Long) {
+    def kLive: String = if (epoch == 0L) s"k_$ct" else s"k_${ct}_e$epoch"
+  }
+  private def appendPtr(path: String): AppendPtr = {
+    val lines = readText(Paths.get(path, "_LATEST")).linesIterator.toSeq
+    def field(k: String, d: Long) = lines.collectFirst {
+      case l if l.startsWith(s"$k=") => l.stripPrefix(s"$k=").toLong
+    }.getOrElse(d)
+    AppendPtr(lines.head.toLong, field("compact", -1L), field("epoch", 0L),
+      field("tomb", 0L))
+  }
+
+  /** `<v>,<batchId>[,<buckets>[,<schema>]]`; nb −1 = the constructor's. */
+  private final case class BucketedPtr(v: Long, batchId: Long, nb: Long,
+      sm: Long)
+  private def bucketedPtr(path: String): BucketedPtr = {
+    val f = readText(Paths.get(path, "_LATEST")).split(",")
+    BucketedPtr(f(0).toLong, f(1).toLong,
+      if (f.length >= 3) f(2).toLong else -1L,
+      if (f.length >= 4) f(3).toLong else 0L)
+  }
+
+  /** `<v>,<batchId>[,<schema>]`. */
+  private final case class SnapshotPtr(v: Long, batchId: Long, sm: Long)
+  private def snapshotPtr(path: String): SnapshotPtr = {
+    val f = readText(Paths.get(path, "_LATEST")).split(",")
+    SnapshotPtr(f(0).toLong, f(1).toLong,
+      if (f.length >= 3) f(2).toLong else 0L)
+  }
+
+  /** bucket → relative dir of `manifest_v<u>`; None when it is gone. */
+  private def manifest(path: String, u: Long): Option[Map[Long, String]] = {
+    val p = Paths.get(path, s"manifest_v$u")
+    if (!Files.exists(p)) None
+    else Some(readText(p).linesIterator.filter(_.nonEmpty).map { l =>
+      val i = l.indexOf(','); l.substring(0, i).toLong -> l.substring(i + 1)
+    }.toMap)
+  }
+
+  /** Committed manifest ids, ascending. */
+  private def manifestIds(path: String): Seq[Long] =
+    ls(path).filter(x => x.isFile &&
+        x.getName.startsWith("manifest_v") && !x.getName.contains(".tmp"))
+      .map(_.getName.stripPrefix("manifest_v").toLong).sorted.toSeq
+
+  private def tags(path: String): Seq[(String, Long)] =
+    ls(path).filter(x => x.isFile &&
+        x.getName.startsWith("tag_") && !x.getName.endsWith(".tmp"))
+      .map(x => x.getName.stripPrefix("tag_") -> readText(x.toPath).toLong)
+      .sortBy(_._1).toSeq
+
+  /** A schema version `sm` needs every `columns_v1..sm`. */
+  private def schemaIssues(path: String, sm: Long): Seq[String] =
+    (1L to sm).filterNot(u => Files.exists(Paths.get(path, s"columns_v$u")))
+      .map(u => s"schema side file columns_v$u missing (live schema " +
+        s"version $sm) — reads will fail; restore it")
+
   /** Auto-detect the layout from the on-disk shape and inspect. */
   def inspect(spark: SparkSession, path: String): Report = {
     val ptr = Paths.get(path, "_LATEST")
@@ -119,21 +182,13 @@ object StateInspect {
       .sortBy(_.getName).foreach(rmEntry)
     before.layout match {
       case "append" =>
-        val lines = readText(Paths.get(path, "_LATEST")).linesIterator.toSeq
-        val last = lines.head.toLong
-        def field(k: String, d: Long) = lines.collectFirst {
-          case l if l.startsWith(s"$k=") => l.stripPrefix(s"$k=").toLong
-        }.getOrElse(d)
-        val ct = field("compact", -1L)
-        val epoch = field("epoch", 0L)
-        val tomb = field("tomb", 0L)
-        val kLive = if (epoch == 0L) s"k_$ct" else s"k_${ct}_e$epoch"
+        val p = appendPtr(path)
         def residueDir(n: String): Boolean =
           (n.startsWith("b_") && {
-            val id = n.stripPrefix("b_").toLong; id <= ct || id > last
+            val id = n.stripPrefix("b_").toLong; id <= p.ct || id > p.last
           }) ||
-            (n.startsWith("k_") && n != kLive) ||
-            (n.startsWith("t_") && (tomb == 0L || n != s"t_$tomb"))
+            (n.startsWith("k_") && n != p.kLive) ||
+            (n.startsWith("t_") && (p.tomb == 0L || n != s"t_${p.tomb}"))
         ls(path).sortBy(_.getName).foreach { f =>
           val n = f.getName
           if (f.isDirectory && residueDir(n)) rmEntry(f)
@@ -144,9 +199,7 @@ object StateInspect {
         }
         tmpResidue()
       case "bucketed" =>
-        val f = readText(Paths.get(path, "_LATEST")).split(",")
-        val v = f(0).toLong
-        val sm = if (f.length >= 4) f(3).toLong else 0L
+        val BucketedPtr(v, _, _, sm) = bucketedPtr(path)
         def sideResidue(prefix: String, bound: Long): Unit = ls(path)
           .filter(x => x.isFile && x.getName.startsWith(prefix) &&
             !x.getName.contains(".tmp") &&
@@ -165,14 +218,8 @@ object StateInspect {
         // bucket dirs referenced by NO surviving manifest ≤ v: crash
         // orphans of a merge/rebucket whose pointer move never landed,
         // or data of a vacuumed version whose dir delete was killed
-        val referenced = ls(path)
-          .filter(x => x.isFile && x.getName.startsWith("manifest_v") &&
-            !x.getName.contains(".tmp") &&
-            x.getName.stripPrefix("manifest_v").toLong <= v)
-          .flatMap { mf =>
-            readText(mf.toPath).linesIterator.filter(_.nonEmpty)
-              .map(l => l.substring(l.indexOf(',') + 1))
-          }.toSet
+        val referenced = manifestIds(path).filter(_ <= v)
+          .flatMap(u => manifest(path, u).get.values).toSet
         ls(path).filter(x => x.isDirectory && x.getName.startsWith("c_"))
           .sortBy(_.getName).foreach { cd =>
             ls(cd.getPath)
@@ -186,9 +233,7 @@ object StateInspect {
           }
         tmpResidue()
       case "snapshot" =>
-        val f = readText(Paths.get(path, "_LATEST")).split(",")
-        val v = f(0).toLong
-        val sm = if (f.length >= 3) f(2).toLong else 0L
+        val SnapshotPtr(v, _, sm) = snapshotPtr(path)
         ls(path).filter(x => x.isDirectory && x.getName.startsWith("v_") &&
             x.getName.stripPrefix("v_").toLong > v)
           .sortBy(_.getName).foreach(rmEntry)
@@ -206,15 +251,8 @@ object StateInspect {
 
   def inspectAppend(spark: SparkSession, path: String): Report = {
     val issues = Seq.newBuilder[String]
-    val lines = readText(Paths.get(path, "_LATEST")).linesIterator.toSeq
-    val last = lines.head.toLong
-    def field(k: String, d: Long) = lines.collectFirst {
-      case l if l.startsWith(s"$k=") => l.stripPrefix(s"$k=").toLong
-    }.getOrElse(d)
-    val ct = field("compact", -1L)
-    val epoch = field("epoch", 0L)
-    val tomb = field("tomb", 0L)
-    val kLive = if (epoch == 0L) s"k_$ct" else s"k_${ct}_e$epoch"
+    val p @ AppendPtr(last, ct, epoch, tomb) = appendPtr(path)
+    val kLive = p.kLive
     val bDirs = dirNames(path, "b_")
     val kDirs = dirNames(path, "k_")
     val tDirs = dirNames(path, "t_")
@@ -260,19 +298,8 @@ object StateInspect {
 
   def inspectBucketed(spark: SparkSession, path: String): Report = {
     val issues = Seq.newBuilder[String]
-    val f = readText(Paths.get(path, "_LATEST")).split(",")
-    val v = f(0).toLong
-    val batchId = f(1).toLong
-    val nb = if (f.length >= 3) f(2).toLong else -1L
-    val sm = if (f.length >= 4) f(3).toLong else 0L
-    def manifest(u: Long): Option[Map[Long, String]] = {
-      val p = Paths.get(path, s"manifest_v$u")
-      if (!Files.exists(p)) None
-      else Some(readText(p).linesIterator.filter(_.nonEmpty).map { l =>
-        val i = l.indexOf(','); l.substring(0, i).toLong -> l.substring(i + 1)
-      }.toMap)
-    }
-    manifest(v) match {
+    val BucketedPtr(v, batchId, nb, sm) = bucketedPtr(path)
+    manifest(path, v) match {
       case None =>
         issues += s"live manifest_v$v missing — the table is unreadable; " +
           "restore the manifest or point the pointer at a retained version"
@@ -291,11 +318,7 @@ object StateInspect {
               "retained version"
         }
     }
-    (1L to sm).foreach { u =>
-      if (!Files.exists(Paths.get(path, s"columns_v$u")))
-        issues += s"schema side file columns_v$u missing (live schema " +
-          s"version $sm) — reads will fail; restore it"
-    }
+    issues ++= schemaIssues(path, sm)
     // live zone side file (per-bucket min/max, round-14 keyed zone
     // maps): absent = conservative scans, fine; present-but-garbled
     // crashes every range read, so it is a NAMED issue
@@ -314,21 +337,16 @@ object StateInspect {
             "without it) or restore it"
           "unparseable"
       }
-    val manifestIds = ls(path).filter(x => x.isFile &&
-        x.getName.startsWith("manifest_v") && !x.getName.contains(".tmp"))
-      .map(_.getName.stripPrefix("manifest_v").toLong).sorted.toSeq
-    val retained = manifestIds.filter(u => u <= v && manifest(u).exists(
-      _.values.toSeq.distinct.forall(rel =>
+    val retained = manifestIds(path).filter(u => u <= v &&
+      manifest(path, u).exists(_.values.toSeq.distinct.forall(rel =>
         new java.io.File(s"$path/$rel").isDirectory)))
-    val tags = ls(path).filter(x => x.isFile &&
-        x.getName.startsWith("tag_") && !x.getName.endsWith(".tmp"))
-      .map(x => x.getName.stripPrefix("tag_") -> readText(x.toPath).toLong)
-    tags.foreach { case (name, u) =>
+    val pins = tags(path)
+    pins.foreach { case (name, u) =>
       if (!retained.contains(u))
         issues += s"tag '$name' pins version $u, which is not fully " +
           "retained — the pinned read will fail; re-tag a retained version"
     }
-    val referenced = retained.flatMap(u => manifest(u).get.values).toSet
+    val referenced = retained.flatMap(u => manifest(path, u).get.values).toSet
     val allBucketDirs = dirNames(path, "c_").flatMap(cd =>
       dirNames(s"$path/$cd", "__bucket=").map(b => s"$cd/$b"))
     Report(path, "bucketed", Map(
@@ -338,8 +356,7 @@ object StateInspect {
       "schema_version" -> sm.toString,
       "retained_versions" -> retained.mkString("[", ",", "]"),
       "zone_buckets" -> zoneBuckets,
-      "tags" -> tags.sortBy(_._1)
-        .map { case (n, u) => s"$n->$u" }.mkString("[", ",", "]"),
+      "tags" -> pins.map { case (n, u) => s"$n->$u" }.mkString("[", ",", "]"),
       "unreferenced_bucket_dirs" ->
         allBucketDirs.count(!referenced.contains(_)).toString,
       "tmp_files" -> ls(path).count(x => x.isFile &&
@@ -348,24 +365,15 @@ object StateInspect {
 
   def inspectSnapshot(spark: SparkSession, path: String): Report = {
     val issues = Seq.newBuilder[String]
-    val f = readText(Paths.get(path, "_LATEST")).split(",")
-    val v = f(0).toLong
-    val batchId = f(1).toLong
-    val sm = if (f.length >= 3) f(2).toLong else 0L
+    val SnapshotPtr(v, batchId, sm) = snapshotPtr(path)
     val vDirs = dirNames(path, "v_").map(_.stripPrefix("v_").toLong)
     if (!vDirs.contains(v))
       issues += s"live snapshot v_$v missing — the table is unreadable; " +
         "restore the directory or point the pointer at a retained version"
-    (1L to sm).foreach { u =>
-      if (!Files.exists(Paths.get(path, s"columns_v$u")))
-        issues += s"schema side file columns_v$u missing (live schema " +
-          s"version $sm) — reads will fail; restore it"
-    }
+    issues ++= schemaIssues(path, sm)
     val retained = vDirs.filter(_ <= v)
-    val tags = ls(path).filter(x => x.isFile &&
-        x.getName.startsWith("tag_") && !x.getName.endsWith(".tmp"))
-      .map(x => x.getName.stripPrefix("tag_") -> readText(x.toPath).toLong)
-    tags.foreach { case (name, u) =>
+    val pins = tags(path)
+    pins.foreach { case (name, u) =>
       if (!retained.contains(u))
         issues += s"tag '$name' pins version $u, which is not retained — " +
           "the pinned read will fail; re-tag a retained version"
@@ -375,8 +383,7 @@ object StateInspect {
       "last_batch_id" -> batchId.toString,
       "schema_version" -> sm.toString,
       "retained_versions" -> retained.mkString("[", ",", "]"),
-      "tags" -> tags.sortBy(_._1)
-        .map { case (n, u) => s"$n->$u" }.mkString("[", ",", "]"),
+      "tags" -> pins.map { case (n, u) => s"$n->$u" }.mkString("[", ",", "]"),
       "orphan_future_snapshots" -> vDirs.count(_ > v).toString,
       "tmp_files" -> ls(path).count(x => x.isFile &&
         x.getName.contains(".tmp")).toString), issues.result())

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
@@ -42,6 +43,361 @@ import org.apache.spark.sql.functions._
 final class ConcurrentWriteException(msg: String)
     extends IllegalStateException(msg)
 
+/** The commit protocol all three layouts share, held by composition:
+  * the ONLY copy of the `_LATEST` read, of the tmp-write → atomic-move
+  * file write, and of the lost-update guard. A table keeps only its
+  * layout — the pointer codec (`decode`/`encode`; `tmpId` names the
+  * pointer's tmp file), its data directories and side files.
+  *
+  * Every pointer-moving operation is one [[Commit]]: orphan data
+  * (kill point `<op>.data`), side files (`<op>.<file>.tmp|move`), the
+  * guard, then the atomic pointer move (`<op>.pointer.tmp|move`).
+  * Until that move everything the op wrote is an orphan no reader
+  * sees, so a kill anywhere leaves the full pre- or post-state.
+  */
+private[streaming] final class TableCore[P](val path: String,
+    val table: String, decode: String => P, encode: P => String,
+    tmpId: P => Long) {
+
+  /** The trimmed text of root file `name`; None when absent. */
+  def text(name: String): Option[String] = {
+    val p = Paths.get(path, name)
+    if (!Files.exists(p)) None
+    else Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim)
+  }
+
+  /** The live pointer; None before the first commit. */
+  def pointer(): Option[P] = text("_LATEST").map(decode)
+
+  /** Land `body` as `name` via `<name>.tmp` and one atomic move —
+    * visible whole or not at all; kill points `<label>.tmp|move`.
+    */
+  def writeSide(name: String, body: String, label: String): Unit =
+    atomicWrite(name, s"$name.tmp", body, label)
+
+  private def atomicWrite(name: String, tmp: String, body: String,
+      label: String): Unit = {
+    Files.createDirectories(Paths.get(path))
+    Failpoints.step(s"$label.tmp")
+    Files.write(Paths.get(path, tmp), body.getBytes(StandardCharsets.UTF_8))
+    Failpoints.step(s"$label.move")
+    Files.move(Paths.get(path, tmp), Paths.get(path, name),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  private def writePointer(p: P, op: String): Unit =
+    atomicWrite("_LATEST", s"_LATEST.tmp.${tmpId(p)}", encode(p),
+      s"$op.pointer")
+
+  /** Lost-update detection ([[ConcurrentWriteException]]): fail NAMED
+    * when the pointer moved since `expected` was read at op entry.
+    * `torn` decides whether the competing writer claimed the very
+    * version/file NAME this op writes: its contents are then
+    * undefined, nothing is touched and the message says restore.
+    * Otherwise the abort is clean. Once `written`, this op's
+    * `orphans` are referenced by nobody and are removed. Before the
+    * write nothing is deleted: those names can only hold another
+    * in-flight writer's data, and deleting it would be the very
+    * clobber the guard exists to prevent.
+    */
+  private def guardUnmoved(expected: Option[P], op: String,
+      orphans: Seq[String], written: Boolean)(torn: P => Boolean): Unit = {
+    val now = pointer()
+    if (now == expected) return
+    if (now.exists(torn))
+      throw new ConcurrentWriteException(
+        s"$table.$op: another writer claimed '${orphans.head}' at $path " +
+          s"while this operation was writing it (pointer $expected → " +
+          s"$now) — its contents are undefined; the tables are " +
+          "single-writer by contract, restore from a retained version")
+    if (written) orphans.foreach(n =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new File(s"$path/$n")))
+    throw new ConcurrentWriteException(
+      s"$table.$op: the pointer at $path moved $expected → $now " +
+        "while the operation was in flight — another writer is active; " +
+        (if (written) "this operation aborted cleanly (its orphans removed)"
+        else "this operation aborted cleanly before writing anything") +
+        ", retry it; the tables are single-writer by contract")
+  }
+
+  /** One pointer-moving operation `op` against the pointer `expected`
+    * read at its entry; `orphans` are the names it writes (the first
+    * is the one a competing writer can claim) and `torn` recognises
+    * that claim in a moved pointer.
+    */
+  final class Commit(expected: Option[P], op: String,
+      orphans: Seq[String], torn: P => Boolean) {
+    /** Kill point `<op>.data`, the guard, then the data write. */
+    def data(write: => Unit): Unit = {
+      Failpoints.step(s"$op.data")
+      guardUnmoved(expected, op, orphans, written = false)(torn)
+      write
+    }
+    /** Side file `name`, kill points `<op>.<kind>.tmp|move`. */
+    def side(name: String, kind: String, body: String): Unit =
+      writeSide(name, body, s"$op.$kind")
+    /** The guard (removing the orphans on a clean abort), then the one
+      * atomic pointer move that makes the op visible.
+      */
+    def flip(next: P): Unit = {
+      guardUnmoved(expected, op, orphans, written = true)(torn)
+      writePointer(next, op)
+    }
+  }
+
+  def begin(expected: Option[P], op: String, orphans: String*)(
+      torn: P => Boolean): Commit = new Commit(expected, op, orphans, torn)
+
+  /** Entries of `dir` (the table root by default); empty if absent. */
+  def ls(dir: String = path): Seq[File] =
+    Option(new File(dir).listFiles()).fold(Seq.empty[File])(_.toSeq)
+
+  /** `<prefix><id>` directories — or committed (non-tmp) files — of
+    * `dir`, by id.
+    */
+  def numbered(prefix: String, dirs: Boolean = true,
+      dir: String = path): Seq[(Long, File)] =
+    ls(dir).filter(f => f.getName.startsWith(prefix) &&
+        (if (dirs) f.isDirectory
+        else f.isFile && !f.getName.contains(".tmp")))
+      .map(f => f.getName.stripPrefix(prefix).toLong -> f).sortBy(_._1)
+
+  /** Kill point `label`, then delete `f`. */
+  def remove(f: File, label: String): Unit = {
+    Failpoints.step(label)
+    org.apache.commons.io.FileUtils.deleteQuietly(f)
+  }
+}
+
+/** What the two VERSIONED layouts ([[SnapshotTable]],
+  * [[BucketedTable]]) share above the core: the (version, batch id,
+  * schema version) view of their pointers, additive migration, tags
+  * and the range check of a historical read. Each layout supplies its
+  * own retention rule (`requireRetained`).
+  */
+private[streaming] abstract class VersionedTable[P](spark: SparkSession) {
+  protected val core: TableCore[P]
+  /** (version, last committed batch id, schema version) of `p`. */
+  protected def fields(p: P): (Long, Long, Long)
+  protected def withSchema(p: P, m: Long): P
+  /** Fails NAMED unless `version` is still retained whole. */
+  protected def requireRetained(version: Long, op: String): Unit
+
+  protected def pointer(): Option[P] = core.pointer()
+
+  /** (version, last committed streaming batch id). */
+  def latest: Option[(Long, Long)] =
+    pointer().map(fields).map { case (v, b, _) => (v, b) }
+
+  def lastBatchId: Long = latest.map(_._2).getOrElse(-1L)
+
+  /** Live schema version — 0 until an [[addColumn]] commits one. */
+  def schemaVersion: Long = pointer().map(fields(_)._3).getOrElse(0L)
+
+  /** ADDITIVE migration: declare `name` with a non-null SQL-literal
+    * default — NO data rewrite; history reads through the new schema
+    * (a snapshot reads through the default until the next commit
+    * lands one carrying the column; a bucketed table's next MERGE
+    * writes it). Crash shape: the schema side file lands as an orphan
+    * (tmp + move), then the schema version flips in ONE atomic
+    * pointer move; a kill anywhere leaves readers on a consistent
+    * schema and re-invoking converges (StateCrashSpec sweeps the
+    * boundaries). Idempotent per column name. Requires a committed
+    * table (a fresh table has no pointer to flip — create it with the
+    * column in the first commit instead).
+    */
+  def addColumn(name: String, dataType: String, defaultSql: String): Unit = {
+    val entry = pointer()
+    val p = entry.getOrElse(throw new IllegalStateException(
+      s"${core.table}.addColumn($name): migrate after the first commit " +
+        s"— ${core.path} has none"))
+    val m = fields(p)._3
+    val cols = TableSchema.read(core.path, m)
+    if (cols.exists(_.name == name)) return // idempotent
+    TableSchema.validate(spark, name, dataType, defaultSql)
+    // torn iff a competing migration claimed schema version m+1 (the
+    // side-file name this op writes); a data commit in between is a
+    // clean abort (columns_v<m+1> is referenced by no pointer)
+    val c = core.begin(entry, "migrate", s"columns_v${m + 1}")(
+      fields(_)._3 >= m + 1)
+    c.side(s"columns_v${m + 1}", "schema", TableSchema.render(
+      cols :+ TableSchema.AddedColumn(name, dataType, defaultSql)))
+    c.flip(withSchema(p, m + 1))
+  }
+
+  /** The range check every historical read shares: fails NAMED when
+    * nothing is committed or `version` lies outside [0, live].
+    */
+  protected def requireInRange(version: Long, op: String): Unit = {
+    val live = latest.map(_._1).getOrElse(throw new IllegalStateException(
+      s"${core.table}.$op($version): ${core.path} has no committed version"))
+    require(version >= 0 && version <= live,
+      s"${core.table}.$op($version): version out of range [0, $live]")
+  }
+
+  /** Named tag pinning `version` against `vacuum` — the
+    * reproducible-training-set reference ("the 2024-08 snapshot"): a
+    * tagged version is retained regardless of the horizon, so a
+    * training run that recorded a tag re-reads its exact inputs months
+    * later while ordinary history is collected on cadence. Side file
+    * `tag_<name>` holding the version id; re-tagging a name moves it;
+    * only a currently-retained version can be pinned (named check).
+    */
+  def tag(name: String, version: Long): Unit = {
+    requireRetained(version, "tag")
+    require(name.nonEmpty &&
+      name.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
+      s"tag name must be [A-Za-z0-9_-]+: '$name'")
+    core.writeSide(s"tag_$name", version.toString, "tag")
+  }
+
+  /** Every tag → pinned version. */
+  def tags: Map[String, Long] =
+    core.ls().filter(_.isFile).map(_.getName)
+      .filter(n => n.startsWith("tag_") && !n.endsWith(".tmp"))
+      .flatMap(n => core.text(n).map(n.stripPrefix("tag_") -> _.toLong))
+      .toMap
+
+  /** Release a tag; the next `vacuum` may collect the version. */
+  def untag(name: String): Unit = {
+    val f = new File(s"${core.path}/tag_$name")
+    if (f.exists) core.remove(f, s"untag.$name")
+  }
+
+  /** (live version, oldest version the last `keepVersions` retain,
+    * tagged versions) — the horizon both vacuums collect below.
+    */
+  protected def vacuumHorizon(
+      keepVersions: Int): Option[(Long, Long, Set[Long])] = {
+    require(keepVersions >= 1, s"keepVersions must be ≥ 1: $keepVersions")
+    latest.map { case (v, _) =>
+      (v, math.max(0L, v - keepVersions + 1), tags.values.toSet)
+    }
+  }
+}
+
+/** Minimal Delta-style table: versioned parquet snapshots + an
+  * atomically-replaced pointer file recording (version, batchId).
+  * `commit` is IDEMPOTENT per streaming batch — replaying a batch whose
+  * id is already committed is a no-op, which together with Structured
+  * Streaming's checkpointed offsets gives exactly-once table contents
+  * over restarts (the same txn-log idea Delta/Iceberg implement; at
+  * cluster scale swap this class for a real lakehouse MERGE, the sink
+  * code above it is unchanged).
+  *
+  * Pointer `<version>,<batchId>,<schema version>`; two-field pointers
+  * predate schema evolution (schema version 0, see [[TableSchema]]).
+  */
+final class SnapshotTable(spark: SparkSession, path: String)
+    extends VersionedTable[(Long, Long, Long)](spark) {
+
+  protected val core = new TableCore[(Long, Long, Long)](path,
+    "SnapshotTable", { body =>
+      val f = body.split(",")
+      (f(0).toLong, f(1).toLong, if (f.length >= 3) f(2).toLong else 0L)
+    }, { case (v, b, m) => s"$v,$b,$m" }, _._2)
+  protected def fields(p: (Long, Long, Long)) = p
+  protected def withSchema(p: (Long, Long, Long), m: Long) = p.copy(_3 = m)
+  protected def requireRetained(version: Long, op: String): Unit = {
+    requireInRange(version, op)
+    if (!new File(s"$path/v_$version").isDirectory)
+      throw new IllegalStateException(
+        s"SnapshotTable.$op($version): v_$version is gone — the " +
+          "version was vacuumed; raise the keepVersions horizon to " +
+          "read further back")
+  }
+
+  def read(): Option[DataFrame] = pointer().map { case (v, _, m) =>
+    val base = spark.read.parquet(s"$path/v_$v")
+    TableSchema.applyTo(base, TableSchema.read(path, m))
+  }
+
+  /** Land `df` as snapshot `v`: orphan first, then the pointer. */
+  private def land(entry: Option[(Long, Long, Long)], op: String, v: Long,
+      df: DataFrame, batchId: Long, m: Long): Unit = {
+    val c = core.begin(entry, op, s"v_$v")(_._1 >= v)
+    c.data(df.write.mode(SaveMode.Overwrite).parquet(s"$path/v_$v"))
+    c.flip((v, batchId, m))
+  }
+
+  /** Write a full new snapshot unless `batchId` already committed. */
+  def commit(df: DataFrame, batchId: Long): Unit = {
+    if (lastBatchId >= batchId) return // replayed batch → no-op
+    val p = pointer()
+    land(p, "snapshot", p.map(_._1 + 1).getOrElse(0L), df, batchId,
+      p.map(_._3).getOrElse(0L))
+  }
+
+  /** Snapshot versions still on disk — every commit IS a full
+    * snapshot, so each retained version is independently readable;
+    * [[vacuum]] trims the horizon (without it a per-batch committer
+    * like the outbox leaks one snapshot directory per batch forever).
+    */
+  def versions: Seq[Long] = latest match {
+    case None => Seq.empty
+    // list once, O(live snapshots) — a per-batch committer's id
+    // space grows forever, so never probe per historical id
+    case Some((v, _)) => core.numbered("v_").map(_._1).filter(_ <= v)
+  }
+
+  /** Time travel, the [[BucketedTable.readAt]] contract on the
+    * snapshot layout: the snapshot AS OF `version`, read through the
+    * LIVE schema; fails NAMED when out of range or vacuumed.
+    */
+  def readAt(version: Long): Option[DataFrame] = {
+    requireRetained(version, "readAt")
+    Some(TableSchema.applyTo(spark.read.parquet(s"$path/v_$version"),
+      TableSchema.read(path, schemaVersion)))
+  }
+
+  /** RESTORE, the [[BucketedTable.restore]] contract on the snapshot
+    * layout: copy the retained snapshot forward as a NEW version (the
+    * bad version stays readable evidence; the batch gate does not
+    * move). The raw files are copied — [[read]] applies the live
+    * schema's defaults at read time exactly as it does for any
+    * pre-migration snapshot.
+    */
+  def restore(version: Long): Unit = {
+    val entry = pointer()
+    entry.foreach { case (v, batchId, m) =>
+      if (version == v) return
+      requireRetained(version, "restore")
+      land(entry, "restore", v + 1,
+        spark.read.parquet(s"$path/v_$version"), batchId, m)
+    }
+  }
+
+  /** Change feed between two retained snapshots, keyed by `keyCol`
+    * (a parameter — the snapshot layout is schema-agnostic): the
+    * shared [[StateDiff]] classification over both snapshots read
+    * WHOLE. The layout rewrites every commit, so there is nothing to
+    * prune — cost is both snapshots; use the bucketed store when
+    * feed cost must be ∝ delta.
+    */
+  def changesBetween(vFrom: Long, vTo: Long, keyCol: String): DataFrame = {
+    require(vFrom <= vTo,
+      s"SnapshotTable.changesBetween($vFrom, $vTo): vFrom must be ≤ vTo")
+    val f = readAt(vFrom)
+    val t = readAt(vTo)
+    StateDiff.classify(f, t, keyCol, t.orElse(f).get)
+  }
+
+  /** Delete every snapshot older than the last `keepVersions` (tagged
+    * snapshots retained regardless) — no pointer write, retained
+    * reads total at every kill boundary, a vacuumed version fails
+    * [[readAt]] NAMED. The GC the per-batch outbox committer needs
+    * to not leak one directory per batch.
+    */
+  def vacuum(keepVersions: Int): Unit =
+    vacuumHorizon(keepVersions).foreach { case (_, retainFrom, tagged) =>
+      // list once: the delete set is O(what exists), not O(lifetime
+      // batch count) — this runs on the sink's maintenance tick
+      core.numbered("v_")
+        .filter { case (u, _) => u < retainFrom && !tagged.contains(u) }
+        .foreach { case (u, f) => core.remove(f, s"vacuum.dir.v_$u") }
+    }
+}
+
 /** Append-only table: each commit lands ONE new directory `b_<batchId>`
   * holding only that batch's rows; a read unions every committed
   * directory. Crash between the data write and the pointer move leaves
@@ -64,8 +420,8 @@ final class ConcurrentWriteException(msg: String)
   * the operator chooses — [[IngestStream.MaintainConfig.compactEvery]]
   * wires that cadence into the production loop, and [[readFanIn]]
   * exposes the unioned-directory count the cadence bounds.
-  */
-/** @param statsCol when set, every committed directory carries a
+  *
+  * @param statsCol when set, every committed directory carries a
   *   min/max zone map of this LongType column (one ∝-batch aggregate
   *   at append time, folded on compaction), and [[AppendTable
   *   .readRange]] prunes directories whose zone is disjoint from the
@@ -79,11 +435,11 @@ final class ConcurrentWriteException(msg: String)
 final class AppendTable(spark: SparkSession, path: String,
     statsCol: Option[String] = None) {
 
-  private val ptrPath = Paths.get(path, "_LATEST")
-
-  /** (last committed batch id, compacted-through id or −1, delete
-    * epoch, tombstone generation). The epoch names the consolidated
-    * directory a [[deleteKeys]] produced — each delete bumps it, so a
+  /** Pointer (last committed batch id, compacted-through id or −1,
+    * delete epoch, tombstone generation): the first line, then
+    * `compact=`, `epoch=` and `tomb=` lines where set. The epoch
+    * names the consolidated directory a [[deleteKeys]] produced —
+    * each delete bumps it, so a
     * re-delete at the same batch id never overwrites a LIVE
     * consolidated dir in place (the new dir is an orphan until the
     * pointer names it, exactly the compact crash shape). The
@@ -93,17 +449,26 @@ final class AppendTable(spark: SparkSession, path: String,
     * delete) folds it into the data and resets it to 0 — the physical
     * erasure moment. Two-line pointers predate both (back-compat).
     */
-  private def pointer(): (Long, Long, Long, Long) =
-    if (!Files.exists(ptrPath)) (-1L, -1L, 0L, 0L)
-    else {
-      val lines = new String(Files.readAllBytes(ptrPath),
-        StandardCharsets.UTF_8).trim.linesIterator.toSeq
-      val last = lines.head.toLong
+  private val core = new TableCore[(Long, Long, Long, Long)](path,
+    "AppendTable", { body =>
+      val lines = body.linesIterator.toSeq
       def field(k: String, dflt: Long) = lines.collectFirst {
         case l if l.startsWith(s"$k=") => l.stripPrefix(s"$k=").toLong
       }.getOrElse(dflt)
-      (last, field("compact", -1L), field("epoch", 0L), field("tomb", 0L))
-    }
+      (lines.head.toLong, field("compact", -1L), field("epoch", 0L),
+        field("tomb", 0L))
+    }, { case (last, compactedThrough, epoch, tomb) =>
+      (last.toString +: Seq(
+        (compactedThrough >= 0, s"compact=$compactedThrough"),
+        (epoch != 0L, s"epoch=$epoch"),
+        (tomb != 0L, s"tomb=$tomb")).collect { case (true, l) => l })
+        .mkString("\n")
+    }, _._1)
+
+  private val Uncommitted = (-1L, -1L, 0L, 0L)
+
+  private def pointer(): (Long, Long, Long, Long) =
+    core.pointer().getOrElse(Uncommitted)
 
   /** Consolidated-dir name for (compacted-through, epoch): the
     * pre-delete name `k_<ct>` at epoch 0 keeps every existing table
@@ -111,22 +476,6 @@ final class AppendTable(spark: SparkSession, path: String,
     */
   private def kName(ct: Long, epoch: Long): String =
     if (epoch == 0L) s"k_$ct" else s"k_${ct}_e$epoch"
-
-  private def writePointer(last: Long, compactedThrough: Long,
-      epoch: Long, tomb: Long, op: String): Unit = {
-    val fields = Seq(
-      (compactedThrough >= 0, s"compact=$compactedThrough"),
-      (epoch != 0L, s"epoch=$epoch"),
-      (tomb != 0L, s"tomb=$tomb")).collect { case (true, l) => l }
-    val body = (last.toString +: fields).mkString("\n")
-    val tmp = Paths.get(path, s"_LATEST.tmp.$last")
-    Files.createDirectories(Paths.get(path))
-    Failpoints.step(s"$op.pointer.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Failpoints.step(s"$op.pointer.move")
-    Files.move(tmp, ptrPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
 
   /** The live deletion-vector frame — (key, `tomb_upto`) where
     * `tomb_upto` is the last batch id COMMITTED when that key's
@@ -155,7 +504,7 @@ final class AppendTable(spark: SparkSession, path: String,
     * the consolidated dir.
     */
   private def dirUptoId(dir: String): Long = {
-    val n = new java.io.File(dir).getName
+    val n = new File(dir).getName
     if (n.startsWith("b_")) n.stripPrefix("b_").toLong
     else n.stripPrefix("k_").split("_e", 2)(0).toLong
   }
@@ -191,40 +540,32 @@ final class AppendTable(spark: SparkSession, path: String,
     */
   def compactedThrough: Long = pointer()._2
 
-  /** Committed data dirs: the consolidated dir (if any) + batch dirs
-    * appended after it, up to the pointer. Stale pre-compaction batch
-    * dirs (a crash between the pointer move and their deletion) are
-    * EXCLUDED by the `> ct` filter — their rows live in `k_<ct>`.
-    */
   /** Batch directories with id in (above, last] — the shared listing
     * behind both the committed read (above = compacted-through) and
     * the change feed (above = the reader's position).
     */
   private def batchDirsAbove(above: Long, last: Long): Seq[String] =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("b_"))
-      .map(f => (f.getName.stripPrefix("b_").toLong, f.getAbsolutePath))
-      .filter { case (id, _) => id > above && id <= last }
-      .sortBy(_._1)
-      .map(_._2)
-      .toSeq
+    core.numbered("b_")
+      .collect { case (id, f) if id > above && id <= last => f.getAbsolutePath }
 
-  /** Committed data dirs AS OF one pointer read — every reader takes
-    * the (dirs, tombstone generation) pair from the SAME read, so a
-    * concurrent maintenance fold can never pair a pre-fold dir list
-    * with a post-fold (cleared) vector and silently serve
-    * redaction-pending rows.
+  /** Committed data dirs: the consolidated dir (if any) + batch dirs
+    * appended after it, up to the pointer. Stale pre-compaction batch
+    * dirs (a crash between the pointer move and their deletion) are
+    * EXCLUDED by the `> ct` filter — their rows live in `k_<ct>`.
+    * Taken AS OF one pointer read — every reader takes the (dirs,
+    * tombstone generation) pair from the SAME read, so a concurrent
+    * maintenance fold can never pair a pre-fold dir list with a
+    * post-fold (cleared) vector and silently serve redaction-pending
+    * rows.
     */
   private def committedDirsFor(p: (Long, Long, Long, Long)): Seq[String] = {
     val (last, ct, e, _) = p
     val compacted =
-      if (ct >= 0 && new java.io.File(s"$path/${kName(ct, e)}").isDirectory)
+      if (ct >= 0 && new File(s"$path/${kName(ct, e)}").isDirectory)
         Seq(s"$path/${kName(ct, e)}")
       else Seq.empty
     compacted ++ batchDirsAbove(ct, last)
   }
-
-  private def committedDirs(): Seq[String] = committedDirsFor(pointer())
 
   /** Directories a `read()` would union right now — the small-files
     * read-amplification a compaction cadence must bound. With
@@ -232,7 +573,7 @@ final class AppendTable(spark: SparkSession, path: String,
     * (consolidated dir + the batches appended since), which
     * IngestStreamSpec asserts against the wired loop.
     */
-  def readFanIn: Int = committedDirs().size
+  def readFanIn: Int = committedDirsFor(pointer()).size
 
   def read(): Option[DataFrame] = {
     val p = pointer() // ONE read: dirs and vector from the same state
@@ -241,41 +582,37 @@ final class AppendTable(spark: SparkSession, path: String,
     else Some(scopedRead(dirs, p._4))
   }
 
-  /** Write dir's zone map as a side file (tmp + atomic move — an
-    * orphan until the pointer names the dir, the same two-step shape
-    * as every other mutation). The aggregate reads the just-written
-    * directory back, so the zone is exact for the bytes on disk and
-    * never re-executes an expensive upstream plan.
+  /** A commit writing data dir `dir`: its zone rides with it. */
+  private def begin(entry: Option[(Long, Long, Long, Long)], op: String,
+      dir: String)(torn: ((Long, Long, Long, Long)) => Boolean) =
+    core.begin(entry, op, dir, s"$dir.zone")(torn)
+
+  /** The orphan data dir `dir` of commit `c`, then its zone map as a
+    * side file when the table keeps stats. The aggregate reads the
+    * just-written directory back, so the zone is exact for the bytes
+    * on disk and never re-executes an expensive upstream plan.
     */
-  private def writeZone(dir: String, c: String, op: String): Unit = {
-    val row = spark.read.parquet(s"$path/$dir")
-      .agg(min(col(c)).cast("long"), max(col(c)).cast("long")).head()
-    val body =
-      if (row.isNullAt(0)) "empty" else s"${row.getLong(0)},${row.getLong(1)}"
-    val tmp = Paths.get(path, s"$dir.zone.tmp")
-    Failpoints.step(s"$op.zone.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Failpoints.step(s"$op.zone.move")
-    Files.move(tmp, Paths.get(path, s"$dir.zone"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  private def writeDir(c: core.Commit, dir: String, df: DataFrame): Unit = {
+    c.data(df.write.mode(SaveMode.Overwrite).parquet(s"$path/$dir"))
+    statsCol.foreach { sc =>
+      val row = spark.read.parquet(s"$path/$dir")
+        .agg(min(col(sc)).cast("long"), max(col(sc)).cast("long")).head()
+      c.side(s"$dir.zone", "zone", if (row.isNullAt(0)) "empty"
+        else s"${row.getLong(0)},${row.getLong(1)}")
+    }
   }
 
   /** Outer None: no zone file — scan conservatively. Inner None: the
     * directory committed empty — nothing to read.
     */
-  private def zone(dir: String): Option[Option[(Long, Long)]] = {
-    val p = Paths.get(path, s"$dir.zone")
-    if (!Files.exists(p)) None
-    else {
-      val body = new String(Files.readAllBytes(p),
-        StandardCharsets.UTF_8).trim
-      if (body == "empty") Some(None)
+  private def zone(dir: String): Option[Option[(Long, Long)]] =
+    core.text(s"$dir.zone").map { body =>
+      if (body == "empty") None
       else {
         val Array(lo, hi) = body.split(",", 2)
-        Some(Some((lo.toLong, hi.toLong)))
+        Some((lo.toLong, hi.toLong))
       }
     }
-  }
 
   /** The committed directories a [[readRange]] must open: zones
     * disjoint from [lo, hi] are pruned before any parquet footer is
@@ -288,7 +625,7 @@ final class AppendTable(spark: SparkSession, path: String,
   private def rangeDirsFor(p: (Long, Long, Long, Long), lo: Long,
       hi: Long): Seq[String] =
     committedDirsFor(p).filter { d =>
-      zone(new java.io.File(d).getName) match {
+      zone(new File(d).getName) match {
         case None => true // no zone recorded: scan conservatively
         case Some(None) => false // committed empty: nothing inside
         case Some(Some((zl, zh))) => zh >= lo && zl <= hi
@@ -311,51 +648,11 @@ final class AppendTable(spark: SparkSession, path: String,
     else Some(scopedRead(dirs, p._4).filter(col(c) >= lo && col(c) <= hi))
   }
 
-  /** Lost-update detection ([[ConcurrentWriteException]]): fail NAMED
-    * when the pointer moved since `expected` was read at op entry.
-    * When another writer claimed the very directory this op was
-    * writing (`tornIf`), its contents are undefined — nothing is
-    * cleaned and the message says restore; otherwise the op's orphan
-    * is referenced by nobody, so it is removed (`cleanup = true`,
-    * the POST-write check) and the op aborts cleanly retryable. The
-    * PRE-write check passes `cleanup = false`: this op has written
-    * nothing yet, so `$path/$newDir` can only be another in-flight
-    * writer's data — deleting it there would be the exact clobber
-    * the guard exists to prevent (SnapshotTable.commit's pre-check
-    * makes the same distinction).
-    */
-  private def guardUnmoved(expected: (Long, Long, Long, Long),
-      newDir: String,
-      tornIf: ((Long, Long, Long, Long)) => Boolean, op: String,
-      cleanup: Boolean): Unit = {
-    val now = pointer()
-    if (now == expected) return
-    if (tornIf(now))
-      throw new ConcurrentWriteException(
-        s"AppendTable.$op: another writer claimed '$newDir' at $path " +
-          s"while this operation was writing it (pointer $expected → " +
-          s"$now) — its contents are undefined; the tables are " +
-          "single-writer by contract, restore from a retained state")
-    if (cleanup) {
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$path/$newDir"))
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$path/$newDir.zone"))
-    }
-    throw new ConcurrentWriteException(
-      s"AppendTable.$op: the pointer at $path moved $expected → $now " +
-        "while the operation was in flight — another writer is active; " +
-        (if (cleanup) "this operation aborted cleanly (its orphan removed)"
-        else "this operation aborted cleanly before writing anything") +
-        ", retry it; the tables are single-writer by contract")
-  }
-
   /** Append `df` as batch `batchId`; replayed ids are a no-op. */
   def append(df: DataFrame, batchId: Long): Unit = {
-    val entry = pointer()
-    val (last, ct, e, tomb) = entry
+    val entry = core.pointer()
+    val (last, ct, e, tomb) = entry.getOrElse(Uncommitted)
     if (last >= batchId) return
-    Failpoints.step("append.data")
     // torn iff the competing writer's pointer reached (or passed) THIS
     // batch id: at that point b_<batchId> is pointer-VISIBLE — either
     // the other writer wrote it too (shared name) or our orphan now
@@ -364,13 +661,9 @@ final class AppendTable(spark: SparkSession, path: String,
     // only when their pointer is still BELOW our id. Checked before
     // AND after the write: the pre-check avoids clobbering a competing
     // claim at all, the post-check closes the window the write opens.
-    guardUnmoved(entry, s"b_$batchId", _._1 >= batchId, "append",
-      cleanup = false)
-    df.write.mode(SaveMode.Overwrite).parquet(s"$path/b_$batchId")
-    statsCol.foreach(c => writeZone(s"b_$batchId", c, "append"))
-    guardUnmoved(entry, s"b_$batchId", _._1 >= batchId, "append",
-      cleanup = true)
-    writePointer(batchId, ct, e, tomb, "append")
+    val c = begin(entry, "append", s"b_$batchId")(_._1 >= batchId)
+    writeDir(c, s"b_$batchId", df)
+    c.flip((batchId, ct, e, tomb))
   }
 
   /** The append log IS a change feed: rows appended after
@@ -406,33 +699,26 @@ final class AppendTable(spark: SparkSession, path: String,
     * never referenced). Idempotent when already compacted to `last`.
     */
   def compact(): Unit = {
-    val entry = pointer()
-    val (last, ct, e, tomb) = entry
+    val entry = core.pointer()
+    val (last, ct, e, tomb) = entry.getOrElse(Uncommitted)
     if (last < 0 || (ct == last && tomb == 0L)) return
-    val dirs = committedDirs()
+    val dirs = committedDirsFor((last, ct, e, tomb))
     if (dirs.isEmpty) return
     // folding a live deletion vector rewrites the consolidated dir in
     // place when ct == last — bump the epoch so the fold lands as an
     // orphan first, the same never-overwrite-a-live-dir rule as delete
     val e2 = if (ct == last && tomb != 0L) e + 1 else e
-    Failpoints.step("compact.data")
+    val k2 = kName(last, e2)
     // torn iff a competing consolidation claimed the same dir name
-    guardUnmoved(entry, kName(last, e2),
-      n => kName(n._2, n._3) == kName(last, e2), "compact",
-      cleanup = false)
+    val c = begin(entry, "compact", k2)(n => kName(n._2, n._3) == k2)
     // the tombstone-applied view: compaction IS the physical-erasure
     // moment for vectored deletes — the folded dir holds survivors
     // only (per-key scope respected: a re-delivered row appended
     // after its tombstone survives the fold), and the pointer resets
     // the tombstone generation
-    scopedRead(dirs, tomb)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/${kName(last, e2)}")
-    statsCol.foreach(c => writeZone(kName(last, e2), c, "compact"))
-    guardUnmoved(entry, kName(last, e2),
-      n => kName(n._2, n._3) == kName(last, e2), "compact",
-      cleanup = true)
-    writePointer(last, last, e2, 0L, "compact")
-    cleanupStale(last, kName(last, e2), "compact")
+    writeDir(c, k2, scopedRead(dirs, tomb))
+    c.flip((last, last, e2, 0L))
+    cleanupStale(last, k2, "compact")
   }
 
   /** Best-effort collection of directories the pointer no longer
@@ -440,22 +726,17 @@ final class AppendTable(spark: SparkSession, path: String,
     * re-collected by the next compact/delete. Zone side files ride
     * with their directory: stale dir ⇒ stale zone.
     */
-  private def cleanupStale(last: Long, liveK: String, op: String,
-      liveT: String = ""): Unit = {
+  private def cleanupStale(last: Long, liveK: String, op: String): Unit = {
+    // a consolidation folds the deletion vector: no t_ dir stays live
     def staleName(n: String): Boolean =
       (n.startsWith("b_") && n.stripPrefix("b_").toLong <= last) ||
-        (n.startsWith("k_") && n != liveK) ||
-        (n.startsWith("t_") && n != liveT)
-    val d = new java.io.File(path)
-    Option(d.listFiles()).getOrElse(Array.empty).foreach { f =>
+        (n.startsWith("k_") && n != liveK) || n.startsWith("t_")
+    core.ls().foreach { f =>
       val n = f.getName
       val stale =
         if (f.isDirectory) staleName(n)
         else n.endsWith(".zone") && staleName(n.stripSuffix(".zone"))
-      if (stale) {
-        Failpoints.step(s"$op.clean.$n")
-        org.apache.commons.io.FileUtils.deleteQuietly(f)
-      }
+      if (stale) core.remove(f, s"$op.clean.$n")
     }
   }
 
@@ -479,10 +760,10 @@ final class AppendTable(spark: SparkSession, path: String,
     * batch's key set. No-op on a never-written or empty table.
     */
   def deleteKeys(keys: DataFrame, keyCol: String): Unit = {
-    val entry = pointer()
-    val (last, _, e, tomb) = entry
+    val entry = core.pointer()
+    val (last, ct, e, tomb) = entry.getOrElse(Uncommitted)
     if (last < 0) return
-    val dirs = committedDirs()
+    val dirs = committedDirsFor((last, ct, e, tomb))
     if (dirs.isEmpty) return
     val keySet = keys.select(col(keyCol)).distinct().localCheckpoint()
     // consolidate the LIVE view minus the keys: a pending deletion
@@ -490,14 +771,9 @@ final class AppendTable(spark: SparkSession, path: String,
     val survivors = scopedRead(dirs, tomb)
       .join(broadcast(keySet), Seq(keyCol), "left_anti")
     val k2 = kName(last, e + 1)
-    Failpoints.step("delete.data")
-    guardUnmoved(entry, k2, n => kName(n._2, n._3) == k2, "delete",
-      cleanup = false)
-    survivors.write.mode(SaveMode.Overwrite).parquet(s"$path/$k2")
-    statsCol.foreach(c => writeZone(k2, c, "delete"))
-    guardUnmoved(entry, k2, n => kName(n._2, n._3) == k2, "delete",
-      cleanup = true)
-    writePointer(last, last, e + 1, 0L, "delete")
+    val c = begin(entry, "delete", k2)(n => kName(n._2, n._3) == k2)
+    writeDir(c, k2, survivors)
+    c.flip((last, last, e + 1, 0L))
     cleanupStale(last, k2, "delete")
   }
 
@@ -524,8 +800,8 @@ final class AppendTable(spark: SparkSession, path: String,
     * Re-deleting a key widens its scope to the new bound (max-merge).
     */
   def deleteKeysVectored(keys: DataFrame, keyCol: String): Unit = {
-    val entry = pointer()
-    val (last, ct, e, tomb) = entry
+    val entry = core.pointer()
+    val (last, ct, e, tomb) = entry.getOrElse(Uncommitted)
     if (last < 0) return
     require(keyCol != "tomb_upto",
       "AppendTable.deleteKeysVectored: the key column may not be named " +
@@ -542,22 +818,13 @@ final class AppendTable(spark: SparkSession, path: String,
       case None => keySet
     }
     val t2 = s"t_${tomb + 1}"
-    Failpoints.step("vdelete.data")
-    guardUnmoved(entry, t2, n => s"t_${n._4}" == t2, "vdelete",
-      cleanup = false)
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$path/$t2")
-    guardUnmoved(entry, t2, n => s"t_${n._4}" == t2, "vdelete",
-      cleanup = true)
-    writePointer(last, ct, e, tomb + 1, "vdelete")
+    val c = begin(entry, "vdelete", t2)(n => s"t_${n._4}" == t2)
+    c.data(merged.write.mode(SaveMode.Overwrite).parquet(s"$path/$t2"))
+    c.flip((last, ct, e, tomb + 1))
     // only stale tombstone generations are collected — the data dirs
     // are all still live (nothing was consolidated)
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("t_") &&
-        f.getName != t2)
-      .foreach { f =>
-        Failpoints.step(s"vdelete.clean.${f.getName}")
-        org.apache.commons.io.FileUtils.deleteQuietly(f)
-      }
+    core.numbered("t_").filter(_._1 != tomb + 1)
+      .foreach { case (_, f) => core.remove(f, s"vdelete.clean.${f.getName}") }
   }
 }
 
@@ -585,7 +852,10 @@ private[streaming] object TableSchema {
   final case class AddedColumn(name: String, dataType: String,
       default: String)
 
-  private def render(cols: Seq[AddedColumn]): String =
+  /** The `columns_v<m>` side-file body: one `name|type|default` line
+    * per declared column.
+    */
+  def render(cols: Seq[AddedColumn]): String =
     cols.map(c => s"${c.name}|${c.dataType}|${c.default}").mkString("\n")
 
   private def parse(body: String): Seq[AddedColumn] =
@@ -600,21 +870,6 @@ private[streaming] object TableSchema {
     else parse(new String(
       Files.readAllBytes(Paths.get(path, s"columns_v$m")),
       StandardCharsets.UTF_8))
-
-  /** Land schema version `m` as an orphan side file (tmp + atomic
-    * move); the caller's pointer flip is what makes it live — the
-    * same two-step crash shape as every other table mutation.
-    */
-  def write(path: String, m: Long, cols: Seq[AddedColumn],
-      op: String): Unit = {
-    val tmp = Paths.get(path, s"columns_v$m.tmp")
-    Files.createDirectories(Paths.get(path))
-    Failpoints.step(s"$op.schema.tmp")
-    Files.write(tmp, render(cols).getBytes(StandardCharsets.UTF_8))
-    Failpoints.step(s"$op.schema.move")
-    Files.move(tmp, Paths.get(path, s"columns_v$m"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
 
   /** Validate a declared column BEFORE it is committed: the default
     * must actually evaluate and cast to the declared type — a typo
@@ -656,43 +911,6 @@ private[streaming] object TableSchema {
         d.withColumn(c.name, coalesce(col(c.name).cast(c.dataType), dv))
       else d.withColumn(c.name, dv)
     }
-}
-
-/** The tag side-file protocol both versioned layouts share
-  * (`tag_<name>` holding a version id; tmp + atomic move; re-tagging
-  * moves the pin, removal releases it). The only-a-retained-version
-  * check stays with the CALLER — each layout owns its totality rule.
-  */
-private[streaming] object TagFiles {
-
-  def write(path: String, name: String, version: Long): Unit = {
-    require(name.nonEmpty &&
-      name.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
-      s"tag name must be [A-Za-z0-9_-]+: '$name'")
-    val tmp = Paths.get(path, s"tag_$name.tmp")
-    Failpoints.step("tag.tmp")
-    Files.write(tmp, version.toString.getBytes(StandardCharsets.UTF_8))
-    Failpoints.step("tag.move")
-    Files.move(tmp, Paths.get(path, s"tag_$name"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  def all(path: String): Map[String, Long] =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith("tag_") &&
-        !f.getName.endsWith(".tmp"))
-      .map(f => f.getName.stripPrefix("tag_") ->
-        new String(Files.readAllBytes(f.toPath),
-          StandardCharsets.UTF_8).trim.toLong)
-      .toMap
-
-  def remove(path: String, name: String): Unit = {
-    val f = Paths.get(path, s"tag_$name")
-    if (Files.exists(f)) {
-      Failpoints.step(s"untag.$name")
-      Files.delete(f)
-    }
-  }
 }
 
 /** The change-feed classification both state layouts share: one row
@@ -797,8 +1015,8 @@ object BucketedTable {
   * a replayed batch id is a no-op. Rows are upserted by `keyCol`
   * (changed rows replace same-key rows; deletes are out of scope — the
   * label store only ever adds or relabels).
-  */
-/** @param maxBroadcastKeys bound on the distinct keys a MERGE may
+  *
+  * @param maxBroadcastKeys bound on the distinct keys a MERGE may
   *   collect/broadcast for its anti-join ([[BucketedTable
   *   .MaxBroadcastKeys]]). Deliberately NOT enforced on a FRESH
   *   table's first commit: with no prior rows there is no anti-join
@@ -824,38 +1042,33 @@ object BucketedTable {
 final class BucketedTable(spark: SparkSession, path: String,
     keyCol: String, nBuckets: Int,
     maxBroadcastKeys: Long = BucketedTable.MaxBroadcastKeys,
-    statsCol: Option[String] = None) {
+    statsCol: Option[String] = None)
+    extends VersionedTable[(Long, Long, Int, Long)](spark) {
   require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
 
-  private val ptrPath = Paths.get(path, "_LATEST")
-
-  /** (manifest version, last committed streaming batch id, live bucket
-    * count, live schema version). Two-field pointers predate rebucket
-    * (bucket count = the constructor's); three-field pointers predate
-    * schema evolution (schema version 0 = no added columns).
+  /** Pointer (manifest version, last committed streaming batch id,
+    * live bucket count, live schema version). Two-field pointers
+    * predate rebucket (bucket count = the constructor's); three-field
+    * pointers predate schema evolution (schema version 0 = no added
+    * columns).
     */
-  private def pointer(): Option[(Long, Long, Int, Long)] =
-    if (!Files.exists(ptrPath)) None
-    else {
-      val f = new String(Files.readAllBytes(ptrPath),
-        StandardCharsets.UTF_8).trim.split(",")
-      Some((f(0).toLong, f(1).toLong,
+  protected val core = new TableCore[(Long, Long, Int, Long)](path,
+    "BucketedTable", { body =>
+      val f = body.split(",")
+      (f(0).toLong, f(1).toLong,
         if (f.length >= 3) f(2).toInt else nBuckets,
-        if (f.length >= 4) f(3).toLong else 0L))
-    }
-
-  /** (manifest version, last committed streaming batch id). */
-  def latest: Option[(Long, Long)] = pointer().map(p => (p._1, p._2))
-
-  def lastBatchId: Long = pointer().map(_._2).getOrElse(-1L)
+        if (f.length >= 4) f(3).toLong else 0L)
+    }, { case (v, b, nb, m) => s"$v,$b,$nb,$m" }, _._1)
+  protected def fields(p: (Long, Long, Int, Long)) = (p._1, p._2, p._4)
+  protected def withSchema(p: (Long, Long, Int, Long), m: Long) =
+    p.copy(_4 = m)
+  protected def requireRetained(version: Long, op: String): Unit =
+    retainedManifest(version, op)
 
   /** The bucket count current hashing uses — the constructor's until a
     * [[rebucket]] commits a different one.
     */
   def currentBuckets: Int = pointer().map(_._3).getOrElse(nBuckets)
-
-  /** Live schema version — 0 until an [[addColumn]] commits one. */
-  def schemaVersion: Long = pointer().map(_._4).getOrElse(0L)
 
   private def bucketOf(c: Column, n: Int): Column =
     pmod(xxhash64(c), lit(n.toLong))
@@ -872,105 +1085,21 @@ final class BucketedTable(spark: SparkSession, path: String,
       spark.read.option("mergeSchema", "true").parquet(dirs: _*), cols)
   }
 
-  /** ADDITIVE migration: declare `name` with a non-null SQL-literal
-    * default — NO bucket rewrite; history reads through the new
-    * schema, the next MERGE writes the column. Crash shape: the
-    * schema side file lands as an orphan (tmp + move), then hashing,
-    * layout, and schema version flip in ONE atomic pointer move; a
-    * kill anywhere leaves readers on a consistent schema and
-    * re-invoking converges (StateCrashSpec sweeps the boundaries).
-    * Idempotent per column name. Requires a committed table (a fresh
-    * table has no pointer to flip — create it with the column in the
-    * first commit instead).
+  /** A commit writing version `v` — its data dir, manifest and zones
+    * are the orphans; torn iff a competing writer claimed `v` too.
+    * A clean abort removes the zones file with the rest: left behind,
+    * a later statsCol-less commit of `v` would serve the aborted op's
+    * zones, and a stale zone can wrongly PRUNE committed rows from a
+    * range read (the one way zones could break correctness).
     */
-  def addColumn(name: String, dataType: String, defaultSql: String): Unit = {
-    val entry = pointer()
-    val (v, batchId, nb, m) = entry.getOrElse(throw new
-      IllegalStateException(s"BucketedTable.addColumn($name): migrate " +
-        s"after the first commit — $path has none"))
-    val cols = TableSchema.read(path, m)
-    if (cols.exists(_.name == name)) return // idempotent
-    TableSchema.validate(spark, name, dataType, defaultSql)
-    TableSchema.write(path, m + 1,
-      cols :+ TableSchema.AddedColumn(name, dataType, defaultSql),
-      "migrate")
-    // torn iff a competing migration claimed schema version m+1 (the
-    // side-file name this op just wrote); a data commit in between is
-    // a clean abort (columns_v<m+1> is referenced by no pointer)
-    guardUnmoved(entry, "migrate")(_._4 >= m + 1) {
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$path/columns_v${m + 1}"))
-    }
-    writePointer(v, batchId, nb, m + 1, "migrate")
-  }
+  private def begin(entry: Option[(Long, Long, Int, Long)], op: String,
+      v: Long) =
+    core.begin(entry, op, s"c_$v", s"manifest_v$v", s"zones_v$v")(_._1 >= v)
 
-  /** Lost-update detection ([[ConcurrentWriteException]]): fail NAMED
-    * when the pointer moved since `expected` was read at op entry.
-    * `torn` decides whether the competing writer claimed the same
-    * version/file NAME this op was writing (contents now undefined —
-    * nothing touched, the message says restore); otherwise `cleanup`
-    * removes this op's unreferenced orphans and the error says retry.
-    */
-  private def guardUnmoved(expected: Option[(Long, Long, Int, Long)],
-      op: String)(torn: ((Long, Long, Int, Long)) => Boolean)(
-      cleanup: => Unit): Unit = {
-    val now = pointer()
-    if (now == expected) return
-    if (now.exists(torn))
-      throw new ConcurrentWriteException(
-        s"BucketedTable.$op: another writer claimed the version this " +
-          s"operation was writing at $path (pointer $expected → $now) — " +
-          "its contents are undefined; the tables are single-writer by " +
-          "contract, restore from a retained version")
-    cleanup
-    throw new ConcurrentWriteException(
-      s"BucketedTable.$op: the pointer at $path moved $expected → $now " +
-        "while the operation was in flight — another writer is active; " +
-        "this operation aborted cleanly (its orphans removed), retry " +
-        "it; the tables are single-writer by contract")
-  }
-
-  /** The clean-abort cleanup shared by the version-writing ops.
-    * Deletes the zones side file too: commitZones lands BEFORE the
-    * post-write guard, so an aborted op has already written
-    * `zones_v<v>` — leaving it behind would let a later commit of the
-    * same version number by a statsCol-less handle serve the aborted
-    * op's zones, and a stale zone can wrongly PRUNE committed rows
-    * from a range read (the one way zones could break correctness).
-    */
-  private def dropOrphanVersion(v: Long): Unit = {
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"$path/c_$v"))
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"$path/manifest_v$v"))
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"$path/zones_v$v"))
-  }
-
-  private def writePointer(v: Long, batchId: Long, nb: Int, schemaV: Long,
-      op: String): Unit = {
-    val tmp = Paths.get(path, s"_LATEST.tmp.$v")
-    Files.createDirectories(Paths.get(path))
-    Failpoints.step(s"$op.pointer.tmp")
-    Files.write(tmp,
-      s"$v,$batchId,$nb,$schemaV".getBytes(StandardCharsets.UTF_8))
-    Failpoints.step(s"$op.pointer.move")
-    Files.move(tmp, ptrPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def writeManifest(v: Long, m: Map[Long, String],
-      op: String): Unit = {
-    val tmp = Paths.get(path, s"manifest_v$v.tmp")
-    Files.createDirectories(Paths.get(path))
-    Failpoints.step(s"$op.manifest.tmp")
-    Files.write(tmp, m.toSeq.sortBy(_._1)
-      .map { case (k, rel) => s"$k,$rel" }.mkString("\n")
-      .getBytes(StandardCharsets.UTF_8))
-    Failpoints.step(s"$op.manifest.move")
-    Files.move(tmp, Paths.get(path, s"manifest_v$v"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeManifest(c: core.Commit, v: Long,
+      m: Map[Long, String]): Unit =
+    c.side(s"manifest_v$v", "manifest", m.toSeq.sortBy(_._1)
+      .map { case (k, rel) => s"$k,$rel" }.mkString("\n"))
 
   /** bucket → relative data dir, from manifest version `v`. */
   private def manifest(v: Long): Map[Long, String] =
@@ -985,31 +1114,18 @@ final class BucketedTable(spark: SparkSession, path: String,
     * `<bucket>,<min>,<max>`); empty when the version carries no
     * zones file (pre-upgrade history — scan conservatively).
     */
-  private def readZones(v: Long): Map[Long, (Long, Long)] = {
-    val p = Paths.get(path, s"zones_v$v")
-    if (!Files.exists(p)) Map.empty
-    else new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .linesIterator.filter(_.nonEmpty).map { line =>
+  private def readZones(v: Long): Map[Long, (Long, Long)] =
+    core.text(s"zones_v$v").toSeq
+      .flatMap(_.linesIterator.filter(_.nonEmpty)).map { line =>
         val Array(b, lo, hi) = line.split(",", 3)
         b.toLong -> (lo.toLong, hi.toLong)
       }.toMap
-  }
 
-  /** Land version `v`'s zones as a side file (tmp + atomic move — an
-    * orphan until the pointer names v, the standard two-step shape).
-    */
-  private def writeZones(v: Long, zones: Map[Long, (Long, Long)],
-      op: String): Unit = {
-    val tmp = Paths.get(path, s"zones_v$v.tmp")
-    Files.createDirectories(Paths.get(path))
-    Failpoints.step(s"$op.zones.tmp")
-    Files.write(tmp, zones.toSeq.sortBy(_._1)
-      .map { case (b, (lo, hi)) => s"$b,$lo,$hi" }.mkString("\n")
-      .getBytes(StandardCharsets.UTF_8))
-    Failpoints.step(s"$op.zones.move")
-    Files.move(tmp, Paths.get(path, s"zones_v$v"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** Land version `v`'s zones as a side file of commit `c`. */
+  private def writeZones(c: core.Commit, v: Long,
+      zones: Map[Long, (Long, Long)]): Unit =
+    c.side(s"zones_v$v", "zones", zones.toSeq.sortBy(_._1)
+      .map { case (b, (lo, hi)) => s"$b,$lo,$hi" }.mkString("\n"))
 
   /** Zones of the buckets just written under `c_<v>`: ONE aggregate
     * over the rewritten directories (partition discovery supplies
@@ -1018,7 +1134,7 @@ final class BucketedTable(spark: SparkSession, path: String,
     * whose stats column is all-null record no zone (conservative).
     */
   private def computeZones(v: Long, c: String): Map[Long, (Long, Long)] = {
-    if (!new java.io.File(s"$path/c_$v").isDirectory) Map.empty
+    if (!new File(s"$path/c_$v").isDirectory) Map.empty
     else spark.read.parquet(s"$path/c_$v")
       // partition discovery types __bucket as INT; the zone file keys
       // on the manifest's long ids
@@ -1034,20 +1150,19 @@ final class BucketedTable(spark: SparkSession, path: String,
     * buckets that left the manifest drop out. No-op (no file) when
     * the table has no statsCol.
     */
-  private def commitZones(v: Long, priorV: Option[Long],
-      touched: Set[Long], newManifest: Map[Long, String],
-      op: String): Unit =
+  private def commitZones(c: core.Commit, v: Long, priorV: Option[Long],
+      touched: Set[Long], newManifest: Map[Long, String]): Unit =
     if (statsCol.isEmpty)
       // a statsCol-less handle claiming version v must not leave a
       // CRASHED op's zones_v<v> describing data this commit replaces —
       // a stale zone wrongly prunes committed rows from range reads
       org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$path/zones_v$v"))
-    else statsCol.foreach { c =>
+        new File(s"$path/zones_v$v"))
+    else statsCol.foreach { sc =>
       val prior = priorV.map(readZones).getOrElse(Map.empty)
-      val zones = ((prior -- touched) ++ computeZones(v, c))
+      val zones = ((prior -- touched) ++ computeZones(v, sc))
         .filter { case (b, _) => newManifest.contains(b) }
-      writeZones(v, zones, op)
+      writeZones(c, v, zones)
     }
 
   /** Buckets a [[readRange]] must open under the live version vs the
@@ -1093,11 +1208,20 @@ final class BucketedTable(spark: SparkSession, path: String,
     * brick every later read).
     */
   private def writtenBuckets(v: Long): Set[Long] =
-    Option(new java.io.File(s"$path/c_$v").listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
-      .map(_.getName.stripPrefix("__bucket=").toLong)
-      .toSet
+    core.numbered("__bucket=", dir = s"$path/c_$v").map(_._1).toSet
+
+  /** Rows carrying `__bucket` as commit `c`'s orphan data `c_<v>`,
+    * sorted within each bucket on the declared stats column (parquet
+    * row-group stats then prune inside each opened bucket).
+    */
+  private def writeBuckets(c: core.Commit, v: Long, rows: DataFrame): Unit =
+    c.data {
+      val parted = rows.repartition(col("__bucket"))
+      statsCol.map(sc => parted.sortWithinPartitions(col(sc)))
+        .getOrElse(parted)
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("__bucket").parquet(s"$path/c_$v")
+    }
 
   def read(): Option[DataFrame] = pointer().flatMap { case (v, _, _, m) =>
     val dirs = manifest(v).values.toSeq.distinct.map(rel => s"$path/$rel")
@@ -1114,19 +1238,14 @@ final class BucketedTable(spark: SparkSession, path: String,
     * directory it references exist (a partially-collected version is
     * excluded, never half-served).
     */
-  def versions: Seq[Long] = pointer() match {
+  def versions: Seq[Long] = latest match {
     case None => Seq.empty
-    case Some((v, _, _, _)) =>
+    case Some((v, _)) =>
       // list once, O(live manifests) — never a probe per historical
       // id (a per-batch committer's id space grows forever)
-      Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.startsWith("manifest_v") &&
-          !f.getName.contains(".tmp"))
-        .map(_.getName.stripPrefix("manifest_v").toLong)
-        .filter(u => u <= v &&
-          manifest(u).values.toSeq.distinct
-            .forall(rel => new java.io.File(s"$path/$rel").isDirectory))
-        .sorted.toSeq
+      core.numbered("manifest_v", dirs = false).map(_._1)
+        .filter(u => u <= v && manifest(u).values.toSeq.distinct
+          .forall(rel => new File(s"$path/$rel").isDirectory))
   }
 
   /** Totality check for a historical read: the manifest and every
@@ -1135,11 +1254,7 @@ final class BucketedTable(spark: SparkSession, path: String,
     * than serve a torn subset.
     */
   private def retainedManifest(version: Long, op: String): Map[Long, String] = {
-    val live = pointer().map(_._1).getOrElse(
-      throw new IllegalStateException(
-        s"BucketedTable.$op($version): $path has no committed version"))
-    require(version >= 0 && version <= live,
-      s"BucketedTable.$op($version): version out of range [0, $live]")
+    requireInRange(version, op)
     if (!Files.exists(Paths.get(path, s"manifest_v$version")))
       throw new IllegalStateException(
         s"BucketedTable.$op($version): manifest_v$version is gone — the " +
@@ -1147,7 +1262,7 @@ final class BucketedTable(spark: SparkSession, path: String,
           "vacuum keepVersions horizon to read further back")
     val m = manifest(version)
     val missing = m.values.toSeq.distinct
-      .filterNot(rel => new java.io.File(s"$path/$rel").isDirectory)
+      .filterNot(rel => new File(s"$path/$rel").isDirectory)
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"BucketedTable.$op($version): version is no longer fully " +
@@ -1170,9 +1285,8 @@ final class BucketedTable(spark: SparkSession, path: String,
     */
   def readAt(version: Long): Option[DataFrame] = {
     val m = retainedManifest(version, "readAt")
-    val sm = pointer().map(_._4).getOrElse(0L)
     val dirs = m.values.toSeq.distinct.map(rel => s"$path/$rel")
-    if (dirs.isEmpty) None else Some(readDirs(dirs, sm))
+    if (dirs.isEmpty) None else Some(readDirs(dirs, schemaVersion))
   }
 
   /** The directories a [[changesBetween]] must read: only bucket
@@ -1214,7 +1328,7 @@ final class BucketedTable(spark: SparkSession, path: String,
     require(vFrom <= vTo,
       s"BucketedTable.changesBetween($vFrom, $vTo): vFrom must be ≤ vTo")
     val (fromRels, toRels) = changedRelDirs(vFrom, vTo)
-    val sm = pointer().map(_._4).getOrElse(0L)
+    val sm = schemaVersion
     def side(rels: Seq[String]): Option[DataFrame] =
       if (rels.isEmpty) None
       else Some(readDirs(rels.map(rel => s"$path/$rel"), sm))
@@ -1249,51 +1363,33 @@ final class BucketedTable(spark: SparkSession, path: String,
     // readAt IS the named totality check — one metadata scan, not two
     val asOf = readAt(version)
     val entry = pointer()
-    entry.foreach { case (v, batchId, nb, sm) =>
-      if (version == v) return
-      val v2 = v + 1
-      asOf match {
-        case Some(rows) =>
-          Failpoints.step("restore.data")
-          guardUnmoved(entry, "restore")(_._1 >= v2)(dropOrphanVersion(v2))
-          val parted = rows.withColumn("__bucket", bucketOf(col(keyCol), nb))
-            .repartition(col("__bucket"))
-          statsCol.map(c => parted.sortWithinPartitions(col(c)))
-            .getOrElse(parted)
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy("__bucket").parquet(s"$path/c_$v2")
-          val m2 = writtenBuckets(v2).map(k => k -> s"c_$v2/__bucket=$k").toMap
-          // a restore rewrites every bucket: all zones recomputed
-          commitZones(v2, None, m2.keySet, m2, "restore")
-          writeManifest(v2, m2, "restore")
-        case None =>
-          statsCol.foreach(_ => writeZones(v2, Map.empty, "restore"))
-          writeManifest(v2, Map.empty, "restore")
-      }
-      guardUnmoved(entry, "restore")(_._1 >= v2)(dropOrphanVersion(v2))
-      writePointer(v2, batchId, nb, sm, "restore")
+    entry.foreach { case (v, _, nb, _) =>
+      if (version != v) rewriteAll(entry, asOf, nb, "restore")
     }
   }
 
-  /** Named tag pinning `version` against [[vacuum]] — the
-    * reproducible-training-set reference ("the 2024-08 snapshot"): a
-    * tagged version's manifest and directories are retained
-    * regardless of the horizon, so a training run that recorded a tag
-    * re-reads its exact inputs months later while ordinary history
-    * is collected on cadence. Side file `tag_<name>` holding the
-    * version id, tmp + atomic move; re-tagging a name moves it;
-    * only a currently-retained version can be pinned (named check).
+  /** Commit `rows` (None = empty) as the WHOLE next version, hashed
+    * into `n` buckets — the body [[restore]] and [[rebucket]] share.
+    * Every bucket is rewritten, so every zone is recomputed.
     */
-  def tag(name: String, version: Long): Unit = {
-    retainedManifest(version, "tag")
-    TagFiles.write(path, name, version)
-  }
-
-  /** Every tag → pinned version. */
-  def tags: Map[String, Long] = TagFiles.all(path)
-
-  /** Release a tag; the next [[vacuum]] may collect the version. */
-  def untag(name: String): Unit = TagFiles.remove(path, name)
+  private def rewriteAll(entry: Option[(Long, Long, Int, Long)],
+      rows: Option[DataFrame], n: Int, op: String): Unit =
+    entry.foreach { p =>
+      val v2 = p._1 + 1
+      val c = begin(entry, op, v2)
+      rows match {
+        case Some(r) =>
+          writeBuckets(c, v2,
+            r.withColumn("__bucket", bucketOf(col(keyCol), n)))
+          val m2 = writtenBuckets(v2).map(k => k -> s"c_$v2/__bucket=$k").toMap
+          commitZones(c, v2, None, m2.keySet, m2)
+          writeManifest(c, v2, m2)
+        case None =>
+          statsCol.foreach(_ => writeZones(c, v2, Map.empty))
+          writeManifest(c, v2, Map.empty)
+      }
+      c.flip(p.copy(_1 = v2, _3 = n))
+    }
 
   /** Garbage-collect versions older than the last `keepVersions`
     * manifests — the lakehouse VACUUM, and the missing maintenance
@@ -1311,64 +1407,30 @@ final class BucketedTable(spark: SparkSession, path: String,
     * re-invoking converges. No pointer is written — vacuum changes
     * what is RETAINED, never what is LIVE.
     */
-  def vacuum(keepVersions: Int): Unit = {
-    require(keepVersions >= 1,
-      s"keepVersions must be ≥ 1: $keepVersions")
-    pointer().foreach { case (v, _, _, _) =>
-      val retainFrom = math.max(0L, v - keepVersions + 1)
+  def vacuum(keepVersions: Int): Unit =
+    vacuumHorizon(keepVersions).foreach { case (v, retainFrom, tagged) =>
       // tagged versions are retained REGARDLESS of the horizon — the
       // whole point of a tag
-      val tagged = tags.values.toSet
-      val retainedIds = ((retainFrom to v).toSet ++ tagged)
-        .filter(u => Files.exists(Paths.get(path, s"manifest_v$u")))
-      val referenced: Set[String] =
-        retainedIds.flatMap(u => manifest(u).values)
-      val d = new java.io.File(path)
-      def entries() = Option(d.listFiles()).getOrElse(Array.empty)
-      entries()
-        .filter(f => f.isFile && f.getName.startsWith("manifest_v") &&
-          !f.getName.contains(".tmp"))
-        .map(f => (f.getName.stripPrefix("manifest_v").toLong, f))
+      def hasManifest(u: Long) = Files.exists(Paths.get(path, s"manifest_v$u"))
+      val referenced: Set[String] = ((retainFrom to v).toSet ++ tagged)
+        .filter(hasManifest).flatMap(u => manifest(u).values)
+      core.numbered("manifest_v", dirs = false)
         .filter { case (u, _) => u < retainFrom && !tagged.contains(u) }
-        .sortBy(_._1)
-        .foreach { case (u, f) =>
-          Failpoints.step(s"vacuum.manifest.$u")
-          f.delete()
-        }
+        .foreach { case (u, f) => core.remove(f, s"vacuum.manifest.$u") }
       // zone side files ride with their manifest: no manifest → no
       // version to range-read → the zones are residue
-      entries()
-        .filter(f => f.isFile && f.getName.startsWith("zones_v") &&
-          !f.getName.contains(".tmp"))
-        .filter(f => !Files.exists(Paths.get(path,
-          "manifest_v" + f.getName.stripPrefix("zones_v"))))
-        .sortBy(_.getName)
-        .foreach { f =>
-          Failpoints.step(s"vacuum.zones.${f.getName}")
-          f.delete()
+      core.numbered("zones_v", dirs = false)
+        .filterNot { case (u, _) => hasManifest(u) }
+        .foreach { case (_, f) => core.remove(f, s"vacuum.zones.${f.getName}") }
+      core.numbered("c_").foreach { case (_, cd) =>
+        def buckets() = core.numbered("__bucket=", dir = cd.getPath)
+        buckets().foreach { case (_, b) =>
+          val rel = s"${cd.getName}/${b.getName}"
+          if (!referenced.contains(rel)) core.remove(b, s"vacuum.dir.$rel")
         }
-      entries()
-        .filter(f => f.isDirectory && f.getName.startsWith("c_"))
-        .sortBy(_.getName).foreach { cd =>
-          val buckets = Option(cd.listFiles()).getOrElse(Array.empty)
-            .filter(b => b.isDirectory && b.getName.startsWith("__bucket="))
-            .sortBy(_.getName)
-          buckets.foreach { b =>
-            val rel = s"${cd.getName}/${b.getName}"
-            if (!referenced.contains(rel)) {
-              Failpoints.step(s"vacuum.dir.$rel")
-              org.apache.commons.io.FileUtils.deleteQuietly(b)
-            }
-          }
-          val remaining = Option(cd.listFiles()).getOrElse(Array.empty)
-            .exists(b => b.isDirectory && b.getName.startsWith("__bucket="))
-          if (!remaining) {
-            Failpoints.step(s"vacuum.empty.${cd.getName}")
-            org.apache.commons.io.FileUtils.deleteQuietly(cd)
-          }
-        }
+        if (buckets().isEmpty) core.remove(cd, s"vacuum.empty.${cd.getName}")
+      }
     }
-  }
 
   /** The batch key set, collected ONCE and BOUNDED (round 15: the
     * former checkpointed frame cost three actions per MERGE/readKeys —
@@ -1516,18 +1578,8 @@ final class BucketedTable(spark: SparkSession, path: String,
     val newData = resolve(priorRows, updates0, keyDf)
       .withColumn("__bucket", bucketOf(col(keyCol), nb))
       .filter(col("__bucket").isin(touched.toSeq: _*))
-    if (touched.nonEmpty) {
-      Failpoints.step("merge.data")
-      // cheap pre-write check: don't clobber a competing claim of c_<v>
-      guardUnmoved(prior, "merge")(_._1 >= v)(dropOrphanVersion(v))
-      // sort-within-bucket on the declared stats column: parquet
-      // row-group stats then prune inside each opened bucket
-      val parted = newData.repartition(col("__bucket"))
-      statsCol.map(c => parted.sortWithinPartitions(col(c)))
-        .getOrElse(parted)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("__bucket").parquet(s"$path/c_$v")
-    }
+    val c = begin(prior, "merge", v)
+    if (touched.nonEmpty) writeBuckets(c, v, newData)
 
     // the manifest records the buckets partitionBy ACTUALLY wrote: a
     // touched-but-empty bucket's prior entry is dropped (it is now
@@ -1536,10 +1588,9 @@ final class BucketedTable(spark: SparkSession, path: String,
       if (touched.isEmpty) Set.empty else writtenBuckets(v)
     val newManifest = (priorManifest -- (touched -- written)) ++
       written.map(k => k -> s"c_$v/__bucket=$k").toMap
-    commitZones(v, prior.map(_._1), touched, newManifest, "merge")
-    writeManifest(v, newManifest, "merge")
-    guardUnmoved(prior, "merge")(_._1 >= v)(dropOrphanVersion(v))
-    writePointer(v, batchId, nb, sm, "merge")
+    commitZones(c, v, prior.map(_._1), touched, newManifest)
+    writeManifest(c, v, newManifest)
+    c.flip((v, batchId, nb, sm))
   }
 
   /** The growth RULE both maintenance loops share (IngestStream's
@@ -1585,39 +1636,15 @@ final class BucketedTable(spark: SparkSession, path: String,
   def rebucket(newN: Int): Unit = {
     require(newN > 0, s"newN must be positive: $newN")
     val entry = pointer()
-    entry.foreach { case (v, batchId, _, sm) =>
-      val v2 = v + 1
-      read() match {
-        case Some(rows) =>
-          Failpoints.step("rebucket.data")
-          guardUnmoved(entry, "rebucket")(_._1 >= v2)(dropOrphanVersion(v2))
-          val parted = rows.withColumn("__bucket", bucketOf(col(keyCol), newN))
-            .repartition(col("__bucket"))
-          statsCol.map(c => parted.sortWithinPartitions(col(c)))
-            .getOrElse(parted)
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy("__bucket").parquet(s"$path/c_$v2")
-          val m2 = writtenBuckets(v2).map(k => k -> s"c_$v2/__bucket=$k").toMap
-          // a rebucket rewrites every bucket: all zones recomputed
-          commitZones(v2, None, m2.keySet, m2, "rebucket")
-          writeManifest(v2, m2, "rebucket")
-        case None =>
-          statsCol.foreach(_ => writeZones(v2, Map.empty, "rebucket"))
-          writeManifest(v2, Map.empty, "rebucket")
-      }
-      guardUnmoved(entry, "rebucket")(_._1 >= v2)(dropOrphanVersion(v2))
-      writePointer(v2, batchId, newN, sm, "rebucket")
+    entry.foreach { case (v, _, _, _) =>
+      rewriteAll(entry, read(), newN, "rebucket")
       // cleanup AFTER the pointer is durable; best-effort — the new
-      // manifest references only c_<v2>, so every older version dir
+      // manifest references only c_<v+1>, so every older version dir
       // is invisible, and leftovers are re-collected next rebucket
-      val d = new java.io.File(path)
-      Option(d.listFiles()).getOrElse(Array.empty).foreach { f =>
-        val n = f.getName
-        if (f.isDirectory && n.startsWith("c_") && n != s"c_$v2") {
-          Failpoints.step(s"rebucket.clean.$n")
-          org.apache.commons.io.FileUtils.deleteQuietly(f)
+      core.numbered("c_").filter(_._1 != v + 1)
+        .foreach { case (_, f) =>
+          core.remove(f, s"rebucket.clean.${f.getName}")
         }
-      }
     }
   }
 }

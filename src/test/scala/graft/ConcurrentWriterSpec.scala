@@ -144,17 +144,55 @@ class ConcurrentWriterSpec extends AnyFunSuite {
     val t = new AppendTable(spark, s"$root/t")
     t.append(toDF(Seq(1L, 2L)), 0L)
     t.append(toDF(Seq(3L)), 1L)
-    for ((label, op) <- Seq[(String, AppendTable => Unit)](
-        "delete.data" -> (_.deleteKeys(toDF(Seq(2L)), "x")),
-        "compact.data" -> (_.compact()))) {
-      Failpoints.installHook(label) {
-        val u = new AppendTable(spark, s"$root/t")
-        u.append(toDF(Seq(100L)), u.lastBatchId + 1)
-      }
+    // the other ops the guard serves, each on its own table: a
+    // competing commit of the next version is a torn claim, a
+    // competing append below the op's target a clean retry
+    val vt = new AppendTable(spark, s"$root/vt")
+    vt.append(toDF(Seq(1L, 2L)), 0L)
+    val bt = new BucketedTable(spark, s"$root/bt", "k", 4)
+    bt.merge(kvDF(Seq(1L -> 10L)), 0L)
+    bt.merge(kvDF(Seq(1L -> 11L)), 1L)
+    val st = new SnapshotTable(spark, s"$root/st")
+    st.commit(toDF(Seq(1L)), 0L)
+    st.commit(toDF(Seq(2L)), 1L)
+    def appendTo(p: String): Unit = {
+      val u = new AppendTable(spark, p)
+      u.append(toDF(Seq(100L)), u.lastBatchId + 1)
+    }
+    def mergeBt(): Unit = {
+      val u = new BucketedTable(spark, s"$root/bt", "k", 4)
+      u.merge(kvDF(Seq(100L -> 100L)), u.lastBatchId + 1)
+    }
+    def commitSt(): Unit = {
+      val u = new SnapshotTable(spark, s"$root/st")
+      u.commit(toDF(Seq(100L)), u.lastBatchId + 1)
+    }
+    def xs(df: Option[org.apache.spark.sql.DataFrame]) =
+      df.get.collect().map(_.getLong(0)).toSeq
+    // (failpoint, op, competing commit, expected word, competitor landed)
+    for ((label, op, compete, word, landed) <- Seq[(String, () => Unit,
+        () => Unit, String, () => Boolean)](
+        ("delete.data", () => t.deleteKeys(toDF(Seq(2L)), "x"),
+          () => appendTo(s"$root/t"), "retry",
+          () => xs(t.read()).contains(100L)),
+        ("compact.data", () => t.compact(),
+          () => appendTo(s"$root/t"), "retry",
+          () => xs(t.read()).contains(100L)),
+        ("vdelete.data", () => vt.deleteKeysVectored(toDF(Seq(2L)), "x"),
+          () => appendTo(s"$root/vt"), "retry",
+          () => xs(vt.read()).sorted == Seq(1L, 2L, 100L)),
+        ("rebucket.data", () => bt.rebucket(8), () => mergeBt(), "claimed",
+          () => bt.currentBuckets == 4 && xs(bt.read()).contains(100L)),
+        ("restore.data", () => bt.restore(0L), () => mergeBt(), "claimed",
+          () => xs(bt.read()).sorted == Seq(1L, 100L)),
+        ("restore.data", () => st.restore(0L), () => commitSt(), "claimed",
+          () => xs(st.read()) == Seq(100L)))) {
+      Failpoints.installHook(label)(compete())
       val e = intercept[ConcurrentWriteException] {
-        try op(t) finally Failpoints.clearHooks()
+        try op() finally Failpoints.clearHooks()
       }
-      assert(e.getMessage.contains("retry"), s"$label: $e")
+      assert(e.getMessage.contains(word), s"$label: $e")
+      assert(landed(), s"$label: the competing commit must stay readable")
     }
     // both competing appends landed; a quiet retry of the delete works
     assert(t.read().get.collect().map(_.getLong(0)).sorted.toSeq ==
