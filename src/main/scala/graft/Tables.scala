@@ -139,6 +139,15 @@ object Sessions {
       // numRowsTotal metric, and the extra point lookup per state put
       // is measurable on wide single-batch replays
       .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
+      // changelog state commits: a micro-batch's commit uploads only
+      // the changed rows; a full RocksDB snapshot is built by the
+      // background maintenance every minDeltasForSnapshot batches, so
+      // a restart replays at most that many changelogs. Measured alone
+      // on the posts sink (perfbench posts_steady, seed 300, traced,
+      // 4 vCPUs), state commit time per data batch: dedup 168 → 79 ms,
+      // upsert 170 → 82 ms. A checkpoint written without it restarts
+      // under it unchanged (SinkBatchSpec)
+      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       .config("spark.ui.enabled", "false")
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -74,6 +74,11 @@ object EventSink {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
+  /** The outbox's row type: what [[stepOutbox]] writes and the sink's
+    * snapshot read takes in place of a footer inference.
+    */
+  private val OutboxSchema = Encoders.product[OutboxEntry].schema
+
   /** One outbox entry per upserted (key, version): deterministic id so
     * replays collide instead of duplicating (D6 idempotency keys).
     */
@@ -138,21 +143,35 @@ object EventSink {
     }
     val replayEvents = eventsT.lastBatchId >= batchId
     val replayOutbox = outboxTable.lastBatchId >= batchId
-    if ((replayEvents && replayOutbox) || batch.isEmpty) {
+    if (replayEvents && replayOutbox) {
       runMaintenance() // idempotent; honors the cadence on replay too
       return
     }
 
-    // one update row per key: the stream emits one EventRow per key
+    // the ONE action on the foreachBatch input: every action re-runs
+    // the stateful plan behind it (dedup + upsert state stores), so
+    // the batch is materialized once, and that same job observes the
+    // row count (the empty check) and max(lastUs) (the outbox clock),
+    // read back from the executed plan, not from a listener.
+    // One update row per key: the stream emits one EventRow per key
     // per trigger, but a replayed+reprocessed batch could carry
     // several — keep the newest
-    val updates = mergeEvents(None, batch.toDF()).localCheckpoint()
+    val observing = mergeEvents(None, batch.toDF())
+      .observe("sink_batch", count(lit(1)).as("rows"), max("lastUs").as("nowUs"))
+    val updates = observing.localCheckpoint()
+    val observed = observing.queryExecution.observedMetrics("sink_batch")
+    if (observed.getAs[Long]("rows") == 0L) {
+      runMaintenance()
+      return
+    }
     if (!replayEvents)
       // ∝-batch MERGE: highest-version-wins runs over ONLY the prior
       // rows of the buckets the batch's keys hash into, and only
       // those buckets are rewritten — mergeEvents IS the resolve
-      // function, so the commit costs one pruned read + one write
-      eventsT.mergeResolve(updates, batchId)(mergeEvents)
+      // function, so the commit costs one pruned read + one write;
+      // the stored rows have the update rows' type, so the prior
+      // read needs no footer inference
+      eventsT.mergeResolve(updates, batchId, Some(updates.schema))(mergeEvents)
 
     // the outbox step stays strictly AFTER the events commit — NOT a
     // DriverOps.parallel candidate (review r16): stepOutbox invokes
@@ -167,7 +186,7 @@ object EventSink {
       // existing row wins), then run one delivery + recovery pass over
       // everything due
       val enqueued = outboxEntriesFor(updates)
-      val all = outboxTable.read() match {
+      val all = outboxTable.read(OutboxSchema) match {
         case Some(cur) =>
           val w = Window.partitionBy("id").orderBy(col("__new").asc)
           cur.withColumn("__new", lit(0))
@@ -176,9 +195,8 @@ object EventSink {
             .filter(col("__rn") === 1).drop("__new", "__rn")
         case None => enqueued
       }
-      val nowUs = updates.agg(max("lastUs")).head().getLong(0)
-      outboxTable.commit(
-        stepOutbox(spark, all, nowUs, deliver, dlqMinAgeUs), batchId)
+      outboxTable.commit(stepOutbox(spark, all,
+        observed.getAs[Long]("nowUs"), deliver, dlqMinAgeUs), batchId)
     }
     runMaintenance()
   }

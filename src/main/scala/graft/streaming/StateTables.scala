@@ -4,8 +4,10 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** ∝-batch state tables for the streaming ingest loop (round-10
   * verdict item 1): [[SnapshotTable]]'s full-snapshot rewrite made the
@@ -307,10 +309,19 @@ final class SnapshotTable(spark: SparkSession, path: String)
           "read further back")
   }
 
-  def read(): Option[DataFrame] = pointer().map { case (v, _, m) =>
-    val base = spark.read.parquet(s"$path/v_$v")
-    TableSchema.applyTo(base, TableSchema.read(path, m))
-  }
+  def read(): Option[DataFrame] = readAs(None)
+
+  /** [[read]] for a caller that knows the row type: see
+    * [[TableSchema.reader]].
+    */
+  def read(rowSchema: StructType): Option[DataFrame] = readAs(Some(rowSchema))
+
+  private def readAs(rowSchema: Option[StructType]) =
+    pointer().map { case (v, _, m) =>
+      val cols = TableSchema.read(path, m)
+      TableSchema.applyTo(TableSchema.reader(spark, cols, rowSchema)
+        .parquet(s"$path/v_$v"), cols)
+    }
 
   /** Land `df` as snapshot `v`: orphan first, then the pointer. */
   private def land(entry: Option[(Long, Long, Long)], op: String, v: Long,
@@ -901,6 +912,17 @@ private[streaming] object TableSchema {
     }
   }
 
+  /** The parquet reader for data under the declared columns `cols`.
+    * While none is declared, the caller's row type `rowSchema` stands
+    * in for the footer inference, a one-task Spark job per read; Spark
+    * makes a given schema nullable at every depth, just as it types an
+    * inferred one. A migrated table infers: its files may carry a
+    * column the caller's type lacks.
+    */
+  def reader(spark: SparkSession, cols: Seq[AddedColumn],
+      rowSchema: Option[StructType]): DataFrameReader =
+    rowSchema.filter(_ => cols.isEmpty).fold(spark.read)(spark.read.schema)
+
   /** Read-through: surface every declared column with its default
     * filling pre-migration rows (and any null a writer left).
     */
@@ -1078,11 +1100,13 @@ final class BucketedTable(spark: SparkSession, path: String,
     * fill the gaps (and any nulls). The no-migration path stays the
     * plain read — no mergeSchema cost until a migration exists.
     */
-  private def readDirs(dirs: Seq[String], m: Long): DataFrame = {
+  private def readDirs(dirs: Seq[String], m: Long,
+      rowSchema: Option[StructType] = None): DataFrame = {
     val cols = TableSchema.read(path, m)
-    if (cols.isEmpty) spark.read.parquet(dirs: _*)
+    val r = TableSchema.reader(spark, cols, rowSchema)
+    if (cols.isEmpty) r.parquet(dirs: _*)
     else TableSchema.applyTo(
-      spark.read.option("mergeSchema", "true").parquet(dirs: _*), cols)
+      r.option("mergeSchema", "true").parquet(dirs: _*), cols)
   }
 
   /** A commit writing version `v` — its data dir, manifest and zones
@@ -1525,11 +1549,14 @@ final class BucketedTable(spark: SparkSession, path: String,
     * read and one write per commit, with no extra point-lookup pass.
     * Rows resolving into untouched buckets are dropped (they would
     * orphan outside the manifest); the touched-bucket list itself is
-    * the one bounded driver collect (≤ nBuckets ids).
+    * the one bounded driver collect (≤ nBuckets ids). `rowSchema`,
+    * the stored rows' type when the caller knows it, replaces the
+    * footer inference of the prior-bucket read ([[TableSchema.reader]]).
     */
-  def mergeResolve(updates: DataFrame, batchId: Long)(
+  def mergeResolve(updates: DataFrame, batchId: Long,
+      rowSchema: Option[StructType] = None)(
       resolve: (Option[DataFrame], DataFrame) => DataFrame): Unit =
-    mergeResolveImpl(updates, batchId, collectKeys = false)(
+    mergeResolveImpl(updates, batchId, collectKeys = false, rowSchema)(
       (prior, chg, _) => resolve(prior, chg))
 
   /** Shared commit body. `collectKeys = true` ([[merge]]'s path)
@@ -1545,7 +1572,7 @@ final class BucketedTable(spark: SparkSession, path: String,
     * key-set guard (documented relaxation).
     */
   private def mergeResolveImpl(updates: DataFrame, batchId: Long,
-      collectKeys: Boolean)(
+      collectKeys: Boolean, rowSchema: Option[StructType] = None)(
       resolve: (Option[DataFrame], DataFrame, Option[DataFrame]) => DataFrame)
       : Unit = {
     if (lastBatchId >= batchId) return
@@ -1574,7 +1601,7 @@ final class BucketedTable(spark: SparkSession, path: String,
       .distinct.map(rel => s"$path/$rel")
     val priorRows =
       if (priorTouchedDirs.isEmpty) None
-      else Some(readDirs(priorTouchedDirs, sm))
+      else Some(readDirs(priorTouchedDirs, sm, rowSchema))
     val newData = resolve(priorRows, updates0, keyDf)
       .withColumn("__bucket", bucketOf(col(keyCol), nb))
       .filter(col("__bucket").isin(touched.toSeq: _*))
