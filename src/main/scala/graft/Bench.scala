@@ -3,6 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE compact JSON line
@@ -28,6 +29,12 @@ import org.apache.spark.sql.SparkSession
   *     polluted unrelated queries when shared (round-3 bench showed
   *     broad +30-80% shallow regressions). Deterministic sorted order
   *     + System.gc() between queries for the rest.
+  *   - Each query's entry also carries the Spark `jobs` and Σ executor
+  *     `task_s` of its min run (one listener, [[RunCounter]]): wall
+  *     clock moves ±30 % between runs, the job count does not.
+  *   - A filtered run (`SPARK_GRAFT_BENCH_ONLY`) writes its artifact
+  *     only to `SPARK_GRAFT_BENCH_OUT`, and without it only prints: it
+  *     never replaces the sweep of record in `BENCH_FULL.json`.
   */
 object Bench {
 
@@ -71,6 +78,7 @@ object Bench {
 
     val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val allRuns = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+    val counts = scala.collection.mutable.LinkedHashMap.empty[String, (Int, Double)]
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
 
     // Isolated (streaming) set runs FIRST, in a forked child, while
@@ -93,14 +101,15 @@ object Bench {
       if (results.nonEmpty) {
         val keys = results.flatMap(_._1.keys).distinct
         keys.foreach { k =>
-          val mins = results.flatMap(_._1.get(k))
-          times(k) = mins.min
+          val best = results.filter(_._1.contains(k)).minBy(_._1(k))
+          times(k) = best._1(k)
+          best._3.get(k).foreach(counts(k) = _)
           allRuns(k) = results.flatMap(_._2.getOrElse(k, Seq.empty))
         }
         // a failure only counts if EVERY invocation failed the query
-        results.flatMap(_._3.keys).distinct
+        results.flatMap(_._4.keys).distinct
           .filterNot(times.contains)
-          .foreach(k => failures(k) = results.flatMap(_._3.get(k)).head)
+          .foreach(k => failures(k) = results.flatMap(_._4.get(k)).head)
       } else {
         Console.err.println("[bench] child fork failed; running isolated set in-process")
         isoFailed = iso
@@ -143,7 +152,7 @@ object Bench {
     calibrate() // untimed codegen/JIT warm-up
     val calibBefore = calibrate()
 
-    runSet(plain ++ isoFailed, sfDir, runs, times, allRuns, failures)
+    runSet(plain ++ isoFailed, sfDir, runs, times, allRuns, counts, failures)
 
     val calibAfter = calibrate()
 
@@ -152,6 +161,8 @@ object Bench {
       times.foreach { case (k, v) => println(s"BENCH_CHILD $k $v") }
       allRuns.foreach { case (k, vs) =>
         println(s"BENCH_CHILD_RUNS $k ${vs.mkString(",")}") }
+      counts.foreach { case (k, (jobs, taskS)) =>
+        println(s"BENCH_CHILD_COUNTS $k $jobs $taskS") }
       failures.foreach { case (k, v) => println(s"BENCH_CHILD_FAIL $k $v") }
       return
     }
@@ -164,7 +175,9 @@ object Bench {
     val fullJson = {
       val q = times.toSeq.sortBy(_._1).map { case (k, v) =>
         val rs = allRuns.getOrElse(k, Seq(v)).mkString("[", ",", "]")
-        s"""    "$k": {"min": $v, "runs": $rs}"""
+        val cs = counts.get(k).map { case (jobs, taskS) =>
+          f""", "jobs": $jobs, "task_s": $taskS%.3f""" }.getOrElse("")
+        s"""    "$k": {"min": $v, "runs": $rs$cs}"""
       }.mkString(",\n")
       val fs = failures.map { case (k, v) =>
         s"""    "$k": "${jsonEscape(v)}"""" }.mkString(",\n")
@@ -192,11 +205,13 @@ $fs
 """
     }
     // SPARK_GRAFT_BENCH_OUT redirects the artifact (dev smokes at
-    // small SF must not clobber the committed sf0.1 snapshot); the
-    // driver never sets it, so its artifact path is unchanged.
-    Files.write(
-      Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")),
-      fullJson.getBytes(StandardCharsets.UTF_8))
+    // small SF must not clobber the committed sf0.1 snapshot). A
+    // filtered run is never the sweep of record: without the variable
+    // it only prints.
+    sys.env.get("SPARK_GRAFT_BENCH_OUT")
+      .orElse(if (only.isDefined) None else Some("BENCH_FULL.json"))
+      .foreach(out => Files.write(Paths.get(out),
+        fullJson.getBytes(StandardCharsets.UTF_8)))
 
     // Compact stdout line — must fit (with sbt's trailing "[success]"
     // line, ~75 chars) inside the collector's 2000-char tail window,
@@ -258,17 +273,72 @@ $fs
     println(line)
   }
 
-  /** Run `names` in order in this JVM, n runs each, keep the min. */
+  /** Spark jobs and Σ executor task time per bench run, keyed by the
+    * [[RunCounter.Key]] local property the run sets (the driver threads
+    * a gate starts inherit it). Listener events arrive asynchronously:
+    * read the totals only after [[flush]].
+    */
+  private final class RunCounter extends SparkListener {
+    private val stageRun = scala.collection.mutable.HashMap.empty[Int, String]
+    private val jobs = scala.collection.mutable.HashMap.empty[String, Int]
+    private val taskMs = scala.collection.mutable.HashMap.empty[String, Long]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      Option(e.properties).flatMap(p => Option(p.getProperty(RunCounter.Key)))
+        .foreach { run =>
+          jobs(run) = jobs.getOrElse(run, 0) + 1
+          e.stageIds.foreach(stageRun(_) = run)
+        }
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized {
+        stageRun.get(e.stageInfo.stageId).foreach { run =>
+          taskMs(run) = taskMs.getOrElse(run, 0L) +
+            e.stageInfo.taskMetrics.executorRunTime
+        }
+      }
+
+    /** (jobs, task seconds) of `run`. */
+    def apply(run: String): (Int, Double) = synchronized {
+      (jobs.getOrElse(run, 0), taskMs.getOrElse(run, 0L) / 1e3)
+    }
+
+    /** Waits until every event posted before this call is delivered:
+      * events arrive in order, so once a marker job is seen, every
+      * earlier job and stage has been.
+      */
+    def flush(spark: SparkSession): Unit = {
+      val sc = spark.sparkContext
+      val marker = s"flush-${System.nanoTime()}"
+      sc.setLocalProperty(RunCounter.Key, marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(RunCounter.Key, null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (apply(marker)._1 == 0 && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    }
+  }
+
+  private object RunCounter {
+    val Key = "graft.bench.run"
+  }
+
+  /** Run `names` in order in this JVM, n runs each, keep the min and the
+    * job count and task time of that run. */
   private def runSet(
       names: Seq[String], sfDir: String, runs: Int,
       times: scala.collection.mutable.Map[String, Double],
       allRuns: scala.collection.mutable.Map[String, Seq[Double]],
+      counts: scala.collection.mutable.Map[String, (Int, Double)],
       failures: scala.collection.mutable.Map[String, String]): Unit = {
     if (names.isEmpty) return
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.builderDefaults(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val counter = new RunCounter
+    spark.sparkContext.addSparkListener(counter)
     val qmap = SparkEntry.queries
     // JVM/catalog warm-up (round-6 verdict: whichever heavy query runs
     // early in a cold JVM eats the JIT/codegen/parquet-footer warm-up
@@ -285,8 +355,9 @@ $fs
       val fn = qmap(name)
       val rs = scala.collection.mutable.ArrayBuffer.empty[Double]
       var failed = false
-      (1 to runs).foreach { _ =>
+      (1 to runs).foreach { i =>
         if (!failed) {
+          spark.sparkContext.setLocalProperty(RunCounter.Key, s"$name#$i")
           val t0 = System.nanoTime()
           try {
             fn(spark, sfDir).queryExecution.toRdd.count()
@@ -296,12 +367,14 @@ $fs
               failed = true
               failures(name) = jsonEscape(
                 s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-          }
+          } finally spark.sparkContext.setLocalProperty(RunCounter.Key, null)
         }
       }
       if (!failed) {
         times(name) = rs.min
         allRuns(name) = rs.toSeq
+        counter.flush(spark)
+        counts(name) = counter(s"$name#${rs.indexOf(rs.min) + 1}")
         Console.err.println(f"[bench] $name%-28s min=${rs.min}%.3f runs=${rs.map(x => f"$x%.3f").mkString(",")}")
       } else Console.err.println(s"[bench] $name FAILED: ${failures(name)}")
       System.gc()
@@ -353,7 +426,8 @@ $fs
   /** Fork a bench child for `names` in isolation; parse its
     * BENCH_CHILD lines. None on any failure. */
   private def forkChild(names: Seq[String], runs: Int)
-      : Option[(Map[String, Double], Map[String, Seq[Double]], Map[String, String])] = {
+      : Option[(Map[String, Double], Map[String, Seq[Double]],
+          Map[String, (Int, Double)], Map[String, String])] = {
     forkMain("graft.Bench", Map(
       "SPARK_GRAFT_BENCH_CHILD" -> "1",
       "SPARK_GRAFT_BENCH_ONLY" -> names.mkString(","),
@@ -363,9 +437,12 @@ $fs
       val r = out.collect { case l if l.startsWith("BENCH_CHILD_RUNS ") =>
         val Array(_, k, vs) = l.split(" ", 3)
         k -> vs.split(",").map(_.toDouble).toSeq }.toMap
+      val c = out.collect { case l if l.startsWith("BENCH_CHILD_COUNTS ") =>
+        val Array(_, k, jobs, taskS) = l.split(" ", 4)
+        k -> (jobs.toInt, taskS.toDouble) }.toMap
       val f = out.collect { case l if l.startsWith("BENCH_CHILD_FAIL ") =>
         val Array(_, k, v) = l.split(" ", 3); k -> v }.toMap
-      if (t.isEmpty && f.isEmpty) None else Some((t, r, f))
+      if (t.isEmpty && f.isEmpty) None else Some((t, r, c, f))
     }
   }
 

@@ -317,7 +317,7 @@ object StreamBench {
         f""""calibration_ratio": $calibRatio%.2f, """ +
         s""""is_capability_floor": ${!floorDispersed}, """ +
         s""""validity": "$floorValidity", """ +
-        s""""rule": "best-of-${runs.size} same-JVM sweeps = the capability floor ONLY when the pre-sweep calibration ratio <= 1.3 and the load entering the FIRST sweep <= $MaxFloorLoad1m (later sweeps' load_1m_before reads the bench's own saturation and never classifies); otherwise machine-state-dispersed and adjudication falls to a quiet-box TimeOne/StreamBench rerun; warm-last stays the number-of-record; agreement <70pct classifies the record as machine-state-dispersed (BENCH_VARIANCE.md)"}"""
+        s""""rule": "best-of-${runs.size} same-JVM sweeps = the capability floor ONLY when the pre-sweep calibration ratio <= 1.3 and the load entering the FIRST sweep <= $MaxFloorLoad1m (later sweeps' load_1m_before reads the bench's own saturation and never classifies); otherwise machine-state-dispersed and adjudication falls to a quiet-box filtered-Bench/StreamBench rerun; warm-last stays the number-of-record; agreement <70pct classifies the record as machine-state-dispersed (BENCH_VARIANCE.md)"}"""
     println(s"STREAM_BENCH_JSON ${statsJson(warm, runs.last._2).dropRight(1)}, " +
       s"$floorJson, " +
       s""""protocol": {"sweeps_in_jvm": ${runs.size}, "reported": "last (warm)", """ +

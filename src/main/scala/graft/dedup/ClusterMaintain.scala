@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.streaming.DriverOps
+
 /** L52 — incremental cluster maintenance: merge an ingest batch's
   * near-dup edges into an EXISTING cluster labeling without re-running
   * connected components over the full corpus. This is what makes the
@@ -29,8 +31,8 @@ import org.apache.spark.sql.functions._
   *      the CC input shrinks from member-level star+pair edges to the
   *      DISTINCT cluster-pair/doc-pair edges (duplicate clique
   *      expansions collapse);
-  *   3. frontier CC over that contracted graph (nodes ∝ affected
-  *      clusters + batch — never members);
+  *   3. connected components over that contracted graph (nodes ∝
+  *      affected clusters + batch — never members);
   *   4. members of affected clusters inherit their cluster node's new
   *      label with ONE broadcast-filtered scan of the label table
   *      (never shuffled; at 100 TB additionally bucketed/partition-
@@ -59,7 +61,7 @@ object ClusterMaintain {
     * (batch edges, batch node ids — each ∝ batch by the operator's
     * contract). Same sizing rationale as [[graft.streaming
     * .IngestStream.LocalRelabelMax]]: below it, the contracted graph
-    * is thousands of rows where the distributed frontier CC pays
+    * is thousands of rows where the distributed CC pays
     * several Spark scheduling rounds per iteration for microseconds
     * of actual work (measured round 15: the CC loop and its
     * checkpoints were the bulk of every lifecycle gate's per-batch
@@ -113,18 +115,13 @@ object ClusterMaintain {
     val edgesCk = batchEdges
       .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .localCheckpoint(eager = false)
-    val edgeTake = edgesCk
-      .limit((LocalMergeMax + 1).min(Int.MaxValue).toInt)
-      .collect()
-    if (edgeTake.length <= LocalMergeMax) {
-      val batchArr = batchNodes.select(col("id").cast("long"))
-        .limit((LocalMergeMax + 1).min(Int.MaxValue).toInt)
-        .collect().map(_.getLong(0))
-      if (batchArr.length <= LocalMergeMax)
-        return mergeBatchDeltaLocal(existing, batchArr,
-          edgeTake.map(r => (r.getLong(0), r.getLong(1))))
-    }
-    mergeBatchDeltaDistributed(existing, batchNodes, edgesCk)
+    val local = for {
+      edgeRows <- DriverOps.collectBounded(edgesCk, LocalMergeMax)
+      batchRows <- DriverOps.collectBounded(
+        batchNodes.select(col("id").cast("long")), LocalMergeMax)
+    } yield mergeBatchDeltaLocal(existing, batchRows.map(_.getLong(0)),
+      edgeRows.map(r => (r.getLong(0), r.getLong(1))))
+    local.getOrElse(mergeBatchDeltaDistributed(existing, batchNodes, edgesCk))
   }
 
   /** Driver-local contracted CC — the bounded fast path. The
@@ -136,7 +133,7 @@ object ClusterMaintain {
     * are the distributed path's, step for step: endpoints contract to
     * their prior cluster node (themselves when batch docs), edges
     * whose contracted endpoint is not a graph node are ignored (the
-    * frontier CC only labels its node set), component label = min
+    * distributed CC only labels its node set), component label = min
     * node id = min member id, merged size = Σ constituent prior
     * cluster sizes + batch members (per OCCURRENCE, matching the
     * distributed union's row arithmetic). The size fold relies on the

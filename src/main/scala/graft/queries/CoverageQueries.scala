@@ -847,8 +847,8 @@ object CoverageQueries {
     // highest-RESOLUTION copy (max pixels, ties → smaller id), the
     // media face of L38's keep-best-per-cluster (which keys on text
     // quality). Composes the existing machinery end to end over real
-    // image bytes: imageHashes (real decoders) → banded hamming →
-    // frontier CC → keep-best; per base the 24×24 PNG re-encode wins
+    // image bytes: imageHashes (real decoders) → banded hamming → CC
+    // → keep-best; per base the 24×24 PNG re-encode wins
     // over the two 16×16 variants, the unrelated singleton keeps
     // itself. Oracle: word-algebra fingerprints, brute-force pairs,
     // recursive-CTE CC, window keep-best — it never sees an image.

@@ -27,22 +27,20 @@ object CurationQueries {
       Clusters.simhashClusters(docs(s, dir), "doc_id", "text", maxDist = 3)
         .orderBy("doc_id")),
 
-    // Same cluster contract through the ALTERNATE CC scheme
-    // (large-star/small-star, O(log n) rounds — the adversarial-
-    // diameter path). Shares q_d_cc_clusters' oracle verbatim: both
-    // schemes must produce the identical component labeling.
+    // Same cluster contract through the DISTRIBUTED star rounds
+    // (localMax = 0 skips the bounded driver-local path that
+    // q_d_cc_clusters takes at this scale). Shares q_d_cc_clusters'
+    // oracle verbatim: both paths must produce the identical labeling.
     "q_d_cc_star" -> ((s, dir) =>
       Clusters.simhashClusters(docs(s, dir), "doc_id", "text",
-        maxDist = 3, cc = Clusters.connectedComponentsStar(_, _))
+        maxDist = 3, cc = Clusters.connectedComponents(_, _, localMax = 0L))
         .orderBy("doc_id")),
 
-    // Same cluster contract through the ADAPTIVE scheme (frontier
-    // with the measured crossover fallback to star, Clusters.scala's
-    // connectedComponentsAdaptive). Shares the same oracle verbatim:
-    // whichever path the heuristic takes, the labeling is identical.
+    // Same cluster contract through the one CC scheme with its default
+    // bound, passed explicitly. Shares the same oracle verbatim.
     "q_d_cc_adaptive" -> ((s, dir) =>
       Clusters.simhashClusters(docs(s, dir), "doc_id", "text",
-        maxDist = 3, cc = Clusters.connectedComponentsAdaptive(_, _))
+        maxDist = 3, cc = Clusters.connectedComponents(_, _))
         .orderBy("doc_id")),
 
     // INCREMENTAL cluster maintenance (L52): the batch slice
@@ -1817,9 +1815,10 @@ object CurationQueries {
         lit(" quant alpha hedge momentum arbitrage desk"))
         .otherwise(lit("")))
 
-  /** Transitive-closure cluster oracle shared by BOTH CC schemes
-    * (frontier q_d_cc_clusters and star q_d_cc_star): the labeling
-    * contract is scheme-independent, so one recursive CTE proves both.
+  /** Transitive-closure cluster oracle shared by every CC gate
+    * (q_d_cc_clusters on the local path, q_d_cc_star on the
+    * distributed rounds): the labeling contract is path-independent,
+    * so one recursive CTE proves both.
     */
   /** CTE chain ending in `lab(doc_id, cluster_id)` — shared by the
     * cluster oracle and the leakage-free split oracle.
@@ -2026,10 +2025,10 @@ object CurationQueries {
     // cluster = min reachable rep = min doc_id of the component.
     "q_d_cc_clusters" -> CcClustersOracle,
 
-    // identical contract, alternate CC scheme — SAME oracle
+    // identical contract, distributed CC rounds — SAME oracle
     "q_d_cc_star" -> CcClustersOracle,
 
-    // identical contract, adaptive frontier→star scheme — SAME oracle
+    // identical contract, default CC bound — SAME oracle
     "q_d_cc_adaptive" -> CcClustersOracle,
 
     // incremental batch merge (L52) — SAME oracle verbatim: the merged

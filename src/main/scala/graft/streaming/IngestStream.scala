@@ -413,14 +413,14 @@ object IngestStream {
     // pattern): a corpus-sized forget must be batched upstream, not
     // OOM the driver here (ADVICE r15).
     val idProj = ids.select("doc_id")
-    val idRows = idProj.distinct()
-      .limit((BucketedTable.MaxBroadcastKeys + 1).min(Int.MaxValue).toInt)
-      .collect()
-    require(idRows.length <= BucketedTable.MaxBroadcastKeys,
+    val idTake = DriverOps.collectBounded(idProj.distinct(),
+      BucketedTable.MaxBroadcastKeys)
+    require(idTake.isDefined,
       s"forget: forget list exceeds the broadcast bound (> " +
         s"${BucketedTable.MaxBroadcastKeys} distinct ids) — batch the " +
         "requests into multiple forget calls instead of forgetting a " +
         "corpus-sized set in one op")
+    val idRows = idTake.get
     val idSet = spark.createDataFrame(
       java.util.Arrays.asList(idRows: _*), idProj.schema)
 
@@ -448,23 +448,21 @@ object IngestStream {
           .join(broadcast(affected), Seq("cluster_id"))
           .select("doc_id").localCheckpoint()
         // survivor set, collected only if it fits the local bound
-        // (limit+1 probes the bound without a separate count)
-        val survTake = members
-          .join(broadcast(idSet), Seq("doc_id"), "left_anti")
-          .limit((LocalRelabelMax + 1).min(Int.MaxValue).toInt)
-          .collect()
-        val (relabeled, allKeys) = if (survTake.length <= LocalRelabelMax) {
+        val survTake = DriverOps.collectBounded(
+          members.join(broadcast(idSet), Seq("doc_id"), "left_anti"),
+          LocalRelabelMax)
+        val (relabeled, allKeys) = if (survTake.isDefined) {
           // small-subgraph fast path: a forget's affected set is
-          // typically thousands of rows, where the distributed
-          // frontier CC pays several Spark rounds of scheduling for
+          // typically thousands of rows, where the distributed CC
+          // pays several Spark rounds of scheduling for
           // microseconds of work — collect the (bounded) survivor
-          // fps and relabel driver-side (union-find; ClustersSpec
+          // fps and relabel driver-side (union-find; CurationSpec
           // pins label equality with the distributed scheme). A
           // survivor missing from the fp index (can't happen inside
           // the loop's invariants, but parity with the distributed
           // path, whose node set is the label store) labels as its
           // own singleton.
-          val survivorIds = survTake.map(_.getLong(0))
+          val survivorIds = survTake.get.map(_.getLong(0))
           val survDf = survivorIds.toSeq.toDF("doc_id")
           val fpMap = fpsTable(spark, statePath).read()
             .map(_.join(broadcast(survDf), Seq("doc_id"), "left_semi")

@@ -1471,19 +1471,18 @@ final class BucketedTable(spark: SparkSession, path: String,
   private def collectKeySet(keys: DataFrame, nb: Option[Int], op: String)
       : (DataFrame, Set[Long]) = {
     val proj = keys.select(col(keyCol))
-    val bounded = proj.distinct()
-      .limit((maxBroadcastKeys + 1).min(Int.MaxValue).toInt)
-    val rows = nb match {
+    val distinctKeys = proj.distinct()
+    val take = DriverOps.collectBounded(nb match {
       case Some(n) =>
-        bounded.select(col(keyCol), bucketOf(col(keyCol), n).as("__bucket"))
-          .collect()
-      case None => bounded.collect()
-    }
-    require(rows.length <= maxBroadcastKeys,
+        distinctKeys.select(col(keyCol), bucketOf(col(keyCol), n).as("__bucket"))
+      case None => distinctKeys
+    }, maxBroadcastKeys)
+    require(take.isDefined,
       s"BucketedTable.$op: batch key set exceeds the broadcast bound " +
         s"(> $maxBroadcastKeys distinct keys) — split the batch " +
         "upstream (smaller trigger) instead of broadcasting a " +
         "corpus-sized key set")
+    val rows = take.get
     import scala.jdk.CollectionConverters._
     val keyRows: java.util.List[org.apache.spark.sql.Row] =
       rows.map(r => org.apache.spark.sql.Row(r.get(0))).toSeq.asJava

@@ -37,8 +37,8 @@ class CurationSpec extends AnyFunSuite {
       .select("doc_id", "text")
     val fp = graft.dedup.Dedup.withSimhash(d, "doc_id", "text")
       .localCheckpoint()
-    // localMax = 0 forces the DISTRIBUTED frontier loop — the ground
-    // truth both local forms must match
+    // localMax = 0 forces the DISTRIBUTED rounds — the ground truth
+    // both local forms must match
     val want = Clusters.simhashClustersOf(fp, maxDist = 3,
         cc = Clusters.connectedComponents(_, _, localMax = 0L))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
@@ -61,9 +61,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("connected components on a random graph + a long path match union-find") {
     import spark.implicits._
-    // random sparse graph (fixed seed) UNION a 16-node path — the path
-    // needs 15 propagation rounds, driving the lazy-label chain through
-    // multiple plan resets (labels checkpoint every 4 rounds)
+    // random sparse graph (fixed seed) UNION a 16-node path
     val rnd = new scala.util.Random(11)
     val randomEdges = Seq.fill(120)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
       .filter { case (a, b) => a != b }
@@ -79,8 +77,7 @@ class CurationSpec extends AnyFunSuite {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(ra max rb) = ra min rb
     }
-    // localMax = 0: this test exists to drive the DISTRIBUTED lazy-
-    // label chain through multiple plan resets
+    // localMax = 0: the distributed rounds
     val got = Clusters.connectedComponents(
       nodeIds.toDF("id"), edges.toDF("a", "b"), localMax = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -92,78 +89,72 @@ class CurationSpec extends AnyFunSuite {
     assert(gotLocal == got)
   }
 
+  /** Checks [[Clusters.connectedComponents]] on each named case against
+    * union-find over the node-induced subgraph (an edge with an
+    * endpoint outside the node set joins nothing), labeled with each
+    * component's smallest id — on both the distributed rounds and the
+    * bounded driver-local path. */
+  private def assertCcMatchesUnionFind(
+      cases: Seq[(String, Seq[Long], Seq[(Long, Long)])]): Unit = {
+    val s = spark
+    import s.implicits._
+    def truth(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val isNode = nodes.toSet
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.filter { case (a, b) => isNode(a) && isNode(b) }.foreach {
+        case (a, b) =>
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) parent(ra max rb) = ra min rb
+      }
+      nodes.map(i => i -> find(i)).toMap
+    }
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    cases.foreach { case (name, nodeIds, edgeList) =>
+      val nodes = nodeIds.toDF("id")
+      val edges = edgeList.toDF("a", "b")
+      val want = truth(nodeIds, edgeList)
+      // localMax = 0 forces the distributed rounds past the bounded
+      // driver-local path the default takes at this size
+      assert(labels(Clusters.connectedComponents(nodes, edges, localMax = 0L)) == want,
+        s"$name: distributed rounds")
+      assert(labels(Clusters.connectedComponents(nodes, edges)) == want,
+        s"$name: driver-local path")
+    }
+  }
+
   test("star CC matches frontier CC on chains, cliques, random graphs") {
-    import spark.implicits._
+    // the star rounds are the one distributed scheme now; union-find
+    // is the reference the frontier labels were checked against
     val rnd = new scala.util.Random(23)
     val randomEdges = Seq.fill(150)((rnd.nextInt(250).toLong, rnd.nextInt(250).toLong))
       .filter { case (a, b) => a != b }
-    // a 300-node path: diameter 299 — frontier needs ~299 rounds
-    // (over its maxIter), star must land it in its 32-round budget
-    val pathEdges = (1000L until 1299L).map(i => (i, i + 1))
-    val nodes = ((0L until 250L) ++ (1000L to 1299L)).toDF("id")
-    val edges = (randomEdges ++ pathEdges).toDF("a", "b")
-    // localMax = 0: this test exists to drive the DISTRIBUTED star
-    // rounds (300-node path over frontier's budget)
-    val star = Clusters.connectedComponentsStar(nodes, edges, localMax = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val starLocal = Clusters.connectedComponentsStar(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(starLocal == star,
-      "bounded local fast path must label exactly like the star rounds")
-    // union-find ground truth
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    (randomEdges ++ pathEdges).foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(ra max rb) = ra min rb
-    }
-    val roots = ((0L until 250L) ++ (1000L to 1299L))
-      .map(i => i -> find(i)).toMap
-    // same partition AND same canonical (min-id) labels
-    assert(star == roots.map { case (i, r) =>
-      i -> roots.filter(_._2 == r).keys.min })
-  }
-
-  test("adaptive CC: frontier on short diameters, star fallback on long") {
-    import spark.implicits._
-    // short-diameter: triangle + singleton — frontier converges well
-    // inside switchAfter, no fallback fires
-    val nodes = Seq(1L, 2L, 3L, 9L).toDF("id")
-    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("a", "b")
-    val got = Clusters.connectedComponentsAdaptive(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 9L))
-    // long diameter: a 40-node path needs 39 frontier rounds — with
-    // switchAfter=4 the frontier budget trips and the star restart
-    // must still label the whole path with its min id
-    val pathNodes = (100L to 140L).toDF("id")
-    val pathEdges = (100L until 140L).map(i => (i, i + 1)).toDF("a", "b")
-    // localMax = 0: the fallback only trips on the distributed path
-    // (the bounded local path converges without iterating)
-    val got2 = Clusters.connectedComponentsAdaptive(
-      pathNodes, pathEdges, switchAfter = 4, localMax = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got2 == (100L to 140L).map(_ -> 100L).toMap)
-    val got2Local = Clusters.connectedComponentsAdaptive(
-      pathNodes, pathEdges, switchAfter = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got2Local == got2)
+    assertCcMatchesUnionFind(Seq(
+      // diameter 299: min-label propagation would need ~299 rounds;
+      // the star rounds land it inside their 32-round budget
+      ("300-node path + random edges", (0L until 250L) ++ (1000L to 1299L),
+        randomEdges ++ (1000L until 1299L).map(i => (i, i + 1))),
+      ("40-node path", 100L to 140L, (100L until 140L).map(i => (i, i + 1))),
+      ("triangle + singleton", Seq(1L, 2L, 3L, 9L),
+        Seq((1L, 2L), (2L, 3L), (1L, 3L)))))
   }
 
   test("star CC handles empty edge sets and self-loops") {
-    import spark.implicits._
-    val nodes = Seq(1L, 2L, 3L).toDF("id")
-    val noEdges = Seq.empty[(Long, Long)].toDF("a", "b")
-    val got = Clusters.connectedComponentsStar(nodes, noEdges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
-    val loops = Seq((1L, 1L), (2L, 3L)).toDF("a", "b")
-    val got2 = Clusters.connectedComponentsStar(nodes, loops)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got2 == Map(1L -> 1L, 2L -> 2L, 3L -> 2L))
+    assertCcMatchesUnionFind(Seq(
+      ("empty edge set", Seq(1L, 2L, 3L), Seq.empty),
+      ("self-loops", Seq(1L, 2L, 3L), Seq((1L, 1L), (2L, 3L)))))
+  }
+
+  test("CC: edges to non-node endpoints join nothing, on both paths") {
+    // 50 and 0 are not nodes: 1 and 2 stay apart, and 3, 4 take 3
+    // (not 0) as their label
+    assertCcMatchesUnionFind(Seq(
+      ("edges to non-node endpoints", Seq(1L, 2L, 3L, 4L),
+        Seq((1L, 50L), (50L, 2L), (0L, 3L), (3L, 4L)))))
   }
 
   test("simhash clusters agree with a transitive closure of the pairs") {

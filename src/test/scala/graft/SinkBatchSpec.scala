@@ -2,11 +2,9 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -38,45 +36,6 @@ class SinkBatchSpec extends AnyFunSuite {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  /** Every job a listener sees, as its local properties. A marker job
-    * run after `body` flushes the listener bus: events arrive in
-    * order, so once the marker is seen every earlier job has been.
-    */
-  private def jobsDuring(body: => Unit): Seq[java.util.Properties] = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[java.util.Properties]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).getOrElse(new java.util.Properties))
-    }
-    val marker = java.util.UUID.randomUUID.toString
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty("graft.spec.marker", marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.spec.marker", null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      def done = seen.asScala.exists(_.getProperty("graft.spec.marker") == marker)
-      while (!done && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(done, "listener bus did not deliver the marker job")
-      seen.asScala.toSeq
-        .filter(_.getProperty("graft.spec.marker") != marker)
-    } finally sc.removeSparkListener(listener)
-  }
-
-  /** Jobs run on this thread while `body` ran: the thread's jobs carry
-    * a property no other thread sets.
-    */
-  private def jobsOnThisThread(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID.toString
-    jobsDuring {
-      sc.setLocalProperty("graft.spec.tag", tag)
-      try body finally sc.setLocalProperty("graft.spec.tag", null)
-    }.count(_.getProperty("graft.spec.tag") == tag)
-  }
-
   /** The session a foreachBatch input carries: Structured Streaming
     * runs a micro-batch without adaptive execution, so no shuffle map
     * stage becomes a job of its own. Batches are RDD-backed like the
@@ -100,12 +59,12 @@ class SinkBatchSpec extends AnyFunSuite {
     val root = tmp("graft_sink_jobs_")
     // batch 0 lands both tables; batch 1 updates k1 and adds k3, so it
     // pays the prior-bucket read and the outbox read too
-    val first = jobsOnThisThread(processBatch(
+    val first = SparkJobs.onThisThread(processBatch(
       Seq(evRow("k1", 1, t0), evRow("k2", 1, t0 + 1)), 0L, root))
-    val update = jobsOnThisThread(processBatch(
+    val update = SparkJobs.onThisThread(processBatch(
       Seq(evRow("k1", 2, t0 + 10), evRow("k3", 1, t0 + 11)), 1L, root))
-    val empty = jobsOnThisThread(processBatch(Seq.empty, 2L, root))
-    val replay = jobsOnThisThread(processBatch(
+    val empty = SparkJobs.onThisThread(processBatch(Seq.empty, 2L, root))
+    val replay = SparkJobs.onThisThread(processBatch(
       Seq(evRow("k1", 2, t0 + 10), evRow("k3", 1, t0 + 11)), 1L, root))
     assert(first <= 4 && update <= 4,
       s"data batches ran $first and $update jobs")
@@ -145,7 +104,7 @@ class SinkBatchSpec extends AnyFunSuite {
     val src = s"$root/src"
     postBatches.zipWithIndex.foreach { case (b, i) => writePosts(src, s"b$i", b) }
     var q: StreamingQuery = null
-    val jobs = jobsDuring {
+    val jobs = SparkJobs.during {
       q = runSink(spark, src, root)
       try q.processAllAvailable() finally q.stop()
     }
