@@ -58,16 +58,26 @@ import graft.streaming.DriverOps
 object ClusterMaintain {
 
   /** Bound on the rows the LOCAL contracted-CC fast path may collect
-    * (batch edges, batch node ids — each ∝ batch by the operator's
-    * contract). Same sizing rationale as [[graft.streaming
-    * .IngestStream.LocalRelabelMax]]: below it, the contracted graph
-    * is thousands of rows where the distributed CC pays
-    * several Spark scheduling rounds per iteration for microseconds
-    * of actual work (measured round 15: the CC loop and its
-    * checkpoints were the bulk of every lifecycle gate's per-batch
-    * job count); above it, the distributed path runs unchanged. Both
-    * paths produce identical labels (min-id components over the same
-    * contracted graph — ClusterMaintainSpec pins the equality).
+    * (batch edges and node ids, each ∝ batch by the operator's
+    * contract, and the affected clusters' members). Same sizing
+    * rationale as [[graft.streaming.IngestStream.LocalRelabelMax]]:
+    * below it, the contracted graph is thousands of rows where the
+    * distributed CC pays several Spark scheduling rounds per
+    * iteration for microseconds of actual work (measured round 15:
+    * the CC loop and its checkpoints were the bulk of every lifecycle
+    * gate's per-batch job count); above it, the distributed path
+    * runs unchanged. Both paths produce identical labels (min-id
+    * components over the same contracted graph — ClusterMaintainSpec
+    * pins the equality). The text ingest loop applies the same bound
+    * to its batch facts and its store edges, where it chooses between
+    * its driver-side and its distributed path ([[graft.streaming
+    * .IngestStream.processBatch]]), and, from counts it already holds,
+    * to the affected clusters' members and the straddler shard's rows.
+    * Measured on that loop (4 vCPUs, 4 GB driver heap, one run each):
+    * a batch of 10k / 50k / 100k docs over a prior batch of the same
+    * size took 8.0 / 12.2 / 23.0 s on the driver-side path and 11.1 /
+    * 26.6 / 72.5 s on the distributed one, so the driver-side path
+    * still wins at the bound.
     */
   val LocalMergeMax: Long = 100000L
 
@@ -112,24 +122,34 @@ object ClusterMaintain {
     // the former count-then-collect pair (round 16: one job saved per
     // merge; the computed partitions persist into the checkpoint, so
     // the distributed fallback still reuses them).
-    val edgesCk = batchEdges
-      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .localCheckpoint(eager = false)
+    val edgesCk = materializedEdges(batchEdges)
     val local = for {
       edgeRows <- DriverOps.collectBounded(edgesCk, LocalMergeMax)
       batchRows <- DriverOps.collectBounded(
         batchNodes.select(col("id").cast("long")), LocalMergeMax)
     } yield mergeBatchDeltaLocal(existing, batchRows.map(_.getLong(0)),
-      edgeRows.map(r => (r.getLong(0), r.getLong(1))))
+      edgeRows.map(r => (r.getLong(0), r.getLong(1))), LocalMergeMax)
     local.getOrElse(mergeBatchDeltaDistributed(existing, batchNodes, edgesCk))
   }
+
+  /** The edge set as the distributed path takes it: long endpoints,
+    * checkpointed lazily — the first action computes it once and every
+    * later join reads the checkpoint.
+    */
+  private[graft] def materializedEdges(batchEdges: DataFrame): DataFrame =
+    batchEdges
+      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+      .localCheckpoint(eager = false)
 
   /** Driver-local contracted CC — the bounded fast path. The
     * contracted graph (affected-cluster reps + batch ids, batch
     * edges) is ∝ batch by contract; everything except the one
-    * endpoint→prior-cluster lookup and the final member relabel scan
-    * computes on the driver, and the relabel/affected frames land as
-    * LocalRelations whose broadcast builds are job-free. Semantics
+    * endpoint→prior-cluster lookup and the member scan computes on
+    * the driver, and the changed rows land as a LocalRelation while
+    * the affected clusters' members fit `memberMax`. Their count is
+    * the sum of the stored sizes, known before the scan, so the choice
+    * costs no probe; past it the members are relabeled by a broadcast
+    * join. Semantics
     * are the distributed path's, step for step: endpoints contract to
     * their prior cluster node (themselves when batch docs), edges
     * whose contracted endpoint is not a graph node are ignored (the
@@ -155,10 +175,14 @@ object ClusterMaintain {
     * corrupted store is a restore/fsck case ([[graft.streaming
     * .StateInspect]]), not something to mask batch by batch.
     * ClusterMaintainSpec pins local == distributed on intact stores.
+    *
+    * The ingest loop calls it directly with edges it built on the
+    * driver ([[graft.streaming.IngestStream.processBatch]]'s bounded
+    * path), so its selection between the paths stays in the loop.
     */
-  private def mergeBatchDeltaLocal(existing: DataFrame,
-      batchArr: Array[Long], edgeArr: Array[(Long, Long)])
-      : (DataFrame, DataFrame) = {
+  private[graft] def mergeBatchDeltaLocal(existing: DataFrame,
+      batchArr: Array[Long], edgeArr: Array[(Long, Long)],
+      memberMax: Long): (DataFrame, DataFrame) = {
     val spark = existing.sparkSession
     import spark.implicits._
     val epIds = {
@@ -167,12 +191,12 @@ object ClusterMaintain {
       s.toArray
     }
     // endpoint → (prior cluster, prior size): the one ∝-batch lookup
-    // over the label store (broadcast build over a LocalRelation is
-    // driver-side — no job; the join scan is the job)
+    // over the label store. An IN-set filter, not a broadcast join: a
+    // broadcast build runs its own Spark job even over a LocalRelation
     val epRows =
       if (epIds.isEmpty) Array.empty[(Long, Long, Long)]
       else existing
-        .join(broadcast(epIds.toSeq.toDF("doc_id")), Seq("doc_id"))
+        .filter(col("doc_id").isin(epIds.toSeq: _*))
         .select(col("doc_id").cast("long"), col("cluster_id").cast("long"),
           col("cluster_size").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -215,24 +239,38 @@ object ClusterMaintain {
       val l = labelOf(b); sizeOf(l) = sizeOf.getOrElse(l, 0L) + 1L
     }
     // members of affected clusters inherit their cluster's new label
-    // and size via ONE broadcast join over the label store; batch rows
-    // are a LocalRelation
-    val relabelDf = affectedIds.toSeq
-      .map(c => (c, labelOf(c), sizeOf(labelOf(c))))
-      .toDF("cluster_id", "ncid", "nsize")
-    val memberChanged = existing
-      .join(broadcast(relabelDf), Seq("cluster_id"))
-      .select(col("doc_id"), col("ncid").as("cluster_id"),
-        col("nsize").as("cluster_size"))
-    val batchChanged = batchArr.toSeq
-      .map(b => (b, labelOf(b), sizeOf(labelOf(b))))
-      .toDF("doc_id", "cluster_id", "cluster_size")
-    (memberChanged.unionByName(batchChanged),
-      affectedIds.toSeq.toDF("cluster_id"))
+    // and size. Their count is known: Σ prior sizes of the affected
+    // clusters. While it fits `memberMax`, ONE IN-set scan of the
+    // label store collects them and the whole changed set is a
+    // LocalRelation (a MERGE then probes its keys on the driver); past
+    // it, one broadcast join over the label store relabels them lazily
+    val batchChanged =
+      batchArr.toSeq.map(b => (b, labelOf(b), sizeOf(labelOf(b))))
+    val changed =
+      if (affectedIds.iterator.map(priorSize).sum <= memberMax)
+        (existing
+          .filter(col("cluster_id").isin(affectedIds.toSeq: _*))
+          .select(col("doc_id").cast("long"), col("cluster_id").cast("long"))
+          .collect().toSeq.map { r =>
+            val l = labelOf(r.getLong(1))
+            (r.getLong(0), l, sizeOf(l))
+          } ++ batchChanged).toDF("doc_id", "cluster_id", "cluster_size")
+      else {
+        val relabelDf = affectedIds.toSeq
+          .map(c => (c, labelOf(c), sizeOf(labelOf(c))))
+          .toDF("cluster_id", "ncid", "nsize")
+        existing.join(broadcast(relabelDf), Seq("cluster_id"))
+          .select(col("doc_id"), col("ncid").as("cluster_id"),
+            col("nsize").as("cluster_size"))
+          .unionByName(
+            batchChanged.toDF("doc_id", "cluster_id", "cluster_size"))
+      }
+    (changed, affectedIds.toSeq.toDF("cluster_id"))
   }
 
   /** The distributed path — unchanged semantics, taken when the batch
-    * outgrows [[LocalMergeMax]].
+    * outgrows [[LocalMergeMax]]. `edges` come from
+    * [[materializedEdges]].
     */
   private[graft] def mergeBatchDeltaDistributed(existing: DataFrame,
       batchNodes: DataFrame, edges: DataFrame): (DataFrame, DataFrame) = {

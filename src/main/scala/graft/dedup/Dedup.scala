@@ -853,6 +853,48 @@ object Dedup {
       maxDist: Int = 3): DataFrame =
     crossBandedEdgesOf(bFp, rFp, "fp", bandBits = 16, maxDist)
 
+  /** [[crossNearEdgesOf]] for a batch already on the driver (the
+    * ingest loop's bounded path): `bReps` are the batch's (rep doc,
+    * simhash) pairs, one per distinct fingerprint. Their band index —
+    * band key → the reps carrying it — ships as a broadcast variable,
+    * and ONE map-side scan of the stored index looks each stored
+    * fingerprint's four band keys up in it and keeps the reps within
+    * `maxDist`: no shuffle, and no broadcast exchange (whose build is
+    * a Spark job of its own, even over a LocalRelation). The edges
+    * (a = batch rep doc, b = stored doc), each pair once, come back
+    * through [[graft.streaming.DriverOps.collectBounded]]: None when
+    * there are more than `max`. The broadcast is destroyed once they
+    * are in. The stored side is not collapsed to reps: its
+    * identical-fp members already share a cluster, so their extra
+    * edges contract to the same node in [[ClusterMaintain]].
+    */
+  def crossNearEdgesLocal(bReps: Seq[(Long, Long)], rFp: DataFrame,
+      maxDist: Int, max: Long): Option[Seq[(Long, Long)]] = {
+    require(maxDist <= 3, "8-bit banding guarantees only d <= 3")
+    def bandKey(fp: Long, b: Int): Long =
+      b.toLong << 8 | ((fp >> (b * 8)) & 255L)
+    val index = bReps
+      .flatMap { case (a, fp) =>
+        (0 until 4).map(b => bandKey(fp, b) -> (a, fp))
+      }
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toArray }
+    val bc = rFp.sparkSession.sparkContext.broadcast(index)
+    try {
+      val near = udf { (fp: Long) =>
+        val idx = bc.value
+        (0 until 4).iterator
+          .flatMap(b => idx.getOrElse(bandKey(fp, b), Array.empty[(Long, Long)]))
+          .collect {
+            case (a, bfp) if java.lang.Long.bitCount(bfp ^ fp) <= maxDist => a
+          }
+          .toSeq.distinct
+      }
+      graft.streaming.DriverOps.collectBounded(
+        rFp.select(explode(near(col("simhash"))).as("a"), col("doc_id").as("b")),
+        max).map(_.map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    } finally bc.destroy()
+  }
+
   private def crossBandedEdgesOf(bFp: DataFrame, rFp: DataFrame,
       fpCol: String, bandBits: Int, maxDist: Int): DataFrame = {
     require(maxDist <= 3,

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deterministic sampling for training-data curation.
   *
@@ -351,7 +352,9 @@ object Sampling {
     * violations (a backfill arriving mid-range would silently shift
     * every later shard) raise a named error from inside the plan.
     * The manifest aggregates to ONE broadcast row (lazy subplan, the
-    * shardByTokens offsets convention).
+    * shardByTokens offsets convention). The streaming publish loop
+    * runs it only for a batch past its driver-side bound; below it,
+    * [[shardAppendLocal]] computes the same assignment.
     */
   def shardAppend(batch: DataFrame, idCol: String, tokensCol: String,
       budget: Long, bucketWidth: Long, manifest: DataFrame): DataFrame = {
@@ -371,6 +374,107 @@ object Sampling {
             s"(__prior_tokens + __cum - __btok) div $budget")))
       .drop("__prior_tokens", "__max_pub", "__cum", "__btok")
   }
+
+  /** A [[shardManifest]] row: (shard_id, n_docs, n_tokens, min_id,
+    * max_id).
+    */
+  type ManifestRow = (Long, Long, Long, Long, Long)
+
+  /** The stored type of [[shardManifest]] rows, for readers that skip
+    * the parquet footer inference.
+    */
+  val ManifestSchema: StructType = StructType(
+    Seq("shard_id", "n_docs", "n_tokens", "min_id", "max_id")
+      .map(StructField(_, LongType)))
+
+  /** [[shardAppend]] on the driver, for a batch its caller has already
+    * collected (the ingest loop's bounded path): `batch` is (id,
+    * tokens) rows, `manifest` the stored manifest's rows. The same
+    * arithmetic — a prefix sum in id order, shard = (prior tokens +
+    * cum − tokens) div budget — and the same named errors, raised on
+    * the smallest offending id. Returns (id, tokens, shard_id) in id
+    * order; CurationSpec's oracle-gated [[shardAppend]] is the
+    * reference (IngestBatchSpec pins the equality).
+    */
+  private[graft] def shardAppendLocal(batch: Seq[(Long, Long)], idCol: String,
+      tokensCol: String, budget: Long, manifest: Seq[ManifestRow])
+      : Seq[(Long, Long, Long)] = {
+    require(budget > 0, s"budget must be positive: $budget")
+    val priorTokens = manifest.iterator.map(_._3).sum
+    val maxPub = if (manifest.isEmpty) -1L else manifest.iterator.map(_._5).max
+    var cum = 0L
+    batch.sortBy(_._1).map { case (id, tok) =>
+      if (id < 0) throw new IllegalArgumentException(
+        s"shardByTokens: $idCol must be non-null and non-negative, " +
+          s"$tokensCol non-null; got ($idCol=$id, $tokensCol=$tok)")
+      if (id <= maxPub) throw new IllegalArgumentException(
+        s"shardAppend: $idCol must exceed the published max id $maxPub; " +
+          s"got $idCol=$id")
+      cum += tok
+      (id, tok, (priorTokens + cum - tok) / budget)
+    }
+  }
+
+  /** [[shardManifest]] of a driver-side assignment ([[shardAppendLocal]]'s
+    * output).
+    */
+  private[graft] def shardManifestLocal(assigned: Seq[(Long, Long, Long)])
+      : Seq[ManifestRow] =
+    assigned.groupBy(_._3).iterator.map { case (s, rs) =>
+      (s, rs.size.toLong, rs.iterator.map(_._2).sum,
+        rs.iterator.map(_._1).min, rs.iterator.map(_._1).max)
+    }.toSeq
+
+  /** The manifest after an append: the `prior` rows and the batch's
+    * per-shard facts, folded per shard — the straddler appears on both
+    * sides and sums. In shard order.
+    */
+  private[graft] def foldManifest(prior: Seq[ManifestRow],
+      batch: Seq[ManifestRow]): Seq[ManifestRow] =
+    (prior ++ batch).groupBy(_._1).iterator
+      .map { case (s, rs) =>
+        (s, rs.iterator.map(_._2).sum, rs.iterator.map(_._3).sum,
+          rs.iterator.map(_._4).min, rs.iterator.map(_._5).max)
+      }.toSeq.sortBy(_._1)
+
+  /** [[appendShardFiles]] for a driver-side assignment (id order, so
+    * the first row's shard is the straddler — no probe job). The
+    * straddler's stored rows are read once with their known type and
+    * deduped on the driver with the batch (the replay-idempotence of
+    * the union dedup), and every touched shard lands in ONE write job:
+    * a single task writes one file per shard directory, the layout the
+    * keyed repartition gives. How many rows the straddler holds is
+    * known from `manifest` (the prior manifest the assignment was
+    * made against; a replayed batch may have added its own rows, at
+    * most the batch again): past `maxRows`, the batch goes through
+    * [[appendShardFiles]] instead.
+    */
+  private[graft] def appendShardFilesLocal(spark: SparkSession,
+      assigned: Seq[(Long, Long, Long)], idCol: String, tokensCol: String,
+      dest: String, manifest: Seq[ManifestRow], maxRows: Long): Unit =
+    assigned.headOption.foreach { case (_, _, straddler) =>
+      import spark.implicits._
+      val stored = manifest.collectFirst {
+        case m if m._1 == straddler => m._2
+      }.getOrElse(0L)
+      if (stored > maxRows) appendShardFiles(
+        assigned.toDF(idCol, tokensCol, "shard_id"), idCol, tokensCol, dest)
+      else {
+        val dir = new java.io.File(s"$dest/shard_id=$straddler")
+        val existing =
+          if (!dir.isDirectory) Seq.empty[(Long, Long, Long)]
+          else spark.read
+            .schema(StructType(Seq(StructField(idCol, LongType),
+              StructField(tokensCol, LongType))))
+            .parquet(dir.getPath).collect().toSeq
+            .map(r => (r.getLong(0), r.getLong(1), straddler))
+        (existing ++ assigned).distinctBy(_._1)
+          .toDF(idCol, tokensCol, "shard_id").coalesce(1)
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("shard_id").parquet(dest)
+      }
+    }
 
   /** L56's WRITER — land the assignment as the partitioned on-disk
     * layout it exists to produce (one `shard_id=N` directory per
@@ -406,7 +510,8 @@ object Sampling {
     * dedups on the id, so re-running the same batch after a crash
     * (the batch's rows already landed in the straddler) rewrites the
     * same content instead of duplicating — the property the streaming
-    * publish loop's crash contract rests on.
+    * publish loop's crash contract rests on. That loop writes through
+    * [[appendShardFilesLocal]] while its batch fits the driver.
     */
   def appendShardFiles(assignedBatch: DataFrame, idCol: String,
       tokensCol: String, dest: String): Unit = {

@@ -1815,14 +1815,6 @@ object CurationQueries {
         lit(" quant alpha hedge momentum arbitrage desk"))
         .otherwise(lit("")))
 
-  /** Transitive-closure cluster oracle shared by every CC gate
-    * (q_d_cc_clusters on the local path, q_d_cc_star on the
-    * distributed rounds): the labeling contract is path-independent,
-    * so one recursive CTE proves both.
-    */
-  /** CTE chain ending in `lab(doc_id, cluster_id)` — shared by the
-    * cluster oracle and the leakage-free split oracle.
-    */
   /** [[CcLabCte]] over a FILTERED document subset: CC must run on the
     * subset's own pair graph (a component connected only through an
     * excluded doc must not merge, and min-id labels must come from
@@ -1857,6 +1849,9 @@ object CurationQueries {
           SELECT fp.doc_id, replab.cluster_id
           FROM fp JOIN rp USING (simhash) JOIN replab USING (rep))"""
 
+  /** CTE chain ending in `lab(doc_id, cluster_id)` — shared by the
+    * cluster oracle and the leakage-free split oracle.
+    */
   private val CcLabCte: String =
     s"""${DataOpsQueries.SimhashCte},
         rp AS (SELECT simhash, min(doc_id) AS rep FROM fp GROUP BY simhash),
@@ -1875,6 +1870,11 @@ object CurationQueries {
           SELECT fp.doc_id, replab.cluster_id
           FROM fp JOIN rp USING (simhash) JOIN replab USING (rep))"""
 
+  /** Transitive-closure cluster oracle shared by every CC gate
+    * (q_d_cc_clusters on the local path, q_d_cc_star on the
+    * distributed rounds): the labeling contract is path-independent,
+    * so one recursive CTE proves both.
+    */
   private val CcClustersOracle: String =
     s"""WITH RECURSIVE $CcLabCte,
         sz AS (SELECT cluster_id, count(*) AS cluster_size FROM lab GROUP BY 1)

@@ -1,5 +1,12 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import scala.util.Failure
+
+import org.apache.spark.FutureAction
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** Driver-side helpers of the state loops: overlapping independent
@@ -62,15 +69,62 @@ private[graft] object DriverOps {
       } finally pool.shutdown()
     }
 
-  /** The rows of `df` if it has at most `max` of them, else None. One
-    * action: `limit(max + 1)` is both the bound probe and the collect
-    * (no count first), so a frame over the bound never reaches the
-    * driver whole. Each caller keeps its own fallback or named error
+  /** The rows of `df` if it has at most `max` of them, else None.
+    * ONE Spark job for any partition count. Every task takes at most
+    * `max + 1` rows of its partition; the driver adds up the rows as
+    * the tasks finish, and once the total passes the bound it drops
+    * them and cancels the job. Past the bound the driver therefore
+    * receives at most `max + 1` rows from each task still running at
+    * the cancel (one per executor core), and keeps none.
+    * (`limit(max + 1).collect()` scans one partition, then four, then
+    * the rest: 2-3 jobs on a multi-partition frame.) Rows keep
+    * partition order. A frame that plans to a LocalRelation is read
+    * without a job. Each caller keeps its own fallback or named error
     * for None.
     */
   def collectBounded(df: DataFrame, max: Long): Option[Array[Row]] = {
-    // clamp before the + 1: Long.MaxValue + 1 wraps to a limit of 0
-    val rows = df.limit((max.min(Int.MaxValue - 1L) + 1).toInt).collect()
-    if (rows.length <= max) Some(rows) else None
+    // clamp before the + 1: Long.MaxValue + 1 wraps to a take of 0
+    val take = (max.min(Int.MaxValue - 1L) + 1).toInt
+    localRows(df) match {
+      case Some(rows) => if (rows.length <= max) Some(rows) else None
+      case None =>
+        val rdd = df.rdd
+        val parts = new Array[Array[Row]](rdd.getNumPartitions)
+        var total = 0L
+        val over = new AtomicBoolean(false)
+        val job = new AtomicReference[FutureAction[Unit]]
+        // runs on the scheduler's thread, one finished task at a time;
+        // a task finishing before `job` is set is cancelled below
+        val onResult = (i: Int, part: Array[Row]) => if (!over.get) {
+          total += part.length
+          if (total <= max) parts(i) = part
+          else {
+            over.set(true)
+            Option(job.get).foreach(_.cancel())
+          }
+        }
+        job.set(df.sparkSession.sparkContext.submitJob(rdd,
+          (it: Iterator[Row]) => it.take(take).toArray,
+          parts.indices, onResult, ()))
+        if (over.get) job.get.cancel()
+        // a failure surfaces as `runJob` raises it, unwrapped; the
+        // cancel's own failure means "over the bound"
+        Await.ready(job.get, Duration.Inf).value.get match {
+          case Failure(e) if !over.get => throw e
+          case _ => if (over.get) None else Some(parts.flatten)
+        }
+    }
   }
+
+  /** The rows of `df` when its optimized plan is a LocalRelation —
+    * driver-side data under driver-evaluable projections and filters,
+    * which `collect` returns without a Spark job — else None.
+    */
+  def localRows(df: DataFrame): Option[Array[Row]] =
+    if (isLocal(df)) Some(df.collect()) else None
+
+  /** Whether `df`'s optimized plan is a LocalRelation. */
+  def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 }

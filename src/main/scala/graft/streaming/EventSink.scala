@@ -28,10 +28,13 @@ object EventSink {
     * every due row (the reference's retry-loop semantics), so its
     * state is ∝ undelivered backlog, not ∝ corpus — at scale the done
     * rows would be partition-pruned by status, which the snapshot
-    * stand-in does not model.
+    * stand-in does not model. The handle carries the stored rows' type
+    * (the update rows are [[EventRow]]s), so its reads skip the
+    * parquet footer inference.
     */
   def eventsTable(spark: SparkSession, path: String): BucketedTable =
-    new BucketedTable(spark, path, "eventKey", 16)
+    new BucketedTable(spark, path, "eventKey", 16,
+      rowSchema = Some(Encoders.product[EventRow].schema))
 
   /** Bucket-growth maintenance for the events store — the sink-side
     * analogue of [[IngestStream.MaintainConfig]]: every `every`
@@ -75,7 +78,7 @@ object EventSink {
   }
 
   /** The outbox's row type: what [[stepOutbox]] writes and the sink's
-    * snapshot read takes in place of a footer inference.
+    * outbox handle reads in place of a footer inference.
     */
   private val OutboxSchema = Encoders.product[OutboxEntry].schema
 
@@ -129,7 +132,7 @@ object EventSink {
       maintain: EventsMaintain): Unit = {
     val spark = batch.sparkSession
     val eventsT = eventsTable(spark, eventsPath)
-    val outboxTable = new SnapshotTable(spark, outboxPath)
+    val outboxTable = new SnapshotTable(spark, outboxPath, Some(OutboxSchema))
     def runMaintenance(): Unit = if (maintain.due(batchId)) {
       if (maintain.maxRowsPerBucket > 0)
         eventsT.growIfOversized(maintain.maxRowsPerBucket)
@@ -169,9 +172,9 @@ object EventSink {
       // rows of the buckets the batch's keys hash into, and only
       // those buckets are rewritten — mergeEvents IS the resolve
       // function, so the commit costs one pruned read + one write;
-      // the stored rows have the update rows' type, so the prior
-      // read needs no footer inference
-      eventsT.mergeResolve(updates, batchId, Some(updates.schema))(mergeEvents)
+      // the handle carries the stored rows' type, so the prior read
+      // needs no footer inference
+      eventsT.mergeResolve(updates, batchId)(mergeEvents)
 
     // the outbox step stays strictly AFTER the events commit — NOT a
     // DriverOps.parallel candidate (review r16): stepOutbox invokes
@@ -186,7 +189,7 @@ object EventSink {
       // existing row wins), then run one delivery + recovery pass over
       // everything due
       val enqueued = outboxEntriesFor(updates)
-      val all = outboxTable.read(OutboxSchema) match {
+      val all = outboxTable.read() match {
         case Some(cur) =>
           val w = Window.partitionBy("id").orderBy(col("__new").asc)
           cur.withColumn("__new", lit(0))

@@ -3,8 +3,11 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 
-import graft.dedup.{ClusterMaintain, Dedup}
+import graft.dedup.{ClusterMaintain, Clusters, Dedup}
+import graft.operators.Sampling
 
 /** The PRODUCTION ingest loop for the duplicate-cluster label store:
   * a STREAM of document batches drives the L49→L40→L52 chain, with
@@ -23,10 +26,21 @@ import graft.dedup.{ClusterMaintain, Dedup}
   *   2. L40 — fingerprint the new docs and band-probe them against
   *      the STORED index (cost ∝ batch; the index never re-shuffles
   *      under the bucketed layout, BucketingSpec);
-  *   3. L52 — [[ClusterMaintain.mergeBatch]] folds the batch into the
-  *      stored labeling (contracted-graph CC, ∝ batch). An EMPTY
-  *      state bootstraps correctly: with no existing clusters the
-  *      merge IS a from-scratch CC of the first batch.
+  *   3. L52 — the contracted-graph merge ([[ClusterMaintain]]) folds
+  *      the batch into the stored labeling (∝ batch). An EMPTY state
+  *      bootstraps correctly: with no existing clusters the merge IS a
+  *      from-scratch CC of the first batch.
+  *
+  * The batch's arithmetic is paid once, on the driver: ONE bounded
+  * collect takes the new docs' (doc_id, simhash, n_tok) facts, and
+  * while they — and the batch's edges to the stored index — fit
+  * [[ClusterMaintain.LocalMergeMax]], the within-batch components,
+  * the contracted merge, the shard assignment and the manifest fold
+  * all run driver-side (Drizzle's rule: pay coordination once per
+  * group of work, not once per step). A batch past the bound takes
+  * the distributed path, with the same results (IngestBatchSpec runs
+  * both over the same batches). docs/OPERATIONS.md "Ingest
+  * micro-batch" has the job budget.
   *
   * The end-state contract — streaming over any batch partitioning of
   * a corpus produces the IDENTICAL label table to one from-scratch
@@ -71,10 +85,12 @@ object IngestStream {
     * corpus (the outbox concession — a bounded sidecar, thousands of
     * rows at 100 TB), while the shard BYTES written stay ∝ batch
     * (new directories + the straddler, [[graft.operators.Sampling
-    * .appendShardFiles]]). Crash contract: files land first (their
-    * write is replay-idempotent — same deterministic rows, straddler
-    * union dedups), the manifest commit is the batch-id gate, so a
-    * crash between the two replays the file write and then commits.
+    * .appendShardFilesLocal]] on the bounded path, [[graft.operators
+    * .Sampling.appendShardFiles]] past it). Crash contract: files land
+    * first (their write is replay-idempotent — same deterministic
+    * rows, straddler union dedups), the manifest commit is the
+    * batch-id gate, so a crash between the two replays the file write
+    * and then commits.
     */
   final case class PublishConfig(dest: String, budget: Long,
       bucketWidth: Long = 32L)
@@ -172,21 +188,34 @@ object IngestStream {
     */
   val LocalRelabelMax = 100000L
 
+  private def longs(names: String*): Seq[StructField] =
+    names.map(StructField(_, LongType))
+
   /** The three state tables under `statePath` (the shape both the
-    * loop and its readers share).
+    * loop and its readers share), plus the publish manifest. Each
+    * handle carries its stored row type, so every read of it — the
+    * loop's, forget's, maintenance's, a reader's — skips the parquet
+    * footer inference, a one-task Spark job per read. The label store
+    * and the snapshot have the same rows under the media loop; its fp
+    * index does not ([[MediaIngest.fpsTable]]).
     */
   def labelsTable(spark: org.apache.spark.sql.SparkSession,
       statePath: String): BucketedTable =
-    new BucketedTable(spark, s"$statePath/labels", "doc_id", LabelBuckets)
+    new BucketedTable(spark, s"$statePath/labels", "doc_id", LabelBuckets,
+      rowSchema = Some(StructType(longs("doc_id", "cluster_id",
+        "cluster_size"))))
   def fpsTable(spark: org.apache.spark.sql.SparkSession,
       statePath: String): AppendTable =
-    new AppendTable(spark, s"$statePath/fps")
+    new AppendTable(spark, s"$statePath/fps",
+      rowSchema = Some(StructType(longs("doc_id", "simhash"))))
   def snapTable(spark: org.apache.spark.sql.SparkSession,
       statePath: String): AppendTable =
-    new AppendTable(spark, s"$statePath/snap")
+    new AppendTable(spark, s"$statePath/snap", rowSchema = Some(StructType(
+      longs("doc_id") :+ StructField("fp", StringType))))
   def publishManifest(spark: org.apache.spark.sql.SparkSession,
       statePath: String): SnapshotTable =
-    new SnapshotTable(spark, s"$statePath/publish_manifest")
+    new SnapshotTable(spark, s"$statePath/publish_manifest",
+      Some(Sampling.ManifestSchema))
 
   /** Where an alarmed batch's admitted-new docs land instead of the
     * label/snapshot/publish path: (doc_id, text, batch_id) rows in a
@@ -626,8 +655,21 @@ object IngestStream {
   def processBatch(batch: DataFrame, batchId: Long, statePath: String,
       maxDist: Int, publish: Option[PublishConfig],
       maintain: MaintainConfig,
-      drift: Option[DriftMonitor.GateConfig]): Unit = {
+      drift: Option[DriftMonitor.GateConfig]): Unit =
+    ingest(batch, batchId, statePath, maxDist, publish, maintain, drift,
+      ClusterMaintain.LocalMergeMax)
+
+  /** [[processBatch]] with the bound of its driver-side path as a
+    * parameter: `localMax = 0` sends every non-empty batch down the
+    * distributed path (IngestBatchSpec runs both paths over the same
+    * batches).
+    */
+  private[graft] def ingest(batch: DataFrame, batchId: Long,
+      statePath: String, maxDist: Int, publish: Option[PublishConfig],
+      maintain: MaintainConfig, drift: Option[DriftMonitor.GateConfig],
+      localMax: Long): Unit = {
     val spark = batch.sparkSession
+    import spark.implicits._
     val labelsT = labelsTable(spark, statePath)
     val fpsT = fpsTable(spark, statePath)
     val snapT = snapTable(spark, statePath)
@@ -655,16 +697,18 @@ object IngestStream {
     val distinctBatch = batch.select(col("doc_id"), col("text"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    // ONE checkpoint serves both the raw-text consumers (quarantine,
-    // snapshot, publish) and the fingerprint consumers (probe, merge,
-    // fp append): the simhash kernel rides the same materialization
-    // (round 16 — the former separate added/bFp checkpoints paid two
-    // jobs per micro-batch for one batch's worth of data)
+    // ONE checkpoint serves the raw-text consumers (quarantine,
+    // snapshot), the fingerprint consumers (probe, merge, fp append)
+    // and the publish token counts: the simhash kernel and the token
+    // count ride the same materialization
     val addedFp = Dedup.withSimhashText(snapT.read() match {
       case Some(snap) => distinctBatch
         .join(snap.select("doc_id"), Seq("doc_id"), "left_anti")
       case None => distinctBatch
-    }, "doc_id", "text").localCheckpoint()
+    }, "doc_id", "text")
+      .withColumn("n_tok",
+        graft.text.TextAnalysis.tokenCountWs(col("text")).cast("long"))
+      .localCheckpoint()
     val added = addedFp.select("doc_id", "text")
 
     // drift GATE (monitor → ACTION, round-11 verdict item 5): score
@@ -682,7 +726,6 @@ object IngestStream {
       val alarm = psiU >= g.alertAtPsiU || unseenU >= g.alertAtUnseenU
       val mT = gateMonitorTable(spark, statePath)
       if (mT.lastBatchId < batchId) {
-        import spark.implicits._
         mT.append(Seq((batchId, nDocs, nUnseen, psiU, unseenU, alarm))
           .toDF("batch_id", "n_docs", "n_unseen", "psi_u", "unseen_u",
             "alert"), batchId)
@@ -703,21 +746,34 @@ object IngestStream {
     val priorLabels = labelsT.read()
     val priorFps = fpsT.read()
     val bFp = addedFp.select("doc_id", "simhash")
-    val emptyEdges = spark.range(0)
-      .select(col("id").as("a"), col("id").as("b"))
-    // rep-level cross edges (crossNearEdgesOf): connectivity-
-    // equivalent to the full member pair list — the within-batch pass
-    // below emits each batch clique's hamming-0 pairs, and stored
-    // identical-fp members already share a cluster from their own
-    // ingest — without window-sorting or re-materializing the stored
-    // index every micro-batch (the probe-cost-∝-batch fix)
-    val edges = (priorFps match {
-      case Some(idx) => Dedup.crossNearEdgesOf(bFp, idx, maxDist)
-      case None => emptyEdges
-    }).union(Dedup.simhashConnectivityEdgesOf(bFp, maxDist))
 
-    val emptyLabels = spark.range(0).select(col("id").as("doc_id"),
-      col("id").as("cluster_id"), col("id").as("cluster_size"))
+    // THE selection point: ONE bounded collect of the batch's per-doc
+    // facts, then one bounded collect of its edges to the stored index
+    // (one scan of the stored fps against the batch reps' band keys).
+    // While both fit `localMax`, the within-batch edges,
+    // the contracted merge, the shard assignment and the manifest fold
+    // run on the driver (Drizzle's lesson: pay coordination once per
+    // group of work, not once per step). A batch over the bound — or
+    // one whose facts carry a null — takes the distributed path. Lazy:
+    // the labels and publish ops share it, and a replay whose labels
+    // and manifest are already committed pays for neither collect.
+    lazy val local = for {
+      rows <- DriverOps.collectBounded(addedFp.select(
+        col("doc_id").cast("long"), col("simhash"), col("n_tok")), localMax)
+      if !rows.exists(_.anyNull)
+      facts = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      cross <- priorFps match {
+        case None => Some(Seq.empty[(Long, Long)])
+        case Some(idx) =>
+          // one rep (min id) per distinct fingerprint: the within-batch
+          // star edges below connect each clique to its rep
+          val reps = facts.groupBy(_._2).iterator
+            .map { case (fp, ms) => (ms.iterator.map(_._1).min, fp) }.toSeq
+          Dedup.crossNearEdgesLocal(reps, idx, maxDist, localMax)
+      }
+    } yield (facts, cross)
+    val emptyLabels = Seq.empty[(Long, Long, Long)]
+      .toDF("doc_id", "cluster_id", "cluster_size")
 
     // per-table idempotent commits (the EventSink crash contract: a
     // partial commit replays only the missing tables), with the
@@ -732,47 +788,82 @@ object IngestStream {
     // which ran after the snapshot append — snap-last closes both).
     // Every write is ∝ batch — appends carry only the batch's rows,
     // the label MERGE only the changed rows' buckets. The DELTA
-    // computation (probe collects + contracted CC) lives INSIDE the
-    // labels op so it overlaps the other commits; its reads of the
-    // stored fps/labels are bound to the pointer reads above, and the
-    // concurrent appends only ADD directories — never delete — so
-    // those reads stay valid. The publish op's internal order (files
-    // first, manifest commit as the batch gate) holds in its thread.
+    // computation (contracted CC) lives INSIDE the labels op so it
+    // overlaps the other commits; its reads of the stored fps/labels
+    // are bound to the pointer reads above, and the concurrent
+    // appends only ADD directories — never delete — so those reads
+    // stay valid. The publish op's internal order (files first,
+    // manifest commit as the batch gate) holds in its thread.
     DriverOps.parallel(
       () => if (labelsT.lastBatchId < batchId) {
         // DELTA merge: only the rows whose label can have changed
         // (members of affected clusters + the batch docs) are computed
         // and written — the store rewrites only their buckets
-        val (changed, _) = ClusterMaintain.mergeBatchDelta(
-          priorLabels.getOrElse(emptyLabels),
-          added.select(col("doc_id").as("id")), edges)
-        labelsT.merge(changed.localCheckpoint(), batchId)
+        val prior = priorLabels.getOrElse(emptyLabels)
+        val changed = local match {
+          case Some((facts, cross)) =>
+            // within-batch connectivity from the driver-side banded
+            // kernel, as star edges doc → component min
+            val within = Clusters.simhashComponentsLocal(
+              facts.map(f => (f._1, f._2)), maxDist)
+              .collect { case (id, c, _) if id != c => (id, c) }
+            val (delta, _) = ClusterMaintain.mergeBatchDeltaLocal(prior,
+              facts.map(_._1), (cross ++ within).toArray, localMax)
+            // a LocalRelation while the affected clusters' members fit
+            // the bound: the MERGE then probes its keys on the driver
+            if (DriverOps.isLocal(delta)) delta else delta.localCheckpoint()
+          case None =>
+            // rep-level cross edges (crossNearEdgesOf):
+            // connectivity-equivalent to the full member pair list —
+            // the within-batch pass emits each batch clique's hamming-0
+            // pairs, and stored identical-fp members already share a
+            // cluster from their own ingest
+            val edges = (priorFps match {
+              case Some(idx) => Dedup.crossNearEdgesOf(bFp, idx, maxDist)
+              case None => Seq.empty[(Long, Long)].toDF("a", "b")
+            }).union(Dedup.simhashConnectivityEdgesOf(bFp, maxDist))
+            ClusterMaintain.mergeBatchDeltaDistributed(prior,
+              added.select(col("doc_id").as("id")),
+              ClusterMaintain.materializedEdges(edges))._1.localCheckpoint()
+        }
+        labelsT.merge(changed, batchId)
       },
       () => if (fpsT.lastBatchId < batchId)
-        fpsT.append(bFp.select("doc_id", "simhash"), batchId),
+        fpsT.append(bFp, batchId),
       () => publish.foreach { cfg =>
         val mT = manifestT.get
         if (mT.lastBatchId < batchId) {
-          import graft.operators.Sampling
-          val pubRows = added.select(
-            (lit((batchId + 1) * 1000000000000L) + col("doc_id")).as("pub_id"),
-            graft.text.TextAnalysis.tokenCountWs(col("text")).cast("long")
-              .as("n_tok"))
-          val prior = mT.read().getOrElse(
-            spark.range(0).select(col("id").as("shard_id"),
-              col("id").as("n_docs"), col("id").as("n_tokens"),
-              col("id").as("min_id"), col("id").as("max_id")))
-          val assigned = Sampling.shardAppend(pubRows, "pub_id", "n_tok",
-            cfg.budget, cfg.bucketWidth, prior).localCheckpoint()
-          Sampling.appendShardFiles(assigned, "pub_id", "n_tok", cfg.dest)
-          // merge the batch's per-shard facts into the bounded manifest
-          // (the straddler shard appears on both sides and folds)
-          val merged = prior.unionByName(
-              Sampling.shardManifest(assigned, "pub_id", "n_tok"))
-            .groupBy("shard_id")
-            .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
-              min("min_id").as("min_id"), max("max_id").as("max_id"))
-          mT.commit(merged, batchId)
+          val pubBase = (batchId + 1) * 1000000000000L
+          // the manifest sidecar, collected once; the batch's
+          // per-shard facts fold into it on the driver (the straddler
+          // shard appears on both sides and folds) and the result
+          // commits as a LocalRelation
+          val prior = mT.read().map(_.as[Sampling.ManifestRow].collect()
+            .toSeq).getOrElse(Seq.empty)
+          val batchFacts = local match {
+            case Some((facts, _)) =>
+              // the assignment is a driver-side prefix sum, and the
+              // straddler is the shard the prior token total ends in
+              val assigned = Sampling.shardAppendLocal(
+                facts.map(f => (pubBase + f._1, f._3)).toSeq, "pub_id",
+                "n_tok", cfg.budget, prior)
+              Sampling.appendShardFilesLocal(spark, assigned, "pub_id",
+                "n_tok", cfg.dest, prior, localMax)
+              Sampling.shardManifestLocal(assigned)
+            case None =>
+              val pubRows = addedFp.select(
+                (lit(pubBase) + col("doc_id")).as("pub_id"), col("n_tok"))
+              val assigned = Sampling.shardAppend(pubRows, "pub_id", "n_tok",
+                cfg.budget, cfg.bucketWidth,
+                prior.toDF(Sampling.ManifestSchema.fieldNames.toSeq: _*))
+                .localCheckpoint()
+              Sampling.appendShardFiles(assigned, "pub_id", "n_tok", cfg.dest)
+              Sampling.shardManifest(assigned, "pub_id", "n_tok")
+                .as[Sampling.ManifestRow].collect().toSeq
+          }
+          mT.commit(Sampling.foldManifest(prior, batchFacts)
+            .toDF(Sampling.ManifestSchema.fieldNames.toSeq: _*)
+            .coalesce(1), batchId)
         }
       })
     // snapshot LAST — the replay gate (see above)

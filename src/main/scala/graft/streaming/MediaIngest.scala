@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.dedup.{ClusterMaintain, Clusters, Dedup}
 import graft.multimodal.Multimodal
@@ -59,6 +60,15 @@ import graft.text.ClassifierEval
   * is the doc_id of this state family.
   */
 object MediaIngest {
+
+  /** The media loop's fp index under `statePath`: (doc_id, perceptual
+    * fp, pixel rank). Its rows differ from the text loop's
+    * ([[IngestStream.fpsTable]]), so it is its own handle, with its own
+    * row type; the label store and the snapshot are shared.
+    */
+  def fpsTable(spark: SparkSession, statePath: String): AppendTable =
+    new AppendTable(spark, s"$statePath/fps", rowSchema = Some(StructType(
+      Seq("doc_id", "fp", "pixels").map(StructField(_, LongType)))))
 
   /** Media drift-gate config: reference histogram over the decoded
     * per-asset floored mean luma (0..255) in `nBins` equal bins —
@@ -130,7 +140,7 @@ object MediaIngest {
       gate: Option[GateConfig]): Unit = {
     val spark = batch.sparkSession
     val labelsT = IngestStream.labelsTable(spark, statePath)
-    val fpsT = IngestStream.fpsTable(spark, statePath)
+    val fpsT = fpsTable(spark, statePath)
     val snapT = IngestStream.snapTable(spark, statePath)
     if (labelsT.lastBatchId >= batchId && fpsT.lastBatchId >= batchId &&
         snapT.lastBatchId >= batchId) {
@@ -258,7 +268,7 @@ object MediaIngest {
     val labels = IngestStream.labelsTable(spark, statePath).read()
       .getOrElse(spark.range(0).select(col("id").as("doc_id"),
         col("id").as("cluster_id"), col("id").as("cluster_size")))
-    val fps = IngestStream.fpsTable(spark, statePath).read()
+    val fps = fpsTable(spark, statePath).read()
       .getOrElse(spark.range(0).select(col("id").as("doc_id"),
         col("id").as("fp"), col("id").as("pixels")))
     Clusters.keepBestPerCluster(
@@ -273,7 +283,7 @@ object MediaIngest {
   private def runMaintenance(spark: SparkSession, statePath: String,
       maintain: IngestStream.MaintainConfig): Unit = {
     DriverOps.parallel(
-      () => IngestStream.fpsTable(spark, statePath).compact(),
+      () => fpsTable(spark, statePath).compact(),
       () => IngestStream.snapTable(spark, statePath).compact(),
       () => IngestStream.gateMonitorTable(spark, statePath).compact(),
       () => IngestStream.quarantineTable(spark, statePath).compact())

@@ -289,8 +289,14 @@ private[streaming] abstract class VersionedTable[P](spark: SparkSession) {
   *
   * Pointer `<version>,<batchId>,<schema version>`; two-field pointers
   * predate schema evolution (schema version 0, see [[TableSchema]]).
+  *
+  * @param rowSchema the stored rows' type, when the handle's owner
+  *   knows it: [[read]] then skips the parquet footer inference, a
+  *   one-task Spark job per read ([[TableSchema.reader]] decides when
+  *   the type may stand in).
   */
-final class SnapshotTable(spark: SparkSession, path: String)
+final class SnapshotTable(spark: SparkSession, path: String,
+    rowSchema: Option[StructType] = None)
     extends VersionedTable[(Long, Long, Long)](spark) {
 
   protected val core = new TableCore[(Long, Long, Long)](path,
@@ -309,14 +315,7 @@ final class SnapshotTable(spark: SparkSession, path: String)
           "read further back")
   }
 
-  def read(): Option[DataFrame] = readAs(None)
-
-  /** [[read]] for a caller that knows the row type: see
-    * [[TableSchema.reader]].
-    */
-  def read(rowSchema: StructType): Option[DataFrame] = readAs(Some(rowSchema))
-
-  private def readAs(rowSchema: Option[StructType]) =
+  def read(): Option[DataFrame] =
     pointer().map { case (v, _, m) =>
       val cols = TableSchema.read(path, m)
       TableSchema.applyTo(TableSchema.reader(spark, cols, rowSchema)
@@ -442,9 +441,15 @@ final class SnapshotTable(spark: SparkSession, path: String)
   *   an optimization: the residual filter is always applied, and a
   *   directory with no zone (committed before stats were enabled)
   *   is conservatively scanned.
+  * @param rowSchema the stored rows' type, when the handle's owner
+  *   knows it: every data read — [[read]], the feeds, [[compact]],
+  *   [[deleteKeys]] — then skips the parquet footer inference, a
+  *   one-task Spark job per read. The log has no schema evolution, so
+  *   the type always stands in.
   */
 final class AppendTable(spark: SparkSession, path: String,
-    statsCol: Option[String] = None) {
+    statsCol: Option[String] = None,
+    rowSchema: Option[StructType] = None) {
 
   /** Pointer (last committed batch id, compacted-through id or −1,
     * delete epoch, tombstone generation): the first line, then
@@ -528,19 +533,21 @@ final class AppendTable(spark: SparkSession, path: String,
     * vectored delete exists; with one live, the per-dir tagging costs
     * a union whose width is the compaction-bounded read fan-in.
     */
-  private def scopedRead(dirs: Seq[String], g: Long): DataFrame =
+  private def scopedRead(dirs: Seq[String], g: Long): DataFrame = {
+    val reader = rowSchema.fold(spark.read)(spark.read.schema)
     tombstones(g) match {
-      case None => spark.read.parquet(dirs: _*)
+      case None => reader.parquet(dirs: _*)
       case Some(t) =>
         val keyCol = t.columns.head
         val tagged = dirs.map { d =>
-          spark.read.parquet(d).withColumn("__dir_upto", lit(dirUptoId(d)))
+          reader.parquet(d).withColumn("__dir_upto", lit(dirUptoId(d)))
         }.reduce(_.unionByName(_, allowMissingColumns = true))
         tagged.join(broadcast(t),
           tagged(keyCol) === t(keyCol) &&
             t("tomb_upto") >= tagged("__dir_upto"), "left_anti")
           .drop("__dir_upto")
     }
+  }
 
   def lastBatchId: Long = pointer()._1
 
@@ -776,11 +783,13 @@ final class AppendTable(spark: SparkSession, path: String,
     if (last < 0) return
     val dirs = committedDirsFor((last, ct, e, tomb))
     if (dirs.isEmpty) return
-    val keySet = keys.select(col(keyCol)).distinct().localCheckpoint()
     // consolidate the LIVE view minus the keys: a pending deletion
-    // vector folds physically in the same rewrite (scope respected)
+    // vector folds physically in the same rewrite (scope respected).
+    // The anti-join is indifferent to duplicate keys, so the key set
+    // needs no distinct and no checkpoint of its own: the broadcast
+    // build reads it once
     val survivors = scopedRead(dirs, tomb)
-      .join(broadcast(keySet), Seq(keyCol), "left_anti")
+      .join(broadcast(keys.select(col(keyCol))), Seq(keyCol), "left_anti")
     val k2 = kName(last, e + 1)
     val c = begin(entry, "delete", k2)(n => kName(n._2, n._3) == k2)
     writeDir(c, k2, survivors)
@@ -1060,11 +1069,17 @@ object BucketedTable {
   *   optimization: the residual filter is always applied, a version
   *   without a zones file (pre-upgrade) scans every bucket, and a
   *   bucket absent from the file is conservatively opened.
+  * @param rowSchema the stored rows' type, when the handle's owner
+  *   knows it: every data read — [[read]], the MERGE's prior buckets,
+  *   [[readKeys]], [[growIfOversized]], [[rebucket]] — then skips the
+  *   parquet footer inference, a one-task Spark job per read, while
+  *   no column is added ([[TableSchema.reader]]).
   */
 final class BucketedTable(spark: SparkSession, path: String,
     keyCol: String, nBuckets: Int,
     maxBroadcastKeys: Long = BucketedTable.MaxBroadcastKeys,
-    statsCol: Option[String] = None)
+    statsCol: Option[String] = None,
+    rowSchema: Option[StructType] = None)
     extends VersionedTable[(Long, Long, Int, Long)](spark) {
   require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
 
@@ -1100,8 +1115,7 @@ final class BucketedTable(spark: SparkSession, path: String,
     * fill the gaps (and any nulls). The no-migration path stays the
     * plain read — no mergeSchema cost until a migration exists.
     */
-  private def readDirs(dirs: Seq[String], m: Long,
-      rowSchema: Option[StructType] = None): DataFrame = {
+  private def readDirs(dirs: Seq[String], m: Long): DataFrame = {
     val cols = TableSchema.read(path, m)
     val r = TableSchema.reader(spark, cols, rowSchema)
     if (cols.isEmpty) r.parquet(dirs: _*)
@@ -1464,19 +1478,23 @@ final class BucketedTable(spark: SparkSession, path: String,
     * truncated at bound+1 rows (a corpus-as-one-batch input never
     * reaches the driver whole), the guard is the collected length, and
     * the returned frame is a LocalRelation — the same bytes the
-    * broadcast already shipped, now also giving JOB-FREE broadcast
-    * builds (LocalTableScan collects driver-side). When `nb` is set,
-    * each key's bucket rides along in the same single job.
+    * broadcast already shipped (its build is still one job: a
+    * broadcast exchange collects its child through a Spark job even
+    * over a LocalRelation). When `nb` is set,
+    * each key's bucket rides along in the same single job. A
+    * LocalRelation key set (a driver-built batch) dedups on the
+    * driver and runs no job at all.
     */
   private def collectKeySet(keys: DataFrame, nb: Option[Int], op: String)
       : (DataFrame, Set[Long]) = {
     val proj = keys.select(col(keyCol))
-    val distinctKeys = proj.distinct()
-    val take = DriverOps.collectBounded(nb match {
-      case Some(n) =>
-        distinctKeys.select(col(keyCol), bucketOf(col(keyCol), n).as("__bucket"))
-      case None => distinctKeys
-    }, maxBroadcastKeys)
+    val withBucket = nb.fold(proj)(n =>
+      proj.select(col(keyCol), bucketOf(col(keyCol), n).as("__bucket")))
+    val take = DriverOps.localRows(withBucket) match {
+      case Some(rows) => Some(rows.distinct).filter(_.length <= maxBroadcastKeys)
+      case None =>
+        DriverOps.collectBounded(withBucket.distinct(), maxBroadcastKeys)
+    }
     require(take.isDefined,
       s"BucketedTable.$op: batch key set exceeds the broadcast bound " +
         s"(> $maxBroadcastKeys distinct keys) — split the batch " +
@@ -1548,14 +1566,11 @@ final class BucketedTable(spark: SparkSession, path: String,
     * read and one write per commit, with no extra point-lookup pass.
     * Rows resolving into untouched buckets are dropped (they would
     * orphan outside the manifest); the touched-bucket list itself is
-    * the one bounded driver collect (≤ nBuckets ids). `rowSchema`,
-    * the stored rows' type when the caller knows it, replaces the
-    * footer inference of the prior-bucket read ([[TableSchema.reader]]).
+    * the one bounded driver collect (≤ nBuckets ids).
     */
-  def mergeResolve(updates: DataFrame, batchId: Long,
-      rowSchema: Option[StructType] = None)(
+  def mergeResolve(updates: DataFrame, batchId: Long)(
       resolve: (Option[DataFrame], DataFrame) => DataFrame): Unit =
-    mergeResolveImpl(updates, batchId, collectKeys = false, rowSchema)(
+    mergeResolveImpl(updates, batchId, collectKeys = false)(
       (prior, chg, _) => resolve(prior, chg))
 
   /** Shared commit body. `collectKeys = true` ([[merge]]'s path)
@@ -1571,7 +1586,7 @@ final class BucketedTable(spark: SparkSession, path: String,
     * key-set guard (documented relaxation).
     */
   private def mergeResolveImpl(updates: DataFrame, batchId: Long,
-      collectKeys: Boolean, rowSchema: Option[StructType] = None)(
+      collectKeys: Boolean)(
       resolve: (Option[DataFrame], DataFrame, Option[DataFrame]) => DataFrame)
       : Unit = {
     if (lastBatchId >= batchId) return
@@ -1588,19 +1603,23 @@ final class BucketedTable(spark: SparkSession, path: String,
     val updates0 = TableSchema.applyTo(updates, TableSchema.read(path, sm))
 
     // touched bucket ids: bounded at nBuckets rows — a model-sized
-    // driver artifact, same class as the manifest itself
+    // driver artifact, same class as the manifest itself (computed on
+    // the driver, without a job, for a LocalRelation batch)
     val (keyDf, touched) =
       if (collectKeys && prior.isDefined) {
         val (k, t) = collectKeySet(updates0, Some(nb), "merge")
         (Some(k), t)
-      } else (None,
-        updates0.select(bucketOf(col(keyCol), nb).as("__bucket"))
-          .distinct().collect().map(_.getLong(0)).toSet)
+      } else {
+        val buckets = updates0.select(bucketOf(col(keyCol), nb).as("__bucket"))
+        (None, DriverOps.localRows(buckets)
+          .getOrElse(buckets.distinct().collect())
+          .map(_.getLong(0)).toSet)
+      }
     val priorTouchedDirs = touched.toSeq.sorted.flatMap(priorManifest.get)
       .distinct.map(rel => s"$path/$rel")
     val priorRows =
       if (priorTouchedDirs.isEmpty) None
-      else Some(readDirs(priorTouchedDirs, sm, rowSchema))
+      else Some(readDirs(priorTouchedDirs, sm))
     val newData = resolve(priorRows, updates0, keyDf)
       .withColumn("__bucket", bucketOf(col(keyCol), nb))
       .filter(col("__bucket").isin(touched.toSeq: _*))

@@ -23,8 +23,74 @@ class DriverOpsSpec extends AnyFunSuite {
       else assert(got.isEmpty, s"n = $n")
       assert(jobs == 1, s"n = $n ran $jobs jobs")
     }
+    // many partitions, one job: every partition ships at most bound + 1
+    // rows in the same job, and the rows keep partition order
+    Seq(bound - 1, bound, bound + 1).foreach { n =>
+      val df = spark.range(0L, n, 1L, 8).toDF("id")
+      assert(df.rdd.getNumPartitions == 8)
+      var got: Option[Array[Row]] = None
+      val jobs = SparkJobs.onThisThread {
+        got = DriverOps.collectBounded(df, bound)
+      }
+      if (n <= bound)
+        assert(got.map(_.map(_.getLong(0)).toSeq) == Some(0L until n), s"n = $n")
+      else assert(got.isEmpty, s"n = $n")
+      assert(jobs == 1, s"8 partitions, n = $n ran $jobs jobs")
+    }
+    // a frame that plans to a LocalRelation is read without a job
+    val s = spark
+    import s.implicits._
+    val localJobs = SparkJobs.onThisThread {
+      assert(DriverOps.collectBounded(Seq(1L, 2L).toDF("id"), bound)
+        .map(_.map(_.getLong(0)).toSeq) == Some(Seq(1L, 2L)))
+      assert(DriverOps.collectBounded((0L to bound).toDF("id"), bound).isEmpty)
+    }
+    assert(localJobs == 0, s"local frames ran $localJobs jobs")
+    // a failing job raises its error, not None
+    val boom = org.apache.spark.sql.functions.udf { (x: Long) =>
+      if (x >= 0L) throw new IllegalStateException("boom"); x
+    }
+    val failed = intercept[org.apache.spark.SparkException](
+      DriverOps.collectBounded(spark.range(0L, 4L, 1L, 4)
+        .select(boom(org.apache.spark.sql.functions.col("id"))), bound))
+    assert(Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "boom"), failed.toString)
     // a bound past Int.MaxValue clamps the limit instead of overflowing
     assert(DriverOps.collectBounded(spark.range(3L).toDF("id"), Long.MaxValue)
       .map(_.length) == Some(3))
+  }
+
+  test("collectBounded: a frame over the bound whose partitions each fit ships a few tasks' rows, not all") {
+    val s = spark
+    import s.implicits._
+    // 64 partitions of 500 rows, each under the bound of 1000, 32,000 in
+    // all. Each task sleeps, so the cancel lands while the first waves
+    // run: a collect that takes every partition ships all 64
+    val df = spark.range(0L, 32000L, 1L, 64).as[Long]
+      .mapPartitions { it => Thread.sleep(100); it }.toDF("id")
+    def shipped(max: Long): (Option[Array[Row]], Long, Int) = {
+      var got: Option[Array[Row]] = None
+      val (bytes, tasks) = SparkJobs.resultBytesOnThisThread {
+        got = DriverOps.collectBounded(df, max)
+        // a cancelled job returns while its tasks still run: wait for
+        // them, so every result they ship is counted
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        def running = spark.sparkContext.statusTracker.getExecutorInfos
+          .map(_.numRunningTasks).sum
+        while (running > 0 && System.nanoTime() < deadline) Thread.sleep(20)
+      }
+      (got, bytes, tasks)
+    }
+    val (all, allBytes, allTasks) = shipped(32000L)
+    assert(all.map(_.length) == Some(32000) && allTasks == 64)
+    val (over, overBytes, overTasks) = shipped(1000L)
+    assert(over.isEmpty)
+    info(s"over the bound: $overTasks of 64 tasks shipped $overBytes of " +
+      s"$allBytes result bytes")
+    // 4 cores: the first wave's four results pass the bound, so at most
+    // the four tasks of the next wave can finish before the cancel
+    assert(overTasks <= 12, s"$overTasks of 64 tasks shipped their rows")
+    assert(overBytes * 4 < allBytes,
+      s"shipped $overBytes result bytes of $allBytes for the whole frame")
   }
 }

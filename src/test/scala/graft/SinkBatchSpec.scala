@@ -128,15 +128,15 @@ class SinkBatchSpec extends AnyFunSuite {
     val root = tmp("graft_sink_schema_")
     processBatch(Seq(evRow("k1", 1, t0), evRow("k2", 1, t0 + 1)), 0L, root)
 
-    // events: the prior-bucket read inside mergeResolve, fed the
-    // caller's row type, against spark.read.parquet of the same dirs
+    // events: the prior-bucket read inside mergeResolve, through the
+    // handle's row type, against spark.read.parquet of the same dirs
     val events = EventSink.eventsTable(s, s"$root/events")
     val priorDirs = StateTestUtil.manifestRefsAndDisk(s"$root/events", 0L)._1
       .toSeq.sorted.map(rel => s"$root/events/$rel")
     val upd = EventSink.mergeEvents(None,
       Seq(evRow("k1", 2, t0 + 10), evRow("k2", 2, t0 + 11)).toDS().toDF())
     var prior: Option[DataFrame] = None
-    events.mergeResolve(upd, 1L, Some(upd.schema)) { (p, u) =>
+    events.mergeResolve(upd, 1L) { (p, u) =>
       prior = p
       EventSink.mergeEvents(p, u)
     }
@@ -148,9 +148,9 @@ class SinkBatchSpec extends AnyFunSuite {
 
     // outbox: the snapshot read with the row type against the same dir
     processBatch(Seq(evRow("k3", 1, t0 + 20)), 1L, root)
-    val outbox = new SnapshotTable(s, s"$root/outbox")
     val outboxSchema = Encoders.product[OutboxEntry].schema
-    val known = outbox.read(outboxSchema).get
+    val outbox = new SnapshotTable(s, s"$root/outbox", Some(outboxSchema))
+    val known = outbox.read().get
     val plain = s.read.parquet(s"$root/outbox/v_${outbox.latest.get._1}")
     assert(outboxSchema != plain.schema, "the caller's type is not nullable")
     assert(known.schema == plain.schema)
@@ -167,7 +167,8 @@ class SinkBatchSpec extends AnyFunSuite {
     val outbox = new SnapshotTable(s, s"$root/outbox")
     outbox.addColumn("channel", "string", "'none'")
     outbox.commit(outbox.read().get.withColumn("channel", lit("tg")), 1L)
-    Seq(outbox.read(), outbox.read(Encoders.product[OutboxEntry].schema))
+    Seq(outbox.read(), new SnapshotTable(s, s"$root/outbox",
+        Some(Encoders.product[OutboxEntry].schema)).read())
       .foreach { r =>
         assert(r.get.select("channel").as[String].collect().toSeq == Seq("tg"))
       }
@@ -180,7 +181,7 @@ class SinkBatchSpec extends AnyFunSuite {
     val upd = EventSink.mergeEvents(None,
       Seq(evRow("k2", 1, t0 + 20), evRow("k1", 1, t0)).toDS().toDF())
     var prior: Option[DataFrame] = None
-    events.mergeResolve(upd, 2L, Some(upd.schema)) { (p, u) =>
+    events.mergeResolve(upd, 2L) { (p, u) =>
       prior = p
       EventSink.mergeEvents(p, u)
     }

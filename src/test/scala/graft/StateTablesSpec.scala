@@ -671,8 +671,9 @@ class StateTablesSpec extends AnyFunSuite {
     t.append(Seq(4L, 5L).toDF("x"), 1L)
     t.compact() // epoch 0 consolidated dir k_1
     t.append(Seq(6L, 7L).toDF("x"), 2L)
-    // delete spans the consolidated dir AND a later batch dir
-    t.deleteKeys(Seq(2L, 6L, 99L).toDF("x"), "x")
+    // delete spans the consolidated dir AND a later batch dir; a key
+    // listed twice deletes once (the anti-join takes duplicates)
+    t.deleteKeys(Seq(2L, 6L, 99L, 6L, 2L).toDF("x"), "x")
     assert(rows() == Seq(1L, 3L, 4L, 5L, 7L))
     // a delete IS a consolidation: fan-in 1, batch gate unmoved
     assert(t.readFanIn == 1 && t.lastBatchId == 2L)
@@ -686,7 +687,8 @@ class StateTablesSpec extends AnyFunSuite {
     assert(t.readRange(1L, 3L).get.collect().map(_.getLong(0)).sorted
       .toSeq == Seq(1L, 3L))
     // back-to-back delete at the same batch id lands in a NEW epoch
-    t.deleteKeys(Seq(4L).toDF("x"), "x")
+    // (duplicate keys again, from a shuffled frame, not a local one)
+    t.deleteKeys(Seq(4L, 4L, 4L).toDF("x").repartition(2), "x")
     assert(rows() == Seq(1L, 3L, 5L, 7L))
     val dirs2 = new java.io.File(s"$root/t").listFiles()
       .filter(_.isDirectory).map(_.getName).sorted.toSeq
