@@ -68,12 +68,13 @@ object ClusterMaintain {
     * gate's per-batch job count); above it, the distributed path
     * runs unchanged. Both paths produce identical labels (min-id
     * components over the same contracted graph — ClusterMaintainSpec
-    * pins the equality). The text ingest loop applies the same bound
-    * to its batch facts and its store edges, where it chooses between
-    * its driver-side and its distributed path ([[graft.streaming
-    * .IngestStream.processBatch]]), and, from counts it already holds,
-    * to the affected clusters' members and the straddler shard's rows.
-    * Measured on that loop (4 vCPUs, 4 GB driver heap, one run each):
+    * pins the equality). The ingest loops' micro-batch applies the
+    * same bound to its batch facts and its store edges, where it
+    * chooses between its driver-side and its distributed path
+    * ([[graft.streaming.IngestStream.ingest]]), and, from counts it
+    * already holds, to the affected clusters' members and the
+    * straddler shard's rows. Measured on the text loop (4 vCPUs, 4 GB
+    * driver heap, one run each):
     * a batch of 10k / 50k / 100k docs over a prior batch of the same
     * size took 8.0 / 12.2 / 23.0 s on the driver-side path and 11.1 /
     * 26.6 / 72.5 s on the distributed one, so the driver-side path
@@ -176,9 +177,9 @@ object ClusterMaintain {
     * .StateInspect]]), not something to mask batch by batch.
     * ClusterMaintainSpec pins local == distributed on intact stores.
     *
-    * The ingest loop calls it directly with edges it built on the
-    * driver ([[graft.streaming.IngestStream.processBatch]]'s bounded
-    * path), so its selection between the paths stays in the loop.
+    * The ingest loops call it directly with edges they built on the
+    * driver ([[graft.streaming.IngestStream.ingest]]'s bounded path),
+    * so the selection between the paths stays in the loop body.
     */
   private[graft] def mergeBatchDeltaLocal(existing: DataFrame,
       batchArr: Array[Long], edgeArr: Array[(Long, Long)],

@@ -211,25 +211,29 @@ object Clusters {
   }
 
   /** DRIVER-LOCAL simhash components for a BOUNDED fingerprint set —
-    * the small-work fast path [[graft.streaming.IngestStream.forget]]
-    * takes for its affected-cluster relabel: a forget's touched
+    * the small-work fast path the ingest loops take for a batch's
+    * within-batch components and [[graft.streaming.IngestStream
+    * .forget]] for its affected-cluster relabel: a forget's touched
     * subgraph is typically thousands of rows, where the distributed
     * CC pays several Spark rounds of fixed scheduling cost
     * per iteration for microseconds of actual work. Same semantics as
-    * [[simhashClustersOf]] (byte-banded candidates over DISTINCT
+    * [[simhashClustersOf]] (banded candidates over DISTINCT
     * fingerprints, hamming ≤ maxDist, cluster_id = min member id,
     * cluster_size = member count — CurationSpec pins the equality on
-    * a real corpus); union-find instead of the star rounds. The
+    * a real corpus, MultimodalSpec against brute force on 64-bit
+    * fps); union-find instead of the star rounds. The
     * CALLER owns the bound (collect only what a driver holds — the
     * readKeys broadcast-bound convention); this is a pure function of
     * the array.
     *
-    * @param fps (doc_id, simhash) pairs
+    * @param fps (doc_id, fingerprint) pairs
+    * @param bandBits the width of each of the four bands: 8 for the
+    *   32-bit simhash, 16 for the 64-bit perceptual fp
     * @return (doc_id, cluster_id, cluster_size) triples
     */
   def simhashComponentsLocal(fps: Array[(Long, Long)],
-      maxDist: Int = 3): Seq[(Long, Long, Long)] = {
-    require(maxDist <= 3, "byte banding guarantees only d <= 3")
+      maxDist: Int = 3, bandBits: Int = 8): Seq[(Long, Long, Long)] = {
+    require(maxDist <= 3, s"$bandBits-bit banding guarantees only d <= 3")
     if (fps.isEmpty) return Seq.empty
     // collapse identical fingerprints (dup cliques): one rep per
     // distinct fp carrying the clique's min member id + member count
@@ -241,16 +245,18 @@ object Clusters {
     val idxOf = reps.iterator.zipWithIndex
       .map { case ((fp, _, _), i) => fp -> i }.toMap
     val uf = new UnionFind(n)
-    // byte-banded candidate buckets (pigeonhole: d ≤ 3 leaves ≥ 1 of
-    // the 4 bytes exact); a duplicate candidate pair across bands is
+    // banded candidate buckets (pigeonhole: d ≤ 3 leaves ≥ 1 of the
+    // 4 bands exact); a duplicate candidate pair across bands is
     // harmless — union is idempotent
+    val mask = (1L << bandBits) - 1L
     val buckets = scala.collection.mutable.HashMap
       .empty[Long, scala.collection.mutable.ArrayBuffer[Int]]
     var i = 0
     while (i < n) {
       var b = 0
       while (b < 4) {
-        val key = b.toLong << 8 | ((reps(i)._1 >>> (b * 8)) & 255L)
+        val key =
+          b.toLong << bandBits | ((reps(i)._1 >>> (b * bandBits)) & mask)
         buckets.getOrElseUpdate(key,
           new scala.collection.mutable.ArrayBuffer[Int]) += i
         b += 1

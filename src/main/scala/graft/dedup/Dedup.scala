@@ -608,16 +608,12 @@ object Dedup {
       maxDist: Int = 3): DataFrame =
     connectivityEdgesOf(fingerprints, "simhash", bandBits = 8, maxDist)
 
-  /** [[simhashConnectivityEdgesOf]] for 64-bit perceptual
-    * fingerprints (column `fp`, 4×16-bit bands) — the media ingest
-    * loop's within-batch edge set.
+  /** [[simhashConnectivityEdgesOf]] over any fingerprint column and
+    * band width: `bandBits` = 8 for the 32-bit simhash, 16 for the
+    * 64-bit perceptual `fp` (four bands either way).
     */
-  def hash64ConnectivityEdgesOf(fingerprints: DataFrame,
-      maxDist: Int = 3): DataFrame =
-    connectivityEdgesOf(fingerprints, "fp", bandBits = 16, maxDist)
-
-  private def connectivityEdgesOf(fingerprints: DataFrame, fpCol: String,
-      bandBits: Int, maxDist: Int): DataFrame = {
+  private[graft] def connectivityEdgesOf(fingerprints: DataFrame,
+      fpCol: String, bandBits: Int, maxDist: Int): DataFrame = {
     val reps = fingerprints.groupBy(fpCol).agg(min("doc_id").as("rep"))
       .localCheckpoint(eager = false)
     val star = fingerprints.select(col("doc_id"), col(fpCol))
@@ -814,16 +810,6 @@ object Dedup {
       maxDist: Int = 3): DataFrame =
     crossBandedPairsOf(bFp, rFp, "simhash", bandBits = 8, maxDist)
 
-  /** [[crossNearPairsOf]] for FULL 64-bit perceptual fingerprints
-    * (column `fp`, 4×16-bit bands — the cross twin of
-    * [[hash64NearDupPairs]], same pigeonhole guarantee): batch↔stored
-    * media-index edges for the media ingest loop, cost ∝ batch with
-    * the stored side never reshuffled under a bucketed layout.
-    */
-  def hash64CrossNearPairsOf(bFp: DataFrame, rFp: DataFrame,
-      maxDist: Int = 3): DataFrame =
-    crossBandedPairsOf(bFp, rFp, "fp", bandBits = 16, maxDist)
-
   /** Rep-level cross EDGES for cluster maintenance —
     * [[crossNearPairsOf]] without either member expansion and without
     * the ref-side window/localCheckpoint: identical-fp cliques are
@@ -845,17 +831,12 @@ object Dedup {
       maxDist: Int = 3): DataFrame =
     crossBandedEdgesOf(bFp, rFp, "simhash", bandBits = 8, maxDist)
 
-  /** [[crossNearEdgesOf]] for 64-bit perceptual fingerprints (column
-    * `fp`, 4×16-bit bands) — the media ingest loop's stored-index
-    * probe.
-    */
-  def hash64CrossNearEdgesOf(bFp: DataFrame, rFp: DataFrame,
-      maxDist: Int = 3): DataFrame =
-    crossBandedEdgesOf(bFp, rFp, "fp", bandBits = 16, maxDist)
-
   /** [[crossNearEdgesOf]] for a batch already on the driver (the
-    * ingest loop's bounded path): `bReps` are the batch's (rep doc,
-    * simhash) pairs, one per distinct fingerprint. Their band index —
+    * ingest loops' bounded path): `bReps` are the batch's (rep doc,
+    * fingerprint) pairs, one per distinct fingerprint, and `rFp`'s
+    * fingerprints are its column `fpCol`, banded four times by
+    * `bandBits` (8 for the 32-bit simhash, 16 for the 64-bit
+    * perceptual fp). Their band index —
     * band key → the reps carrying it — ships as a broadcast variable,
     * and ONE map-side scan of the stored index looks each stored
     * fingerprint's four band keys up in it and keeps the reps within
@@ -869,10 +850,12 @@ object Dedup {
     * edges contract to the same node in [[ClusterMaintain]].
     */
   def crossNearEdgesLocal(bReps: Seq[(Long, Long)], rFp: DataFrame,
-      maxDist: Int, max: Long): Option[Seq[(Long, Long)]] = {
-    require(maxDist <= 3, "8-bit banding guarantees only d <= 3")
+      fpCol: String, bandBits: Int, maxDist: Int,
+      max: Long): Option[Seq[(Long, Long)]] = {
+    require(maxDist <= 3, s"$bandBits-bit banding guarantees only d <= 3")
+    val mask = (1L << bandBits) - 1L
     def bandKey(fp: Long, b: Int): Long =
-      b.toLong << 8 | ((fp >> (b * 8)) & 255L)
+      b.toLong << bandBits | ((fp >>> (b * bandBits)) & mask)
     val index = bReps
       .flatMap { case (a, fp) =>
         (0 until 4).map(b => bandKey(fp, b) -> (a, fp))
@@ -890,12 +873,15 @@ object Dedup {
           .toSeq.distinct
       }
       graft.streaming.DriverOps.collectBounded(
-        rFp.select(explode(near(col("simhash"))).as("a"), col("doc_id").as("b")),
+        rFp.select(explode(near(col(fpCol))).as("a"), col("doc_id").as("b")),
         max).map(_.map(r => (r.getLong(0), r.getLong(1))).toSeq)
     } finally bc.destroy()
   }
 
-  private def crossBandedEdgesOf(bFp: DataFrame, rFp: DataFrame,
+  /** [[crossNearEdgesOf]] over any fingerprint column and band
+    * width (see [[connectivityEdgesOf]]).
+    */
+  private[graft] def crossBandedEdgesOf(bFp: DataFrame, rFp: DataFrame,
       fpCol: String, bandBits: Int, maxDist: Int): DataFrame = {
     require(maxDist <= 3,
       s"$bandBits-bit banding guarantees only d <= 3")
@@ -925,9 +911,8 @@ object Dedup {
       .select("a", "b")
   }
 
-  /** The cross-corpus banded-hamming core shared by the 32-bit simhash
-    * (4×8-bit bands) and 64-bit perceptual (4×16-bit bands) widths —
-    * the cross twin of [[bandedPairsOf]], identical collapse-first /
+  /** The cross-corpus banded-hamming core behind [[crossNearPairsOf]]
+    * — the cross twin of [[bandedPairsOf]], identical collapse-first /
     * first-matching-band scheme across two frames.
     */
   private def crossBandedPairsOf(bFp: DataFrame, rFp: DataFrame,

@@ -38,10 +38,20 @@ object DriftMonitor {
     */
   def referenceBins(ref: DataFrame, idCol: String, textCol: String,
       nBins: Int, model: Option[(Long, Array[Long])] = None): Seq[(Long, Long)] =
-    score(ref.select(idCol, textCol), idCol, textCol, model)
-      .select(ClassifierEval.scoreBin(col("score"), nBins).as("bin"))
-      .groupBy("bin").agg(count(lit(1)).as("n"))
+    binCounts(scoreBins(ref, idCol, textCol, nBins, model))
+
+  /** (bin, count) over a frame's `bin` column: ONE combining groupBy
+    * to ≤ nBins rows, collected (the Lloyd-cells convention).
+    */
+  private[graft] def binCounts(bins: DataFrame): Seq[(Long, Long)] =
+    bins.groupBy("bin").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+
+  /** Each doc's score bin, as column `bin`. */
+  private[graft] def scoreBins(df: DataFrame, idCol: String, textCol: String,
+      nBins: Int, model: Option[(Long, Array[Long])]): DataFrame =
+    score(df.select(idCol, textCol), idCol, textCol, model)
+      .select(ClassifierEval.scoreBin(col("score"), nBins).as("bin"))
 
   /** The gate's scorer: the committed artifact by default, or an
     * explicitly RELOADED (bias, weights) candidate — the
@@ -81,12 +91,16 @@ object DriftMonitor {
     */
   def batchStats(batch: DataFrame, ref: Seq[(Long, Long)],
       nBins: Int, model: Option[(Long, Array[Long])] = None):
+      (Long, Long, Long, Long) =
+    statsOf(ref, binCounts(scoreBins(batch, "doc_id", "text", nBins, model)))
+
+  /** The drift stats from a batch's bin counts against the reference
+    * histogram — the one fold both ingest loops' gates and the
+    * standalone monitor score: (docs, docs in zero-reference bins,
+    * psi·1e6, unseen mass·1e6).
+    */
+  private[graft] def statsOf(ref: Seq[(Long, Long)], counts: Seq[(Long, Long)]):
       (Long, Long, Long, Long) = {
-    val counts =
-      score(batch.select("doc_id", "text"), "doc_id", "text", model)
-      .select(ClassifierEval.scoreBin(col("score"), nBins).as("bin"))
-      .groupBy("bin").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
     val nDocs = counts.map(_._2).sum
     val psiU = ClassifierEval.psiFixedPoint(ref, counts)
     val refBins = ref.collect { case (b, n) if n > 0 => b }.toSet

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
@@ -41,6 +41,10 @@ import graft.operators.Sampling
   * the distributed path, with the same results (IngestBatchSpec runs
   * both over the same batches). docs/OPERATIONS.md "Ingest
   * micro-batch" has the job budget.
+  *
+  * The media loop ([[MediaIngest]]) runs the same micro-batch body
+  * ([[ingest]]); the two loops differ only in the values of a
+  * [[Loop]] and in their drift statistic ([[Gate]]).
   *
   * The end-state contract — streaming over any batch partitioning of
   * a corpus produces the IDENTICAL label table to one from-scratch
@@ -191,6 +195,60 @@ object IngestStream {
   private def longs(names: String*): Seq[StructField] =
     names.map(StructField(_, LongType))
 
+  /** What one ingest loop brings to the shared micro-batch
+    * ([[ingest]]), [[forget]] and the maintenance tick. The text loop
+    * ([[Text]]) and the media loop ([[MediaIngest]]) differ in these
+    * values only, plus the drift statistic their [[Gate]] scores.
+    *
+    * @param content the raw column whose digest picks the survivor
+    *   among same-id rows of a batch
+    * @param fpCol the fingerprint column, banded four times by
+    *   `bandBits` for the hamming probe
+    * @param fpsCols the fp index's row type (all longs)
+    * @param admit the new rows (doc_id and the raw columns) to their
+    *   facts, computed once: doc_id, `fpCol`, the other `fpsCols`,
+    *   `n_tok` when the loop publishes, and what `keep`, `snapFp` and
+    *   the loop's drift statistic read
+    * @param keep the facts that enter the state: the rest are
+    *   rejected without state, and a redelivered reject re-admits to
+    *   the same verdict
+    * @param snapFp the snapshot's content fingerprint, over the facts
+    */
+  private[graft] final case class Loop(content: String, fpCol: String,
+      bandBits: Int, fpsCols: Seq[String], admit: DataFrame => DataFrame,
+      keep: Column, snapFp: Column) {
+    def fpsTable(spark: SparkSession, statePath: String): AppendTable =
+      new AppendTable(spark, s"$statePath/fps",
+        rowSchema = Some(StructType(longs(fpsCols: _*))))
+  }
+
+  /** The text loop: (doc_id, text) rows, the 32-bit simhash in 8-bit
+    * bands, every new doc admitted, and the token count the shard
+    * publish budgets with.
+    */
+  private[graft] val Text = Loop("text", "simhash", 8,
+    Seq("doc_id", "simhash"),
+    added => Dedup.withSimhashText(added, "doc_id", "text")
+      .withColumn("n_tok",
+        graft.text.TextAnalysis.tokenCountWs(col("text")).cast("long")),
+    lit(true), md5(col("text")))
+
+  /** A drift gate as the micro-batch runs it: the reference histogram,
+    * the two alarm lines (1e-6 units) and the loop's statistic — each
+    * doc's `bin`, from the batch as delivered or from its new docs'
+    * facts (the two arguments, in that order).
+    */
+  private[graft] final case class Gate(ref: Seq[(Long, Long)],
+      alertAtPsiU: Long, alertAtUnseenU: Long,
+      bins: (DataFrame, DataFrame) => DataFrame)
+
+  /** The text loop's gate: the trained quality model's score bins over
+    * the batch as delivered.
+    */
+  private def textGate(g: DriftMonitor.GateConfig): Gate =
+    Gate(g.ref, g.alertAtPsiU, g.alertAtUnseenU, (batch, _) =>
+      DriftMonitor.scoreBins(batch, "doc_id", "text", g.nBins, g.model))
+
   /** The three state tables under `statePath` (the shape both the
     * loop and its readers share), plus the publish manifest. Each
     * handle carries its stored row type, so every read of it — the
@@ -206,8 +264,7 @@ object IngestStream {
         "cluster_size"))))
   def fpsTable(spark: org.apache.spark.sql.SparkSession,
       statePath: String): AppendTable =
-    new AppendTable(spark, s"$statePath/fps",
-      rowSchema = Some(StructType(longs("doc_id", "simhash"))))
+    Text.fpsTable(spark, statePath)
   def snapTable(spark: org.apache.spark.sql.SparkSession,
       statePath: String): AppendTable =
     new AppendTable(spark, s"$statePath/snap", rowSchema = Some(StructType(
@@ -268,7 +325,7 @@ object IngestStream {
     *     admits them as ordinary new docs — labels/snapshot/shards
     *     afterwards are IDENTICAL to a run where the batch had never
     *     been quarantined (IngestStreamSpec pins the identity;
-    *     `q_c_quarantine_drain` oracle-gates the lifecycle);
+    *     `q_t_quarantine_requalify` oracle-gates the lifecycle);
     *   - if the refreshed gate STILL alarms, the drain batch
     *     re-quarantines under `drainBatchId` — those rows sit above
     *     the new drained-through pointer, so they stay pending for
@@ -410,7 +467,18 @@ object IngestStream {
   def forget(spark: org.apache.spark.sql.SparkSession, statePath: String,
       ids: DataFrame, forgetBatchId: Long, maxDist: Int = 3,
       publishDest: Option[String] = None,
-      vectored: Boolean = false): Unit = {
+      vectored: Boolean = false): Unit =
+    forgetIn(Text, spark, statePath, ids, forgetBatchId, maxDist,
+      publishDest, vectored)
+
+  /** [[forget]] over `loop`'s state: its fp index is read, relabeled
+    * from and redacted through its own handle, so the stored rows keep
+    * their type ([[MediaIngest.forget]] is the media entry point).
+    */
+  private[graft] def forgetIn(loop: Loop, spark: SparkSession,
+      statePath: String, ids: DataFrame, forgetBatchId: Long, maxDist: Int,
+      publishDest: Option[String], vectored: Boolean): Unit = {
+    val fpsT = loop.fpsTable(spark, statePath)
     val ledger = forgetLedger(spark, statePath)
     if (ledger.lastBatchId >= forgetBatchId) return // completed → no-op
     // enforce the documented monotonicity contract BEFORE any mutation
@@ -425,7 +493,7 @@ object IngestStream {
     // the same id would have moved the snapshot too, which the strict
     // checks catch).
     val strictMax = Seq(snapTable(spark, statePath).lastBatchId,
-      fpsTable(spark, statePath).lastBatchId,
+      fpsT.lastBatchId,
       quarantineTable(spark, statePath).lastBatchId).max
     require(forgetBatchId > strictMax &&
         forgetBatchId >= labelsTable(spark, statePath).lastBatchId,
@@ -435,12 +503,12 @@ object IngestStream {
         "would silently skip the label-store relabel")
     // ONE collect of the forget list (bounded by contract — the shard
     // path below already collected it whole): as a LocalRelation,
-    // every broadcast of it downstream builds job-free, where the
-    // former checkpointed frame paid a build job per join (round 15 —
-    // per-action scheduling round-trips dominate this gate). The
-    // bound is ENFORCED named (limit+1 probe, the collectKeySet
-    // pattern): a corpus-sized forget must be batched upstream, not
-    // OOM the driver here (ADVICE r15).
+    // nothing downstream recomputes it. Each broadcast join over it
+    // still runs its own build job (measured: 2 jobs for a broadcast
+    // join against 1 for an IN-set filter); ROADMAP item 1 tracks
+    // replacing them. The bound is ENFORCED named (one bounded
+    // collect, the collectKeySet pattern): a corpus-sized forget must
+    // be batched upstream, not OOM the driver here (ADVICE r15).
     val idProj = ids.select("doc_id")
     val idTake = DriverOps.collectBounded(idProj.distinct(),
       BucketedTable.MaxBroadcastKeys)
@@ -467,7 +535,8 @@ object IngestStream {
       labelsT.readKeys(idSet).foreach { hit =>
         import spark.implicits._
         // affected cluster ids are bounded by the forget list — one
-        // collect, then a LocalRelation (job-free broadcast builds)
+        // collect, then a LocalRelation (its broadcast below still
+        // runs a build job)
         val affectedIds = hit.select("cluster_id").distinct()
           .collect().map(_.getLong(0))
         val affected = affectedIds.toSeq.toDF("cluster_id")
@@ -493,14 +562,14 @@ object IngestStream {
           // own singleton.
           val survivorIds = survTake.get.map(_.getLong(0))
           val survDf = survivorIds.toSeq.toDF("doc_id")
-          val fpMap = fpsTable(spark, statePath).read()
+          val fpMap = fpsT.read()
             .map(_.join(broadcast(survDf), Seq("doc_id"), "left_semi")
-              .select(col("doc_id"), col("simhash")).collect()
+              .select(col("doc_id"), col(loop.fpCol)).collect()
               .map(r => r.getLong(0) -> r.getLong(1)).toMap)
             .getOrElse(Map.empty[Long, Long])
           val (have, missing) = survivorIds.partition(fpMap.contains)
-          val local = graft.dedup.Clusters.simhashComponentsLocal(
-            have.map(id => (id, fpMap(id))), maxDist) ++
+          val local = Clusters.simhashComponentsLocal(
+            have.map(id => (id, fpMap(id))), maxDist, loop.bandBits) ++
             missing.map(id => (id, id, 1L))
           // allKeys = members ∪ forget ids = survivors ∪ forget ids
           // (forgotten members are ⊆ the forget list) — local too, so
@@ -516,12 +585,14 @@ object IngestStream {
           // survivor edges come from the STORED fp index — the induced
           // subgraph of the affected clusters (components are closed
           // under edges, so no other doc can be involved)
-          val survFps = fpsTable(spark, statePath).read()
-            .map(_.join(broadcast(survivors), Seq("doc_id"), "left_semi"))
+          val survFps = fpsT.read()
+            .map(_.join(broadcast(survivors), Seq("doc_id"), "left_semi")
+              .select("doc_id", loop.fpCol))
             .getOrElse(spark.range(0).select(col("id").as("doc_id"),
-              col("id").as("simhash")))
-          val edges = Dedup.simhashConnectivityEdgesOf(survFps, maxDist)
-          val cc = graft.dedup.Clusters.connectedComponents(
+              col("id").as(loop.fpCol)))
+          val edges = Dedup.connectivityEdgesOf(survFps, loop.fpCol,
+            loop.bandBits, maxDist)
+          val cc = Clusters.connectedComponents(
             survivors.select(col("doc_id").as("id")), edges)
           val sizes = cc.groupBy("cluster_id")
             .agg(count(lit(1)).as("cluster_size"))
@@ -608,7 +679,7 @@ object IngestStream {
     }
 
     DriverOps.parallel(
-      () => { labelRelabel(); logDelete(fpsTable(spark, statePath), idSet) },
+      () => { labelRelabel(); logDelete(fpsT, idSet) },
       () => logDelete(snapTable(spark, statePath), idSet),
       () => logDelete(quarantineTable(spark, statePath), idSet),
       shardRewrite)
@@ -656,31 +727,35 @@ object IngestStream {
       maxDist: Int, publish: Option[PublishConfig],
       maintain: MaintainConfig,
       drift: Option[DriftMonitor.GateConfig]): Unit =
-    ingest(batch, batchId, statePath, maxDist, publish, maintain, drift,
+    ingest(Text, batch.select("doc_id", "text"), batchId, statePath,
+      maxDist, publish, maintain, drift.map(textGate),
       ClusterMaintain.LocalMergeMax)
 
-  /** [[processBatch]] with the bound of its driver-side path as a
-    * parameter: `localMax = 0` sends every non-empty batch down the
-    * distributed path (IngestBatchSpec runs both paths over the same
-    * batches).
+  /** ONE micro-batch of `loop` — the body both ingest loops run. `batch`
+    * holds doc_id and the loop's raw columns; `localMax` bounds the
+    * driver-side path (`localMax = 0` sends every non-empty batch down
+    * the distributed path: IngestBatchSpec runs both paths over the
+    * same batches, for each loop).
     */
-  private[graft] def ingest(batch: DataFrame, batchId: Long,
+  private[graft] def ingest(loop: Loop, batch: DataFrame, batchId: Long,
       statePath: String, maxDist: Int, publish: Option[PublishConfig],
-      maintain: MaintainConfig, drift: Option[DriftMonitor.GateConfig],
+      maintain: MaintainConfig, gate: Option[Gate],
       localMax: Long): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     val labelsT = labelsTable(spark, statePath)
-    val fpsT = fpsTable(spark, statePath)
+    val fpsT = loop.fpsTable(spark, statePath)
     val snapT = snapTable(spark, statePath)
     val manifestT = publish.map(_ => publishManifest(spark, statePath))
+    def tick(): Unit =
+      if (maintain.due(batchId)) runMaintenance(spark, statePath, maintain, fpsT)
     if (labelsT.lastBatchId >= batchId && fpsT.lastBatchId >= batchId &&
         snapT.lastBatchId >= batchId &&
         manifestT.forall(_.lastBatchId >= batchId)) {
       // full replay → data no-op; still honor a due maintenance tick
       // (idempotent), so a crash between the commits and the original
       // run's maintenance doesn't skip the cadence entirely
-      if (maintain.due(batchId)) runMaintenance(spark, statePath, maintain)
+      tick()
       return
     }
 
@@ -688,41 +763,38 @@ object IngestStream {
     // from the stored snapshot are new work. The survivor among
     // same-id rows is the one with the SMALLEST content digest — a
     // deterministic function of the row set, so a micro-batch that
-    // carries one doc_id with conflicting texts (a mutating source)
+    // carries one doc_id with conflicting contents (a mutating source)
     // still lands the same snapshot fp and labels on every replay and
     // partitioning (IngestStreamSpec pins it). Ordering by the
     // partition key itself would leave the tie to partition order.
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(md5(col("text")).asc)
-    val distinctBatch = batch.select(col("doc_id"), col("text"))
+      .partitionBy("doc_id").orderBy(md5(col(loop.content)).asc)
+    val distinctBatch = batch
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    // ONE checkpoint serves the raw-text consumers (quarantine,
-    // snapshot), the fingerprint consumers (probe, merge, fp append)
-    // and the publish token counts: the simhash kernel and the token
-    // count ride the same materialization
-    val addedFp = Dedup.withSimhashText(snapT.read() match {
+    val added = snapT.read() match {
       case Some(snap) => distinctBatch
         .join(snap.select("doc_id"), Seq("doc_id"), "left_anti")
       case None => distinctBatch
-    }, "doc_id", "text")
-      .withColumn("n_tok",
-        graft.text.TextAnalysis.tokenCountWs(col("text")).cast("long"))
-      .localCheckpoint()
-    val added = addedFp.select("doc_id", "text")
+    }
+    // ONE checkpoint of the new docs' facts (the text loop's simhash
+    // and token count, the media loop's single decode) serves every
+    // consumer below: the drift gate, the probe, the merge, the fp and
+    // snapshot appends and the publish
+    val facts = loop.admit(added).localCheckpoint()
 
     // drift GATE (monitor → ACTION, round-11 verdict item 5): score
-    // the batch AS DELIVERED against the reference histogram; on
-    // alarm the admitted-new docs land in quarantine and the batch
-    // touches nothing downstream — no labels, no snapshot, no shards.
-    // The decision is a deterministic function of (batch, reference),
-    // so a crash replay recomputes the identical route; both writes
-    // carry their own batch-id gate. Since quarantined ids never
-    // enter the snapshot, redelivering them after requalification
-    // flows through the loop as ordinary new docs.
-    val alarmed = drift.exists { g =>
-      val (nDocs, nUnseen, psiU, unseenU) = DriftMonitor.batchStats(
-        batch.select("doc_id", "text"), g.ref, g.nBins, g.model)
+    // the batch against the reference histogram; on alarm the
+    // admitted-new docs land in quarantine and the batch touches
+    // nothing downstream — no labels, no snapshot, no shards. The
+    // decision is a deterministic function of (batch, reference), so a
+    // crash replay recomputes the identical route; both writes carry
+    // their own batch-id gate. Since quarantined ids never enter the
+    // snapshot, redelivering them after requalification flows through
+    // the loop as ordinary new docs.
+    val alarmed = gate.exists { g =>
+      val (nDocs, nUnseen, psiU, unseenU) = DriftMonitor.statsOf(g.ref,
+        DriftMonitor.binCounts(g.bins(batch, facts)))
       val alarm = psiU >= g.alertAtPsiU || unseenU >= g.alertAtUnseenU
       val mT = gateMonitorTable(spark, statePath)
       if (mT.lastBatchId < batchId) {
@@ -733,19 +805,22 @@ object IngestStream {
       if (alarm) {
         val qT = quarantineTable(spark, statePath)
         if (qT.lastBatchId < batchId)
-          qT.append(added.select(col("doc_id"), col("text"),
-            lit(batchId).as("batch_id")), batchId)
+          qT.append(added.withColumn("batch_id", lit(batchId)), batchId)
       }
       alarm
     }
     if (alarmed) {
-      if (maintain.due(batchId)) runMaintenance(spark, statePath, maintain)
+      tick()
       return
     }
 
+    // the loop's admission verdict (the media quality gate) — no
+    // checkpoint of its own: `facts` is, so each consumer re-applies
+    // only the in-memory filter
+    val admitted = facts.filter(loop.keep)
     val priorLabels = labelsT.read()
     val priorFps = fpsT.read()
-    val bFp = addedFp.select("doc_id", "simhash")
+    val bFp = admitted.select("doc_id", loop.fpCol)
 
     // THE selection point: ONE bounded collect of the batch's per-doc
     // facts, then one bounded collect of its edges to the stored index
@@ -758,20 +833,22 @@ object IngestStream {
     // the labels and publish ops share it, and a replay whose labels
     // and manifest are already committed pays for neither collect.
     lazy val local = for {
-      rows <- DriverOps.collectBounded(addedFp.select(
-        col("doc_id").cast("long"), col("simhash"), col("n_tok")), localMax)
+      rows <- DriverOps.collectBounded(admitted.select(
+        col("doc_id").cast("long"), col(loop.fpCol),
+        if (publish.isDefined) col("n_tok") else lit(0L)), localMax)
       if !rows.exists(_.anyNull)
-      facts = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      docs = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       cross <- priorFps match {
         case None => Some(Seq.empty[(Long, Long)])
         case Some(idx) =>
           // one rep (min id) per distinct fingerprint: the within-batch
           // star edges below connect each clique to its rep
-          val reps = facts.groupBy(_._2).iterator
+          val reps = docs.groupBy(_._2).iterator
             .map { case (fp, ms) => (ms.iterator.map(_._1).min, fp) }.toSeq
-          Dedup.crossNearEdgesLocal(reps, idx, maxDist, localMax)
+          Dedup.crossNearEdgesLocal(reps, idx, loop.fpCol, loop.bandBits,
+            maxDist, localMax)
       }
-    } yield (facts, cross)
+    } yield (docs, cross)
     val emptyLabels = Seq.empty[(Long, Long, Long)]
       .toDF("doc_id", "cluster_id", "cluster_size")
 
@@ -801,35 +878,37 @@ object IngestStream {
         // and written — the store rewrites only their buckets
         val prior = priorLabels.getOrElse(emptyLabels)
         val changed = local match {
-          case Some((facts, cross)) =>
+          case Some((docs, cross)) =>
             // within-batch connectivity from the driver-side banded
             // kernel, as star edges doc → component min
             val within = Clusters.simhashComponentsLocal(
-              facts.map(f => (f._1, f._2)), maxDist)
+              docs.map(f => (f._1, f._2)), maxDist, loop.bandBits)
               .collect { case (id, c, _) if id != c => (id, c) }
             val (delta, _) = ClusterMaintain.mergeBatchDeltaLocal(prior,
-              facts.map(_._1), (cross ++ within).toArray, localMax)
+              docs.map(_._1), (cross ++ within).toArray, localMax)
             // a LocalRelation while the affected clusters' members fit
             // the bound: the MERGE then probes its keys on the driver
             if (DriverOps.isLocal(delta)) delta else delta.localCheckpoint()
           case None =>
-            // rep-level cross edges (crossNearEdgesOf):
+            // rep-level cross edges (crossBandedEdgesOf):
             // connectivity-equivalent to the full member pair list —
             // the within-batch pass emits each batch clique's hamming-0
             // pairs, and stored identical-fp members already share a
             // cluster from their own ingest
             val edges = (priorFps match {
-              case Some(idx) => Dedup.crossNearEdgesOf(bFp, idx, maxDist)
+              case Some(idx) => Dedup.crossBandedEdgesOf(bFp, idx,
+                loop.fpCol, loop.bandBits, maxDist)
               case None => Seq.empty[(Long, Long)].toDF("a", "b")
-            }).union(Dedup.simhashConnectivityEdgesOf(bFp, maxDist))
+            }).union(Dedup.connectivityEdgesOf(bFp, loop.fpCol,
+              loop.bandBits, maxDist))
             ClusterMaintain.mergeBatchDeltaDistributed(prior,
-              added.select(col("doc_id").as("id")),
+              admitted.select(col("doc_id").as("id")),
               ClusterMaintain.materializedEdges(edges))._1.localCheckpoint()
         }
         labelsT.merge(changed, batchId)
       },
       () => if (fpsT.lastBatchId < batchId)
-        fpsT.append(bFp, batchId),
+        fpsT.append(admitted.select(loop.fpsCols.map(col): _*), batchId),
       () => publish.foreach { cfg =>
         val mT = manifestT.get
         if (mT.lastBatchId < batchId) {
@@ -841,17 +920,17 @@ object IngestStream {
           val prior = mT.read().map(_.as[Sampling.ManifestRow].collect()
             .toSeq).getOrElse(Seq.empty)
           val batchFacts = local match {
-            case Some((facts, _)) =>
+            case Some((docs, _)) =>
               // the assignment is a driver-side prefix sum, and the
               // straddler is the shard the prior token total ends in
               val assigned = Sampling.shardAppendLocal(
-                facts.map(f => (pubBase + f._1, f._3)).toSeq, "pub_id",
+                docs.map(f => (pubBase + f._1, f._3)).toSeq, "pub_id",
                 "n_tok", cfg.budget, prior)
               Sampling.appendShardFilesLocal(spark, assigned, "pub_id",
                 "n_tok", cfg.dest, prior, localMax)
               Sampling.shardManifestLocal(assigned)
             case None =>
-              val pubRows = addedFp.select(
+              val pubRows = admitted.select(
                 (lit(pubBase) + col("doc_id")).as("pub_id"), col("n_tok"))
               val assigned = Sampling.shardAppend(pubRows, "pub_id", "n_tok",
                 cfg.budget, cfg.bucketWidth,
@@ -868,15 +947,16 @@ object IngestStream {
       })
     // snapshot LAST — the replay gate (see above)
     if (snapT.lastBatchId < batchId)
-      snapT.append(
-        added.select(col("doc_id"), md5(col("text")).as("fp")), batchId)
+      snapT.append(admitted.select(col("doc_id"), loop.snapFp.as("fp")),
+        batchId)
 
-    if (maintain.due(batchId)) runMaintenance(spark, statePath, maintain)
+    tick()
   }
 
   /** The cadence tick: fold EVERY AppendTable the loop appends to —
-    * fps, snap, and (when a drift gate ever wrote them) the monitor
-    * and quarantine logs, whose fan-in would otherwise grow one
+    * its fps (through the loop's own handle, so the rewrite keeps the
+    * rows' type), snap, and (when a drift gate ever wrote them) the
+    * monitor and quarantine logs, whose fan-in would otherwise grow one
     * directory per batch exactly like the tables the cadence was
     * built for (compact on a never-written table is a no-op) — and,
     * when the label store has outgrown its buckets, double them via
@@ -885,8 +965,8 @@ object IngestStream {
     * durability) and is safe to re-run on replay — compact and
     * rebucket are both idempotent and crash-safe.
     */
-  private def runMaintenance(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, maintain: MaintainConfig): Unit = {
+  private def runMaintenance(spark: SparkSession, statePath: String,
+      maintain: MaintainConfig, fpsT: AppendTable): Unit = {
     // independent tables → overlapped folds (DriverOps.parallel —
     // guide §2.6; a never-written table's compact is a pointer-read
     // no-op and costs its thread nothing). The label store's
@@ -896,7 +976,7 @@ object IngestStream {
     // fallback keeps today's compacts→grow→vacuum step order for the
     // kill sweeps.
     DriverOps.parallel(
-      () => fpsTable(spark, statePath).compact(),
+      () => fpsT.compact(),
       () => snapTable(spark, statePath).compact(),
       // the gate's own log, plus the standalone monitor's for operators
       // who point one at the same statePath (no-op when never written)

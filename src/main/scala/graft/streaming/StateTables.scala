@@ -1523,7 +1523,8 @@ final class BucketedTable(spark: SparkSession, path: String,
     // pointer exists to give; mergeResolve reads once for the same
     // reason)
     case (v, _, nb, sm) =>
-      // keys + their buckets in ONE job; the broadcast build is free
+      // keys + their buckets in ONE job; the semi-join's broadcast of
+      // the collected keys still runs a build job of its own
       val (keySet, touched) = collectKeySet(keys, Some(nb), "readKeys")
       val m = manifest(v)
       val dirs = touched.toSeq.sorted.flatMap(m.get).distinct

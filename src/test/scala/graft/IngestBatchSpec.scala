@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{ClusterMaintain, Clusters}
 import graft.operators.Sampling
-import graft.streaming.{DriverOps, IngestStream}
+import graft.streaming.{DriverOps, IngestStream, MediaIngest}
 
 /** The ingest micro-batch's cost and its two paths: the Spark jobs a
   * `processBatch` call runs (the driver-side bounded path), and the
@@ -65,21 +65,14 @@ class IngestBatchSpec extends AnyFunSuite {
     val budgets = Seq(19, 25, 30)
     bs.zipWithIndex.foreach { case (b, i) =>
       val df = b.toDF("doc_id", "text")
-      val sites = SparkJobs.sitesOnThisThread(IngestStream.processBatch(df,
-        i.toLong, state, 3, publish, maintain))
-      val bySite = sites.groupBy(identity).toSeq.sortBy(-_._2.size)
-        .map { case (k, v) => s"$k ×${v.size}" }.mkString(", ")
-      info(s"call $i: ${sites.size} jobs: $bySite")
-      assert(sites.size <= budgets(i),
-        s"call $i ran ${sites.size} jobs (budget ${budgets(i)}): $bySite")
+      val sites = SparkJobs.withinBudget(s"call $i", budgets(i))(
+        IngestStream.processBatch(df, i.toLong, state, 3, publish, maintain))
+      info(s"call $i: ${sites.size} jobs: ${SparkJobs.bySite(sites)}")
     }
     val ids = bs.flatten.map(_._1).distinct.filter(_ % 33 == 0).toDF("doc_id")
-    val forget = SparkJobs.sitesOnThisThread(IngestStream.forget(spark, state,
-      ids, 3L, 3, publish.map(_.dest)))
-    val forgetBySite = forget.groupBy(identity).toSeq.sortBy(-_._2.size)
-      .map { case (k, v) => s"$k ×${v.size}" }.mkString(", ")
-    info(s"forget: ${forget.size} jobs: $forgetBySite")
-    assert(forget.size <= 34, s"forget ran ${forget.size} jobs: $forgetBySite")
+    val forget = SparkJobs.withinBudget("forget", 34)(IngestStream.forget(
+      spark, state, ids, 3L, 3, publish.map(_.dest)))
+    info(s"forget: ${forget.size} jobs: ${SparkJobs.bySite(forget)}")
     // the loop still converges to the from-scratch labeling
     val survivors = bs.flatten.groupBy(_._1).map(_._2.head).toSeq
       .filterNot(_._1 % 33 == 0).toDF("doc_id", "text")
@@ -87,6 +80,19 @@ class IngestBatchSpec extends AnyFunSuite {
       rows(Some(Clusters.simhashClusters(survivors, "doc_id", "text", 3)
         .select("doc_id", "cluster_id", "cluster_size"))))
   }
+
+  /** Every table `reads` names holds the same rows under each of
+    * `dirs` as under the first.
+    */
+  private def sameState(dirs: Seq[String],
+      reads: Seq[(String, String => Option[DataFrame])]): Unit =
+    dirs.tail.foreach { other =>
+      reads.foreach { case (name, read) =>
+        val (a, b) = (rows(read(dirs.head)), rows(read(other)))
+        assert(a.nonEmpty, s"$name is empty")
+        assert(a == b, s"$name differs between ${dirs.head} and $other")
+      }
+    }
 
   test("the bounded driver-side path and the distributed path land identical state") {
     val s = spark
@@ -101,8 +107,8 @@ class IngestBatchSpec extends AnyFunSuite {
       val dir = root(s"ingest_path_$localMax")
       val publish = Some(IngestStream.PublishConfig(s"$dir/shards", budget))
       bs.zipWithIndex.foreach { case (b, i) =>
-        IngestStream.ingest(b.toDF("doc_id", "text"), i.toLong, s"$dir/state",
-          3, publish, maintain, None, localMax)
+        IngestStream.ingest(IngestStream.Text, b.toDF("doc_id", "text"),
+          i.toLong, s"$dir/state", 3, publish, maintain, None, localMax)
         if (localMax == tight && i == 1) {
           val straddler = IngestStream.publishManifest(spark, s"$dir/state")
             .read().get.as[Sampling.ManifestRow].collect().maxBy(_._1)
@@ -113,21 +119,29 @@ class IngestBatchSpec extends AnyFunSuite {
     }
     val local = run(ClusterMaintain.LocalMergeMax)
     val others = Seq(run(0L), run(tight))
-    others.foreach { other =>
-      Seq[String => Option[DataFrame]](
-        d => IngestStream.labelsTable(spark, s"$d/state").read(),
-        d => IngestStream.fpsTable(spark, s"$d/state").read(),
-        d => IngestStream.snapTable(spark, s"$d/state").read(),
-        d => IngestStream.publishManifest(spark, s"$d/state").read(),
-        d => Some(spark.read.parquet(s"$d/shards")
-          .select(col("pub_id"), col("n_tok"), col("shard_id").cast("long")))
-      ).zip(Seq("labels", "fps", "snap", "manifest", "shard files")).foreach {
-        case (read, name) =>
-          val (a, b) = (rows(read(local)), rows(read(other)))
-          assert(a.nonEmpty, s"$name is empty")
-          assert(a == b, s"$name differs between $local and $other")
+    sameState(local +: others, Seq[(String, String => Option[DataFrame])](
+      "labels" -> (d => IngestStream.labelsTable(spark, s"$d/state").read()),
+      "fps" -> (d => IngestStream.fpsTable(spark, s"$d/state").read()),
+      "snap" -> (d => IngestStream.snapTable(spark, s"$d/state").read()),
+      "manifest" -> (d => IngestStream.publishManifest(spark, s"$d/state").read()),
+      "shard files" -> (d => Some(spark.read.parquet(s"$d/shards")
+        .select(col("pub_id"), col("n_tok"), col("shard_id").cast("long"))))))
+    // the media loop runs the same body: MediaIngestSpec's corpus in
+    // thirds, with a maintenance tick on the third call
+    val media = MediaIngestSpec.corpus(spark, 48).localCheckpoint()
+    def runMedia(localMax: Long): String = {
+      val dir = root(s"media_path_$localMax")
+      (0 to 2).foreach { k =>
+        MediaIngest.ingest(media.filter(col("media_id") % 3 === k), k.toLong,
+          dir, 3, maintain, None, localMax)
       }
+      dir
     }
+    sameState(Seq(runMedia(ClusterMaintain.LocalMergeMax), runMedia(0L)),
+      Seq[(String, String => Option[DataFrame])](
+        "media labels" -> (d => IngestStream.labelsTable(spark, d).read()),
+        "media fps" -> (d => MediaIngest.fpsTable(spark, d).read()),
+        "media snap" -> (d => IngestStream.snapTable(spark, d).read())))
     // each shard directory holds one file on every path
     (local +: others).foreach { d =>
       new java.io.File(s"$d/shards").listFiles().filter(_.isDirectory)

@@ -11,22 +11,13 @@ import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal.Fixtures
 import graft.streaming.{Failpoints, IngestStream, MediaIngest}
 
-/** The media ingest loop's contracts (streaming/MediaIngest.scala):
-  * any batch partitioning — including the real readStream path and a
-  * replay — converges to the from-scratch decode-once pipeline's
-  * labeling; quality rejects enter no state table; the luma drift
-  * gate quarantines an alarmed batch without touching other state;
-  * and a kill at every file-op boundary of a batch leaves per-table
-  * pre-or-post state that the replay then converges.
-  */
-class MediaIngestSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+/** The spec's asset corpus, shared with IngestBatchSpec. */
+object MediaIngestSpec {
 
   /** v0 bmp + v1 png24 of the same pattern word (a near-dup pair),
     * v2 flat constant-20 (quality reject), v3 unrelated word.
     */
-  private def corpus(n: Int): DataFrame = {
-    val s = spark
+  def corpus(s: org.apache.spark.sql.SparkSession, n: Int): DataFrame = {
     import s.implicits._
     (0L until n.toLong).toDF("media_id").as[Long]
       .mapPartitions(_.map { j =>
@@ -44,6 +35,21 @@ class MediaIngestSpec extends AnyFunSuite {
         }
       }).toDF("media_id", "format", "bytes")
   }
+}
+
+/** The media ingest loop's contracts (streaming/MediaIngest.scala):
+  * any batch partitioning — including the real readStream path and a
+  * replay — converges to the from-scratch decode-once pipeline's
+  * labeling; quality rejects enter no state table; the luma drift
+  * gate quarantines an alarmed batch without touching other state;
+  * a kill at every file-op boundary of a batch leaves per-table
+  * pre-or-post state that the replay then converges; a call stays in
+  * its Spark job budget; and a forget keeps the media fp index's rows.
+  */
+class MediaIngestSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  private def corpus(n: Int): DataFrame = MediaIngestSpec.corpus(spark, n)
 
   /** From-scratch: decode once, quality-filter, banded pairs, CC,
     * keep-best — the labeling the loop must converge to.
@@ -130,7 +136,7 @@ class MediaIngestSpec extends AnyFunSuite {
       .getOrElse(Set.empty[Long])
     assert(ids(IngestStream.labelsTable(spark, root).read())
       .intersect(flats).isEmpty)
-    assert(ids(IngestStream.fpsTable(spark, root).read())
+    assert(ids(MediaIngest.fpsTable(spark, root).read())
       .intersect(flats).isEmpty)
     assert(ids(IngestStream.snapTable(spark, root).read())
       .intersect(flats).isEmpty)
@@ -205,7 +211,7 @@ class MediaIngestSpec extends AnyFunSuite {
           .map(_.select("doc_id", "cluster_id").collect()
             .map(r => r.getLong(0) -> r.getLong(1)).toMap)
           .getOrElse(Map.empty),
-        ids(IngestStream.fpsTable(spark, root).read()),
+        ids(MediaIngest.fpsTable(spark, root).read()),
         ids(IngestStream.snapTable(spark, root).read()))
     }
     val cleanRoot = Files.createTempDirectory("media_crash_clean").toString
@@ -243,5 +249,51 @@ class MediaIngestSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       k += 1
     }
+    info(s"${k - 2} kill points")
+  }
+
+  test("processBatch job budget: ≤ 9 fresh, ≤ 14 over state, ≤ 18 with maintenance") {
+    // its own copy of the micro-batch body ran 18 / 25 / 29 jobs here
+    val media = corpus(48).localCheckpoint()
+    val root = Files.createTempDirectory("media_budget").toString
+    val maintain = IngestStream.MaintainConfig(3, 40L, 2)
+    Seq(9, 14, 18).zipWithIndex.foreach { case (budget, k) =>
+      val sites = SparkJobs.withinBudget(s"call $k", budget)(
+        MediaIngest.processBatch(media.filter(col("media_id") % 3 === k),
+          k.toLong, root, 3, maintain, None))
+      info(s"call $k: ${sites.size} jobs: ${SparkJobs.bySite(sites)}")
+    }
+    // the tick compacted the fp index through its own handle
+    assert(MediaIngest.fpsTable(spark, root).read().get
+      .filter(col("fp").isNull || col("pixels").isNull).isEmpty)
+    assert(storeMap(root) == fromScratch(media))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
+  test("forget on a media state keeps the fp index's rows and relabels like from-scratch") {
+    val s = spark
+    import s.implicits._
+    val media = corpus(48).localCheckpoint()
+    val root = Files.createTempDirectory("media_forget").toString
+    (0 to 2).foreach { k =>
+      MediaIngest.processBatch(media.filter(col("media_id") % 3 === k),
+        k.toLong, root, 3)
+    }
+    // two singletons (v3), then one member of a v0/v1 pair
+    Seq(Seq(3L, 7L), Seq(4L)).zipWithIndex.foldLeft(Set.empty[Long]) {
+      case (gone, (ids, i)) =>
+        val forgotten = gone ++ ids
+        MediaIngest.forget(spark, root, ids.toDF("doc_id"), 3L + i)
+        val fps = MediaIngest.fpsTable(spark, root).read().get
+        assert(fps.filter(col("fp").isNull || col("pixels").isNull).isEmpty,
+          s"forget of $ids nulled fp index rows")
+        assert(fps.select("doc_id").as[Long].collect().toSet
+          .intersect(forgotten).isEmpty)
+        assert(storeMap(root) ==
+          fromScratch(media.filter(!col("media_id").isin(forgotten.toSeq: _*))),
+          s"forget of $ids diverged from a from-scratch run over the survivors")
+        forgotten
+    }
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 }

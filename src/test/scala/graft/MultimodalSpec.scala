@@ -1477,5 +1477,30 @@ class MultimodalSpec extends AnyFunSuite {
     } yield (a, b, hm)).toSet
     assert(got == brute)
     assert(brute.size == 30, s"expected 10 bases x 3 planted pairs: $brute")
+
+    // the driver-side kernels at the 64-bit width (4×16-bit bands):
+    // components equal a union-find over the brute-force pairs (root =
+    // min member), store edges the brute-force cross pairs
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = parent.get(x).fold(x)(find)
+    brute.foreach { case (a, b, _) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val size = fps.groupBy(f => find(f._1)).map { case (r, m) => r -> m.size.toLong }
+    val local = graft.dedup.Clusters.simhashComponentsLocal(fps.toArray,
+      maxDist = 3, bandBits = 16)
+    assert(local.map { case (d, c, n) => d -> (c, n) }.toMap ==
+      fps.map { case (d, _) => d -> (find(d), size(find(d))) }.toMap)
+    val (batch, stored) = fps.partition(_._1 % 2 == 0)
+    val reps = batch.groupBy(_._2).map { case (fp, m) => (m.map(_._1).min, fp) }.toSeq
+    val cross = graft.dedup.Dedup.crossNearEdgesLocal(reps,
+      stored.toDF("doc_id", "fp"), "fp", 16, 3, 1000L)
+    val bruteCross = (for {
+      (a, fa) <- reps; (b, fb) <- stored
+      if java.lang.Long.bitCount(fa ^ fb) <= 3
+    } yield (a, b)).toSet
+    assert(bruteCross.nonEmpty)
+    assert(cross.map(_.toSet) == Some(bruteCross))
   }
 }

@@ -97,6 +97,22 @@ object SparkJobs {
   def sitesOnThisThread(body: => Unit): Seq[String] =
     tagged(body)._1.map(_.site)
 
+  /** The job-budget check: runs `body`, fails when it ran more than
+    * `budget` jobs on this thread — the message names each call site
+    * and its count ([[bySite]]) — and returns the sites.
+    */
+  def withinBudget(what: String, budget: Int)(body: => Unit): Seq[String] = {
+    val sites = sitesOnThisThread(body)
+    org.scalatest.Assertions.assert(sites.size <= budget,
+      s"$what ran ${sites.size} jobs (budget $budget): ${bySite(sites)}")
+    sites
+  }
+
+  /** Call sites as `File.scala:line ×n`, the most frequent first. */
+  def bySite(sites: Seq[String]): String =
+    sites.groupBy(identity).toSeq.sortBy(-_._2.size)
+      .map { case (k, v) => s"$k ×${v.size}" }.mkString(", ")
+
   /** The result bytes the tasks of this thread's jobs shipped to the
     * driver while `body` ran, and how many tasks shipped them. Only
     * successful tasks ship a result. A task that finishes after the
