@@ -116,25 +116,27 @@ object Sessions {
       .config("spark.local.dir", localDir)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // AQE on: measured off (OPTIMIZATION_r15/r16), the static
+      // planner picks sort-merge joins with full shuffles where AQE
+      // converts to broadcast at runtime — q_c_forget 10.1 → 13.7 s,
+      // task time 130 s
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // experiment knob (round 16): parallelismFirst=false lets AQE
-      // coalesce tiny shuffles by BYTES (advisory size) instead of
-      // spreading them across every core — measured per-gate before
-      // changing any default
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
+      // parallelismFirst=false lets AQE coalesce tiny shuffles by
+      // BYTES (advisory size) instead of spreading them across every
+      // core. Measured round 16: no change on the lifecycle gates (job
+      // counts identical — the floor is per-job driver latency, not
+      // task count), so Spark's default stays
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
       // RocksDB state store: BOUNDED HEAP — at scale the keyed state
       // must live off-heap/on-disk, not in executor memory. Measured
       // tradeoff (round 6, 100k-event single-batch replay): the
       // default HDFS-backed in-memory provider is ~1.3 s faster on
-      // this tiny-state shape (5.5 s vs 6.8 s gate time) — override
-      // via SPARK_GRAFT_STATESTORE when state is provably small;
-      // RocksDB stays the default because heap-resident state is the
-      // thing that falls over at 100 TB, not the extra second here
-      .config("spark.sql.streaming.stateStore.providerClass", sys.env.getOrElse("SPARK_GRAFT_STATESTORE",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+      // this tiny-state shape (5.5 s vs 6.8 s gate time); RocksDB
+      // stays because heap-resident state is the thing that falls
+      // over at 100 TB, not the extra second here
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // skip RocksDB's get-before-put row counting — we never read the
       // numRowsTotal metric, and the extra point lookup per state put
       // is measurable on wide single-batch replays

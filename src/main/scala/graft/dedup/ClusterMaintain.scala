@@ -59,9 +59,8 @@ object ClusterMaintain {
 
   /** Bound on the rows the LOCAL contracted-CC fast path may collect
     * (batch edges and node ids, each ∝ batch by the operator's
-    * contract, and the affected clusters' members). Same sizing
-    * rationale as [[graft.streaming.IngestStream.LocalRelabelMax]]:
-    * below it, the contracted graph is thousands of rows where the
+    * contract, and the affected clusters' members). Below it, the
+    * contracted graph is thousands of rows where the
     * distributed CC pays several Spark scheduling rounds per
     * iteration for microseconds of actual work (measured round 15:
     * the CC loop and its checkpoints were the bulk of every lifecycle
@@ -79,6 +78,16 @@ object ClusterMaintain {
     * size took 8.0 / 12.2 / 23.0 s on the driver-side path and 11.1 /
     * 26.6 / 72.5 s on the distributed one, so the driver-side path
     * still wins at the bound.
+    *
+    * [[graft.streaming.IngestStream.forget]]'s relabel applies the
+    * same bound to the affected clusters' survivors, whose components
+    * it computes with the same driver kernel
+    * ([[Clusters.simhashComponentsLocal]]). That kernel is sized by
+    * CPU, not memory: its per-band bucket scan costs ~n²/64
+    * single-threaded hamming comparisons (4 bands × 256 values ×
+    * (n/256)²), so 100k survivors ≈ 1.6e8 comparisons ≈ a few hundred
+    * ms, while 1M would be minutes of driver stall, slower than the
+    * distributed CC it replaces.
     */
   val LocalMergeMax: Long = 100000L
 
@@ -208,12 +217,10 @@ object ClusterMaintain {
       epRows.foreach(t => s += t._2)
       s.toArray
     }
-    // contracted node set: affected cluster reps ∪ batch ids
-    val nodeIds = {
-      val s = scala.collection.mutable.LinkedHashSet.empty[Long]
-      affectedIds.foreach(s += _); batchArr.foreach(s += _)
-      s.toArray
-    }
+    // contracted node set: affected cluster reps ∪ batch ids, in
+    // ascending order: the union-find roots each set at its minimum
+    // index, so a component's root IS its min node id
+    val nodeIds = (affectedIds ++ batchArr).distinct.sorted
     val idx = nodeIds.zipWithIndex.toMap
     val uf = new UnionFind(nodeIds.length)
     edgeArr.foreach { case (a, b) =>
@@ -226,12 +233,7 @@ object ClusterMaintain {
     }
     // component label = min node id; merged size = Σ prior sizes of
     // constituent clusters + batch occurrences in the component
-    val compMin = scala.collection.mutable.HashMap.empty[Int, Long]
-    nodeIds.indices.foreach { i =>
-      val r = uf.find(i)
-      compMin(r) = math.min(compMin.getOrElse(r, Long.MaxValue), nodeIds(i))
-    }
-    def labelOf(node: Long): Long = compMin(uf.find(idx(node)))
+    def labelOf(node: Long): Long = nodeIds(uf.find(idx(node)))
     val sizeOf = scala.collection.mutable.HashMap.empty[Long, Long]
     affectedIds.foreach { c =>
       val l = labelOf(c); sizeOf(l) = sizeOf.getOrElse(l, 0L) + priorSize(c)

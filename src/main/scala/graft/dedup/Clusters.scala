@@ -38,9 +38,8 @@ import graft.streaming.DriverOps
 object Clusters {
 
   /** Bound on the EDGE rows the driver-local CC fast path may collect
-    * — the [[graft.dedup.ClusterMaintain.LocalMergeMax]] /
-    * [[graft.streaming.IngestStream.LocalRelabelMax]] pattern applied
-    * to connected components. Rationale (measured round 16): at gate
+    * — the [[graft.dedup.ClusterMaintain.LocalMergeMax]] pattern
+    * applied to connected components. Rationale (measured round 16): at gate
     * scale every distributed CC round is pure scheduling floor —
     * q_d_cc_clusters ran 118 AQE stage-materialization jobs for 2.5 s
     * of cumulative task time — and the returned label frame is a lazy
@@ -86,21 +85,18 @@ object Clusters {
       else nodes.select(col("id"))
         .join(broadcast(endpoints.toSeq.toDF("id")), Seq("id"), "left_semi")
         .distinct().collect().map(_.getLong(0)).toSet
-    val ids = endpoints.filter(member)
+    // ascending ids: the union-find roots each set at its minimum
+    // index, so a component's root IS its min member id
+    val ids = endpoints.filter(member).sorted
     val idx = ids.zipWithIndex.toMap
     val uf = new UnionFind(ids.length)
     edgeArr.foreach { case (a, b) =>
       if (member(a) && member(b)) uf.union(idx(a), idx(b))
     }
-    val compMin = scala.collection.mutable.HashMap.empty[Int, Long]
-    ids.indices.foreach { i =>
-      val r = uf.find(i)
-      compMin(r) = math.min(compMin.getOrElse(r, Long.MaxValue), ids(i))
-    }
     // only non-identity labels ride the broadcast; singletons (and
     // every non-endpoint node) fall through the coalesce to their id
     val mapRows = ids.indices.iterator
-      .map(i => (ids(i), compMin(uf.find(i))))
+      .map(i => (ids(i), ids(uf.find(i))))
       .filter { case (id, cl) => id != cl }.toSeq
     nodes.select(col("id"))
       .join(broadcast(mapRows.toDF("id", "__cc")), Seq("id"), "left")
@@ -238,9 +234,11 @@ object Clusters {
     // collapse identical fingerprints (dup cliques): one rep per
     // distinct fp carrying the clique's min member id + member count
     val byFp = fps.groupBy(_._2)
+    // in ascending min-id order: the union-find roots each set at its
+    // minimum index, so a component's root rep carries its label
     val reps = byFp.iterator
       .map { case (fp, ms) => (fp, ms.iterator.map(_._1).min, ms.length.toLong) }
-      .toArray
+      .toArray.sortBy(_._2)
     val n = reps.length
     val idxOf = reps.iterator.zipWithIndex
       .map { case ((fp, _, _), i) => fp -> i }.toMap
@@ -276,19 +274,18 @@ object Clusters {
         a += 1
       }
     }
-    // component label = min member id; size = total member count
-    val compMin = scala.collection.mutable.HashMap.empty[Int, Long]
+    // component label = the root's min member id; size = total
+    // member count
     val compSize = scala.collection.mutable.HashMap.empty[Int, Long]
     i = 0
     while (i < n) {
       val r = uf.find(i)
-      compMin(r) = math.min(compMin.getOrElse(r, Long.MaxValue), reps(i)._2)
       compSize(r) = compSize.getOrElse(r, 0L) + reps(i)._3
       i += 1
     }
     fps.iterator.map { case (id, fp) =>
       val r = uf.find(idxOf(fp))
-      (id, compMin(r), compSize(r))
+      (id, reps(r)._2, compSize(r))
     }.toSeq
   }
 

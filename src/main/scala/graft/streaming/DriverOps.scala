@@ -19,33 +19,28 @@ private[graft] object DriverOps {
     * sequential because the driver calls them sequentially). Each op
     * here is one or more Spark actions against its OWN table (own
     * directory, own pointer, own batch-id gate), so ordering ACROSS the
-    * ops was never part of any crash contract: a kill leaves some
+    * ops is no part of any crash contract: a kill leaves some
     * arbitrary subset of tables committed, and the replay re-runs
-    * whichever tables have not reached the batch id — exactly the
-    * "partial commit replays only the missing tables" contract the
-    * sequential form already promised (a sequential kill produces
-    * prefix subsets; the contract never depended on prefix-ness).
+    * whichever tables have not reached the batch id.
     *
     * At gate scale this overlaps the per-action driver latency that
     * dominates the lifecycle gates (measured round 16: ~70 ms of
     * scheduling floor per job across ~100 jobs per gate); at 100 TB it
     * back-fills executor capacity through each commit's straggler tail.
     *
-    * SEQUENTIAL whenever a [[Failpoints]] sweep is armed (or an
-    * interleaving hook installed) on the calling thread: the kill-point
-    * sweeps enumerate the k-th durable mutation in driver-thread order,
-    * which parallel submission would make nondeterministic — and the
-    * armed counter is deliberately thread-local, so a pool thread would
-    * never crash. Production/bench runs take the parallel path.
+    * Each pool thread runs its op under the caller's [[Failpoints]]
+    * context, so an armed kill sweep counts the overlapped steps on
+    * the caller's one counter and kills the order production runs.
     */
   def parallel(ops: (() => Unit)*): Unit =
-    if (Failpoints.active || ops.lengthCompare(1) <= 0) ops.foreach(_())
+    if (ops.lengthCompare(1) <= 0) ops.foreach(_())
     else {
+      val ctx = Failpoints.context
       val pool = java.util.concurrent.Executors.newFixedThreadPool(ops.size)
       try {
         val futs = ops.map { op =>
           pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = op()
+            override def call(): Unit = Failpoints.within(ctx)(op())
           })
         }
         // AWAIT EVERY op before propagating the first failure (as

@@ -122,14 +122,8 @@ object EventSink {
     */
   def processBatch(batch: Dataset[EventRow], batchId: Long,
       eventsPath: String, outboxPath: String,
-      deliver: OutboxEntry => Boolean, dlqMinAgeUs: Long): Unit =
-    processBatch(batch, batchId, eventsPath, outboxPath, deliver,
-      dlqMinAgeUs, EventsMaintain())
-
-  def processBatch(batch: Dataset[EventRow], batchId: Long,
-      eventsPath: String, outboxPath: String,
       deliver: OutboxEntry => Boolean, dlqMinAgeUs: Long,
-      maintain: EventsMaintain): Unit = {
+      maintain: EventsMaintain = EventsMaintain()): Unit = {
     val spark = batch.sparkSession
     val eventsT = eventsTable(spark, eventsPath)
     val outboxTable = new SnapshotTable(spark, outboxPath, Some(OutboxSchema))

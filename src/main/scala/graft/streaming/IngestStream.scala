@@ -179,19 +179,6 @@ object IngestStream {
     */
   val LabelBuckets = 16
 
-  /** Above this many affected-cluster survivors, [[forget]]'s relabel
-    * stays distributed; at or below it, the survivor fps collect and
-    * the components compute driver-side ([[graft.dedup.Clusters
-    * .simhashComponentsLocal]]). The bound is sized for the local
-    * path's CPU, not its memory: the per-band bucket scan costs
-    * ~n²/64 single-threaded hamming comparisons (4 bands × 256 values
-    * × (n/256)²), so 100k survivors ≈ 1.6e8 comparisons ≈ a few
-    * hundred ms — while 1M would be minutes of driver stall, slower
-    * than the distributed CC it replaces. Both paths produce
-    * identical labels (CurationSpec pins the equality).
-    */
-  val LocalRelabelMax = 100000L
-
   private def longs(names: String*): Seq[StructField] =
     names.map(StructField(_, LongType))
 
@@ -525,8 +512,7 @@ object IngestStream {
     val labelsT = labelsTable(spark, statePath)
     // the four mutation groups below are independent stores (labels +
     // fp index | snapshot | quarantine | published shards), so they
-    // overlap from the driver (DriverOps.parallel; sequential fallback
-    // preserves today's exact step order for the kill sweeps). The fp
+    // overlap from the driver (DriverOps.parallel). The fp
     // log delete stays strictly AFTER the relabel within its op: the
     // relabel reads survivor fps, and a concurrent consolidation
     // deletes the directories a same-moment reader could be scanning.
@@ -548,7 +534,7 @@ object IngestStream {
         // survivor set, collected only if it fits the local bound
         val survTake = DriverOps.collectBounded(
           members.join(broadcast(idSet), Seq("doc_id"), "left_anti"),
-          LocalRelabelMax)
+          ClusterMaintain.LocalMergeMax)
         val (relabeled, allKeys) = if (survTake.isDefined) {
           // small-subgraph fast path: a forget's affected set is
           // typically thousands of rows, where the distributed CC
@@ -709,24 +695,9 @@ object IngestStream {
     }
 
   def processBatch(batch: DataFrame, batchId: Long, statePath: String,
-      maxDist: Int): Unit =
-    processBatch(batch, batchId, statePath, maxDist, None)
-
-  def processBatch(batch: DataFrame, batchId: Long, statePath: String,
-      maxDist: Int, publish: Option[PublishConfig]): Unit =
-    processBatch(batch, batchId, statePath, maxDist, publish,
-      MaintainConfig())
-
-  def processBatch(batch: DataFrame, batchId: Long, statePath: String,
-      maxDist: Int, publish: Option[PublishConfig],
-      maintain: MaintainConfig): Unit =
-    processBatch(batch, batchId, statePath, maxDist, publish, maintain,
-      None)
-
-  def processBatch(batch: DataFrame, batchId: Long, statePath: String,
-      maxDist: Int, publish: Option[PublishConfig],
-      maintain: MaintainConfig,
-      drift: Option[DriftMonitor.GateConfig]): Unit =
+      maxDist: Int, publish: Option[PublishConfig] = None,
+      maintain: MaintainConfig = MaintainConfig(),
+      drift: Option[DriftMonitor.GateConfig] = None): Unit =
     ingest(Text, batch.select("doc_id", "text"), batchId, statePath,
       maxDist, publish, maintain, drift.map(textGate),
       ClusterMaintain.LocalMergeMax)
@@ -860,9 +831,8 @@ object IngestStream {
     // snapshot, so the snapshot is the batch's replay GATE — if it
     // committed before a sibling and the process died, the replay
     // would derive an EMPTY batch and permanently commit empty
-    // labels/fps/shards at this batch id (review r16; the pre-r16
-    // sequential order had the same latent hazard for the publish op,
-    // which ran after the snapshot append — snap-last closes both).
+    // labels/fps/shards at this batch id (StateCrashSpec's text-loop kill
+    // sweep pins it on this parallel order).
     // Every write is ∝ batch — appends carry only the batch's rows,
     // the label MERGE only the changed rows' buckets. The DELTA
     // computation (contracted CC) lives INSIDE the labels op so it
@@ -972,9 +942,7 @@ object IngestStream {
     // no-op and costs its thread nothing). The label store's
     // grow/vacuum chain rides as its OWN op: it touches only the
     // labels table (+ the two snapshot sidecars), disjoint from every
-    // append log being compacted — and as the LAST op the sequential
-    // fallback keeps today's compacts→grow→vacuum step order for the
-    // kill sweeps.
+    // append log being compacted.
     DriverOps.parallel(
       () => fpsT.compact(),
       () => snapTable(spark, statePath).compact(),

@@ -119,13 +119,9 @@ object MediaIngest {
       .start()
 
   def processBatch(batch: DataFrame, batchId: Long, statePath: String,
-      maxDist: Int): Unit =
-    processBatch(batch, batchId, statePath, maxDist,
-      IngestStream.MaintainConfig(), None)
-
-  def processBatch(batch: DataFrame, batchId: Long, statePath: String,
-      maxDist: Int, maintain: IngestStream.MaintainConfig,
-      gate: Option[GateConfig]): Unit =
+      maxDist: Int,
+      maintain: IngestStream.MaintainConfig = IngestStream.MaintainConfig(),
+      gate: Option[GateConfig] = None): Unit =
     ingest(batch, batchId, statePath, maxDist, maintain, gate,
       ClusterMaintain.LocalMergeMax)
 

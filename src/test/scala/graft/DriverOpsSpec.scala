@@ -3,10 +3,53 @@ package graft
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.DriverOps
+import graft.streaming.{AppendTable, DriverOps, Failpoints}
 
 class DriverOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  test("parallel under an armed sweep: ops run on pool threads, the k-th step fires in whichever op reaches it, and a sibling's later step throws too") {
+    val s = spark
+    import s.implicits._
+    // two appends (3 steps each: append.data, append.pointer.tmp,
+    // append.pointer.move); the op named `first` runs at once, the
+    // other waits until the first has stopped. Armed at step 2, the
+    // first op dies at its pointer write, and the waiting op's first
+    // step (step 3 of the context) throws as well
+    Seq(0, 1).foreach { first =>
+      val root = java.nio.file.Files.createTempDirectory("parallel_armed")
+        .toString
+      val tables = Seq("a", "b").map(n => new AppendTable(s, s"$root/$n"))
+      val threads = new java.util.concurrent.ConcurrentHashMap[Int, Thread]
+      val crashes = new java.util.concurrent.ConcurrentHashMap[Int, Failpoints.Crash]
+      val firstDone = new java.util.concurrent.CountDownLatch(1)
+      def op(i: Int): () => Unit = () => {
+        threads.put(i, Thread.currentThread())
+        if (i != first) assert(firstDone.await(30, java.util.concurrent.TimeUnit.SECONDS),
+          s"op $i waited on op $first, which never ran on another thread")
+        try tables(i).append(Seq(1L).toDF("x"), 0L)
+        catch { case c: Failpoints.Crash => crashes.put(i, c); throw c }
+        finally if (i == first) firstDone.countDown()
+      }
+      Failpoints.arm(2)
+      val thrown =
+        try intercept[Failpoints.Crash](DriverOps.parallel(op(0), op(1)))
+        finally Failpoints.disarm()
+      assert(threads.size == 2 && threads.get(0) != threads.get(1) &&
+        !threads.containsValue(Thread.currentThread()),
+        s"ops ran on $threads")
+      val (k, later) = (crashes.get(first), crashes.get(1 - first))
+      assert(k != null && k.at == 2 && k.label == "append.pointer.tmp",
+        s"first op $first: $k")
+      assert(later != null && later.at == 3 && later.label == "append.data",
+        s"waiting op ${1 - first}: $later")
+      // the first failure in op order, as itself
+      assert(thrown eq crashes.get(0))
+      // the kill stopped both: neither table committed
+      assert(tables.forall(_.read().isEmpty))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    }
+  }
 
   test("collectBounded: the rows up to the bound, None past it, one job per call") {
     val bound = 5L

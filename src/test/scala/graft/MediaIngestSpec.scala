@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.{Clusters, Dedup}
 import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal.Fixtures
-import graft.streaming.{Failpoints, IngestStream, MediaIngest}
+import graft.streaming.{IngestStream, MediaIngest}
 
 /** The spec's asset corpus, shared with IngestBatchSpec. */
 object MediaIngestSpec {
@@ -202,54 +202,28 @@ class MediaIngestSpec extends AnyFunSuite {
     val b0 = media.filter(col("media_id") % 2 === 0)
     val b1 = media.filter(col("media_id") % 2 === 1)
 
-    case class St(labels: Map[Long, Long], fps: Set[Long], snap: Set[Long])
-    def state(root: String): St = {
-      def ids(df: Option[DataFrame]) = df
-        .map(_.select("doc_id").collect().map(_.getLong(0)).toSet)
-        .getOrElse(Set.empty[Long])
-      St(IngestStream.labelsTable(spark, root).read()
-          .map(_.select("doc_id", "cluster_id").collect()
+    def ids(df: Option[DataFrame]) = df
+      .map(_.select("doc_id").collect().map(_.getLong(0)).toSet)
+      .getOrElse(Set.empty[Long])
+    // the snapshot commits last: it is the replay gate of the one
+    // micro-batch body both loops run
+    val swept = KillSweep.perTable("media_ingest", Seq(
+        "labels" -> ((root: String) => IngestStream.labelsTable(spark, root)
+          .read().map(_.select("doc_id", "cluster_id").collect()
             .map(r => r.getLong(0) -> r.getLong(1)).toMap)
-          .getOrElse(Map.empty),
-        ids(MediaIngest.fpsTable(spark, root).read()),
-        ids(IngestStream.snapTable(spark, root).read()))
-    }
-    val cleanRoot = Files.createTempDirectory("media_crash_clean").toString
-    MediaIngest.processBatch(b0, 0L, cleanRoot, 3)
-    val pre = state(cleanRoot)
-    MediaIngest.processBatch(b1, 1L, cleanRoot, 3)
-    val post = state(cleanRoot)
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(cleanRoot))
-    assert(pre.labels.nonEmpty && post.labels.keySet != pre.labels.keySet,
-      s"fixture degenerate: pre=$pre post=$post")
-
-    var k = 1
-    var done = false
-    while (!done) {
-      assert(k <= 64, "media ingest: runaway sweep — >64 kill points?")
-      val root = Files.createTempDirectory(s"media_crash_$k").toString
-      MediaIngest.processBatch(b0, 0L, root, 3)
-      var crashed = false
-      Failpoints.arm(k)
-      try MediaIngest.processBatch(b1, 1L, root, 3)
-      catch { case _: Failpoints.Crash => crashed = true }
-      finally Failpoints.disarm()
-      if (crashed) {
-        val mid = state(root)
-        for ((name, got, a, b) <- Seq(
-            ("labels", mid.labels, pre.labels, post.labels),
-            ("fps", mid.fps, pre.fps, post.fps),
-            ("snap", mid.snap, pre.snap, post.snap)))
-          assert(got == a || got == b,
-            s"kill at step $k: torn $name state: $got")
-        MediaIngest.processBatch(b1, 1L, root, 3) // heal
-        assert(state(root) == post, s"replay after kill $k diverged")
-      } else done = true
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-      k += 1
-    }
-    info(s"${k - 2} kill points")
+          .getOrElse(Map.empty)),
+        "fps" -> ((root: String) =>
+          ids(MediaIngest.fpsTable(spark, root).read())),
+        "snap" -> ((root: String) =>
+          ids(IngestStream.snapTable(spark, root).read()))),
+      gate = Some("snap"))(
+      root => MediaIngest.processBatch(b0, 0L, root, 3))(
+      root => MediaIngest.processBatch(b1, 1L, root, 3))
+    assert(swept.pre("labels") != Map.empty &&
+      swept.post("labels").asInstanceOf[Map[Long, Long]].keySet !=
+        swept.pre("labels").asInstanceOf[Map[Long, Long]].keySet,
+      s"fixture degenerate: pre=${swept.pre} post=${swept.post}")
+    info(s"${swept.points} kill points")
   }
 
   test("processBatch job budget: ≤ 9 fresh, ≤ 14 over state, ≤ 18 with maintenance") {

@@ -26,52 +26,15 @@ import graft.streaming.{AppendTable, BucketedTable, Failpoints,
 class StateCrashSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** Sweep every kill point of `op` against the state-read `state`.
-    * `setup` builds a fresh table rooted at the given dir; `post` is
-    * learned from one clean un-armed run. Returns the number of kill
-    * points found, so callers can assert the op was actually swept.
+  /** Sweep every kill point of `op` against the state-read `state`
+    * (one table: [[KillSweep.perTable]] with a single read). `setup`
+    * builds a fresh table rooted at the given dir. Returns the number
+    * of kill points found, so callers can assert the op was actually
+    * swept.
     */
   private def sweep[S](name: String)(setup: String => Unit)(
-      op: String => Unit)(state: String => S): Int = {
-    // learn pre/post from a clean run
-    val cleanRoot = Files.createTempDirectory(s"crash_${name}_clean").toString
-    setup(cleanRoot)
-    val pre = state(cleanRoot)
-    op(cleanRoot)
-    val post = state(cleanRoot)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cleanRoot))
-
-    var k = 1
-    var done = false
-    while (!done) {
-      assert(k <= 64, s"$name: runaway sweep — >64 kill points?")
-      val root = Files.createTempDirectory(s"crash_${name}_$k").toString
-      setup(root)
-      var crashed: Option[Failpoints.Crash] = None
-      Failpoints.arm(k)
-      try op(root)
-      catch { case c: Failpoints.Crash => crashed = Some(c) }
-      finally Failpoints.disarm()
-      crashed match {
-        case Some(c) =>
-          val mid = state(root)
-          assert(mid == pre || mid == post,
-            s"$name killed at step $k (${c.label}): torn state\n" +
-              s"  pre=$pre\n  post=$post\n  got=$mid")
-          op(root) // replay heals
-          assert(state(root) == post,
-            s"$name killed at step $k (${c.label}): replay did not " +
-              "converge to the post-state")
-          k += 1
-        case None => // k walked past the last mutation: clean finish
-          assert(state(root) == post,
-            s"$name: armed-past-the-end run diverged from the clean run")
-          done = true
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    }
-    k - 1
-  }
+      op: String => Unit)(state: String => S): Int =
+    KillSweep.perTable(name, Seq(name -> state))(setup)(op).points
 
   private def toDF(xs: Seq[Long]) = {
     val s = spark; import s.implicits._
@@ -490,69 +453,72 @@ class StateCrashSpec extends AnyFunSuite {
     // ledger append strictly LAST as the replay gate — a cross-table
     // mixture mid-crash is legal, a committed ledger over a
     // non-post table is not
-    case class St(labels: Map[Long, (Long, Long)], snap: Set[Long],
-        fps: Set[Long], shards: Set[Long], ledger: Set[Long])
-    def state(root: String): St = {
-      def ids(t: graft.streaming.AppendTable) =
-        t.read().map(_.select("doc_id").collect().map(_.getLong(0)).toSet)
-          .getOrElse(Set.empty[Long])
-      St(
-        IngestStream.labelsTable(spark, s"$root/state").read()
-          .map(_.collect().map(r => r.getLong(0) ->
-            (r.getLong(1), r.getLong(2))).toMap).getOrElse(Map.empty),
-        ids(IngestStream.snapTable(spark, s"$root/state")),
-        ids(IngestStream.fpsTable(spark, s"$root/state")),
-        spark.read.parquet(s"$root/shards")
-          .selectExpr("pub_id % 1000000000000 AS doc_id")
-          .collect().map(_.getLong(0)).toSet,
-        ids(IngestStream.forgetLedger(spark, s"$root/state")))
-    }
-    // learn pre/post from a clean run
-    val cleanRoot = Files.createTempDirectory("crash_forget_clean").toString
-    ingest(cleanRoot)
-    val pre = state(cleanRoot)
-    doForget(cleanRoot)
-    val post = state(cleanRoot)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cleanRoot))
-    assert(pre.shards.contains(3L) && !post.shards.contains(3L) &&
-      post.labels == Map(1L -> (1L, 1L), 2L -> (2L, 1L), 4L -> (4L, 1L)),
-      s"fixture degenerate: pre=$pre post=$post")
+    def ids(t: String => graft.streaming.AppendTable)(root: String) =
+      t(root).read().map(_.select("doc_id").collect().map(_.getLong(0)).toSet)
+        .getOrElse(Set.empty[Long])
+    def labels(root: String) =
+      IngestStream.labelsTable(spark, s"$root/state").read()
+        .map(_.collect().map(r => r.getLong(0) ->
+          (r.getLong(1), r.getLong(2))).toMap).getOrElse(Map.empty)
+    def shards(root: String) = spark.read.parquet(s"$root/shards")
+      .selectExpr("pub_id % 1000000000000 AS doc_id")
+      .collect().map(_.getLong(0)).toSet
+    val swept = KillSweep.perTable("forget", Seq(
+        "labels" -> labels _,
+        "snap" -> ids(r => IngestStream.snapTable(spark, s"$r/state")) _,
+        "fps" -> ids(r => IngestStream.fpsTable(spark, s"$r/state")) _,
+        "shards" -> shards _,
+        "ledger" -> ids(r => IngestStream.forgetLedger(spark, s"$r/state")) _),
+      gate = Some("ledger"))(ingest)(doForget)
+    assert(swept.pre("shards") == Set(1L, 2L, 3L, 4L) &&
+      swept.post("shards") == Set(1L, 2L, 4L) && swept.post("labels") ==
+        Map(1L -> (1L, 1L), 2L -> (2L, 1L), 4L -> (4L, 1L)),
+      s"fixture degenerate: pre=${swept.pre} post=${swept.post}")
+    info(s"${swept.points} kill points")
+    assert(swept.points >= 12,
+      s"forget: expected ≥12 kill points, saw ${swept.points}")
+  }
 
-    var k = 1
-    var done = false
-    while (!done) {
-      assert(k <= 64, "forget: runaway sweep — >64 kill points?")
-      val root = Files.createTempDirectory(s"crash_forget_$k").toString
-      ingest(root)
-      var crashed = false
-      Failpoints.arm(k)
-      try doForget(root)
-      catch { case _: Failpoints.Crash => crashed = true }
-      finally Failpoints.disarm()
-      val mid = state(root)
-      if (crashed) {
-        for ((name, got, a, b) <- Seq(
-            ("labels", mid.labels, pre.labels, post.labels),
-            ("snap", mid.snap, pre.snap, post.snap),
-            ("fps", mid.fps, pre.fps, post.fps),
-            ("shards", mid.shards, pre.shards, post.shards),
-            ("ledger", mid.ledger, pre.ledger, post.ledger)))
-          assert(got == a || got == b,
-            s"forget killed at step $k: torn $name state: $got")
-        assert(mid.ledger == pre.ledger || mid == post,
-          s"forget killed at step $k: ledger committed before a table " +
-            s"reached post-state: $mid")
-        doForget(root)
-        assert(state(root) == post,
-          s"forget killed at step $k: replay did not converge")
-        k += 1
-      } else {
-        assert(mid == post, "armed-past-the-end run diverged")
-        done = true
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    }
-    assert(k - 1 >= 12, s"forget: expected ≥12 kill points, saw ${k - 1}")
+  test("IngestStream.processBatch survives a kill at every file-op boundary of its parallel commits and due tick: per-table pre-or-post, snapshot strictly last, replay converges") {
+    import graft.streaming.IngestStream
+    val s = spark
+    import s.implicits._
+    val (p, q, r) = IngestStreamSpec.bridgeTokens()
+    // batch 1's bridge doc joins batch 0's doc 1 and its own doc 4 into
+    // one cluster, so the label merge relabels a stored member; every
+    // doc publishes, and the call's tick (compactEvery 2 at batch id 1)
+    // compacts the logs and vacuums the label store and the manifest
+    def call(root: String, docs: Seq[(Long, String)], id: Long): Unit =
+      IngestStream.processBatch(docs.toDF("doc_id", "text"), id,
+        s"$root/state", 3,
+        Some(IngestStream.PublishConfig(s"$root/shards", budget = 2L)),
+        IngestStream.MaintainConfig(2, 0L, 1))
+    def ids(t: String => graft.streaming.AppendTable)(root: String) =
+      t(root).read().map(_.select("doc_id").collect().map(_.getLong(0)).toSet)
+        .getOrElse(Set.empty[Long])
+    val swept = KillSweep.perTable("ingest", Seq(
+        "labels" -> ((root: String) =>
+          IngestStream.labelsTable(spark, s"$root/state").read()
+            .map(_.collect().map(r => r.getLong(0) ->
+              (r.getLong(1), r.getLong(2))).toMap).getOrElse(Map.empty)),
+        "fps" -> ids(r => IngestStream.fpsTable(spark, s"$r/state")) _,
+        "manifest" -> ((root: String) =>
+          IngestStream.publishManifest(spark, s"$root/state").read()
+            .map(_.collect().map(_.toString).toSet).getOrElse(Set.empty)),
+        "shards" -> ((root: String) => spark.read.parquet(s"$root/shards")
+          .selectExpr("pub_id", "CAST(shard_id AS long)")
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet),
+        "snap" -> ids(r => IngestStream.snapTable(spark, s"$r/state")) _),
+      gate = Some("snap"))(
+      root => call(root, Seq(1L -> p, 2L -> "unrelated decoy text"), 0L))(
+      root => call(root, Seq(3L -> s"$p $q $r", 4L -> q,
+        5L -> "another decoy line"), 1L))
+    assert(swept.post("labels") == Map(1L -> (1L, 3L), 2L -> (2L, 1L),
+      3L -> (1L, 3L), 4L -> (1L, 3L), 5L -> (5L, 1L)),
+      s"fixture degenerate: pre=${swept.pre} post=${swept.post}")
+    info(s"${swept.points} kill points")
+    assert(swept.points >= 12,
+      s"ingest: expected ≥12 kill points, saw ${swept.points}")
   }
 
   test("StateInspect.repair survives a kill at every residue delete (append layout): reads total and fsck-healthy at every boundary") {

@@ -441,6 +441,37 @@ class StreamingSpec extends AnyFunSuite {
     assert(events("k2").version == 1 && events.size == 2)
   }
 
+  test("sink survives a kill at every file-op boundary with a due maintenance tick: per-table pre-or-post, outbox only after events, replay converges") {
+    val s = spark
+    import s.implicits._
+    val t0 = 1700000000L * 1000000L
+    def evRow(key: String, version: Int, ts: Long) =
+      EventRow(key, "social", ts, ts, 1,
+        Seq(graft.aggregates.Evidence("x", ts, Map("tweet_id" -> key), "", 1.0)),
+        0.0, version)
+    // batch 1 updates k1 and adds k2; its tick (every 2 at batch id 1)
+    // rebuckets nothing and vacuums both tables to one version
+    def call(root: String, rows: Seq[EventRow], id: Long): Unit =
+      EventSink.processBatch(rows.toDS(), id, s"$root/events",
+        s"$root/outbox", _ => true, 0L, EventSink.EventsMaintain(2, 0L, 1))
+    val swept = KillSweep.perTable("sink", Seq(
+        "events" -> ((root: String) =>
+          EventSink.eventsTable(s, s"$root/events").read()
+            .map(_.as[EventRow].collect().toSet).getOrElse(Set.empty)),
+        "outbox" -> ((root: String) =>
+          new SnapshotTable(s, s"$root/outbox").read()
+            .map(_.as[OutboxEntry].collect().toSet).getOrElse(Set.empty))),
+      gate = Some("outbox"))(
+      root => call(root, Seq(evRow("k1", 1, t0)), 0L))(
+      root => call(root, Seq(evRow("k1", 2, t0 + 1000000L),
+        evRow("k2", 1, t0 + 2000000L)), 1L))
+    assert(swept.pre("events") != swept.post("events"),
+      s"fixture degenerate: pre=${swept.pre} post=${swept.post}")
+    info(s"${swept.points} kill points")
+    assert(swept.points >= 6,
+      s"sink: expected ≥6 kill points, saw ${swept.points}")
+  }
+
   test("sustained stream bench: rate-pinned feed drains with sane stats") {
     // tiny feed (sf0.001, 4 handles, 50-row pages, no replication) —
     // exercises the whole StreamBench path: distributed feed build,
