@@ -66,6 +66,12 @@ object Tables {
 
 /** One place to construct sessions so every entry point (Verify, Bench,
   * tests) gets identical, oracle-parity-critical configuration.
+  *
+  * One process compiles each generated class once: tasks share the
+  * executor's class loader across sessions and streaming queries, and
+  * the codegen cache is sized past the loops' working set, so a new
+  * query, a restart or the next loop cycle reuses what an earlier one
+  * compiled ([[builderDefaults]] gives each constant's measurement).
   */
 object Sessions {
   /** Scratch root for stream staging and checkpoints. Local-mode runs
@@ -150,6 +156,23 @@ object Sessions {
       // upsert 170 → 82 ms. A checkpoint written without it restarts
       // under it unchanged (SinkBatchSpec)
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+      // tasks run under the executor's own class loader, not a loader
+      // per session. graft adds no session artifacts (no addJar,
+      // addArtifact or addFile), and every streaming query clones its
+      // session; the codegen cache is keyed by (class loader, code), so
+      // under per-session loaders each query began with a cold cache,
+      // and each class such a loader missed was fetched from the driver
+      // over RPC. Counted by CodegenSpec: the second of two identical
+      // EventSink.start queries compiles 79 classes under per-session
+      // loaders, 28 with this flag alone and 4 with the cache size below
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // the codegen cache holds the loops' working set. Counted cold by
+      // CodegenSpec: one ingest cycle (3 processBatch calls with publish
+      // and maintenance, then forget) compiles 109-125 classes and one
+      // sink query 87, against Spark's default of 100 entries, so LRU
+      // order evicted each class before the next cycle reused it: the
+      // second identical cycle compiles 108 classes, and 0 at this size
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {

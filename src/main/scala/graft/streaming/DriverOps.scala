@@ -50,17 +50,18 @@ private[graft] object DriverOps {
         // mid-flight would let the caller's retry/replay race that
         // straggler on its own table, exactly the two-writer case the
         // single-writer contract forbids.
-        var first: Throwable = null
-        futs.foreach { f =>
-          try f.get()
+        val failures = futs.flatMap { f =>
+          try { f.get(); None }
           catch {
-            case e: java.util.concurrent.ExecutionException =>
-              if (first == null) first = e.getCause
-            case e: Throwable =>
-              if (first == null) first = e
+            case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+            case e: Throwable => Some(e)
           }
         }
-        if (first != null) throw first
+        // the kill first: once an armed step fires, every later step
+        // of the context throws too, so a sibling earlier in op order
+        // can fail after the kill; the caller sees the armed step
+        failures.collect { case c: Failpoints.Crash => c }.minByOption(_.at)
+          .orElse(failures.headOption).foreach(e => throw e)
       } finally pool.shutdown()
     }
 

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,47 +10,69 @@ import graft.streaming.{AppendTable, DriverOps, Failpoints}
 class DriverOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("parallel under an armed sweep: ops run on pool threads, the k-th step fires in whichever op reaches it, and a sibling's later step throws too") {
+  /** Two appends (3 steps each: append.data, append.pointer.tmp,
+    * append.pointer.move) through `parallel` with step `k` armed. The
+    * op named `first` runs at once, the other waits until the first
+    * has stopped. Returns what the caller caught, the crash each op
+    * saw, the threads the ops ran on and the tables.
+    */
+  private def armedPair(first: Int, k: Int): (Failpoints.Crash,
+      Map[Int, Failpoints.Crash], Map[Int, Thread], Seq[AppendTable]) = {
     val s = spark
     import s.implicits._
-    // two appends (3 steps each: append.data, append.pointer.tmp,
-    // append.pointer.move); the op named `first` runs at once, the
-    // other waits until the first has stopped. Armed at step 2, the
-    // first op dies at its pointer write, and the waiting op's first
-    // step (step 3 of the context) throws as well
+    val root = java.nio.file.Files.createTempDirectory("parallel_armed")
+      .toString
+    org.apache.commons.io.FileUtils.forceDeleteOnExit(new java.io.File(root))
+    val tables = Seq("a", "b").map(n => new AppendTable(s, s"$root/$n"))
+    val threads = new java.util.concurrent.ConcurrentHashMap[Int, Thread]
+    val crashes = new java.util.concurrent.ConcurrentHashMap[Int, Failpoints.Crash]
+    val firstDone = new java.util.concurrent.CountDownLatch(1)
+    def op(i: Int): () => Unit = () => {
+      threads.put(i, Thread.currentThread())
+      if (i != first) assert(firstDone.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        s"op $i waited on op $first, which never ran on another thread")
+      try tables(i).append(Seq(1L).toDF("x"), 0L)
+      catch { case c: Failpoints.Crash => crashes.put(i, c); throw c }
+      finally if (i == first) firstDone.countDown()
+    }
+    Failpoints.arm(k)
+    val thrown =
+      try intercept[Failpoints.Crash](DriverOps.parallel(op(0), op(1)))
+      finally Failpoints.disarm()
+    (thrown, crashes.asScala.toMap, threads.asScala.toMap, tables)
+  }
+
+  test("parallel under an armed sweep: ops run on pool threads, the k-th step fires in whichever op reaches it, and a sibling's later step throws too") {
+    // armed at step 2, the first op dies at its pointer write, and the
+    // waiting op's first step (step 3 of the context) throws as well
     Seq(0, 1).foreach { first =>
-      val root = java.nio.file.Files.createTempDirectory("parallel_armed")
-        .toString
-      val tables = Seq("a", "b").map(n => new AppendTable(s, s"$root/$n"))
-      val threads = new java.util.concurrent.ConcurrentHashMap[Int, Thread]
-      val crashes = new java.util.concurrent.ConcurrentHashMap[Int, Failpoints.Crash]
-      val firstDone = new java.util.concurrent.CountDownLatch(1)
-      def op(i: Int): () => Unit = () => {
-        threads.put(i, Thread.currentThread())
-        if (i != first) assert(firstDone.await(30, java.util.concurrent.TimeUnit.SECONDS),
-          s"op $i waited on op $first, which never ran on another thread")
-        try tables(i).append(Seq(1L).toDF("x"), 0L)
-        catch { case c: Failpoints.Crash => crashes.put(i, c); throw c }
-        finally if (i == first) firstDone.countDown()
-      }
-      Failpoints.arm(2)
-      val thrown =
-        try intercept[Failpoints.Crash](DriverOps.parallel(op(0), op(1)))
-        finally Failpoints.disarm()
-      assert(threads.size == 2 && threads.get(0) != threads.get(1) &&
-        !threads.containsValue(Thread.currentThread()),
+      val (thrown, crashes, threads, tables) = armedPair(first, 2)
+      assert(threads.size == 2 && threads(0) != threads(1) &&
+        !threads.values.exists(_ == Thread.currentThread()),
         s"ops ran on $threads")
       val (k, later) = (crashes.get(first), crashes.get(1 - first))
-      assert(k != null && k.at == 2 && k.label == "append.pointer.tmp",
+      assert(k.exists(c => c.at == 2 && c.label == "append.pointer.tmp"),
         s"first op $first: $k")
-      assert(later != null && later.at == 3 && later.label == "append.data",
+      assert(later.exists(c => c.at == 3 && c.label == "append.data"),
         s"waiting op ${1 - first}: $later")
-      // the first failure in op order, as itself
-      assert(thrown eq crashes.get(0))
+      // the kill, as itself
+      assert(k.exists(thrown eq _))
       // the kill stopped both: neither table committed
       assert(tables.forall(_.read().isEmpty))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
+  }
+
+  test("parallel rethrows the kill when it lands in a later op and an earlier op's later step throws") {
+    // op 1 runs first and takes the kill at step k; op 0, first in op
+    // order, throws at step k + 1. The caller sees step k and its label
+    Seq("append.data", "append.pointer.tmp", "append.pointer.move")
+      .zipWithIndex.foreach { case (label, i) =>
+        val k = i + 1
+        val (thrown, crashes, _, _) = armedPair(1, k)
+        assert(crashes.get(0).exists(_.at == k + 1), s"k = $k: op 0 saw ${crashes.get(0)}")
+        assert(thrown.at == k && thrown.label == label,
+          s"k = $k: the caller saw step ${thrown.at} (${thrown.label})")
+      }
   }
 
   test("collectBounded: the rows up to the bound, None past it, one job per call") {

@@ -15,37 +15,9 @@ import graft.streaming.{DriverOps, IngestStream, MediaIngest}
   * equality of that path with the distributed one it falls back to.
   */
 class IngestBatchSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+  import IngestBatchSpec.batches
 
-  /** Seeded batches of `n` docs: 20 % near-duplicates of an earlier
-    * doc (one word swapped), 5 % exact copies under a new id, 10 %
-    * re-deliveries of an earlier (id, text).
-    */
-  private def batches(seed: Long, count: Int, n: Int): Seq[Seq[(Long, String)]] = {
-    val rnd = new scala.util.Random(seed)
-    def word() = s"w${rnd.nextInt(3000)}"
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    var next = 0L
-    (0 until count).map { _ =>
-      val out = (0 until n).map { _ =>
-        val r = rnd.nextDouble()
-        if (seen.nonEmpty && r < 0.10) seen(rnd.nextInt(seen.size))
-        else {
-          val text =
-            if (seen.nonEmpty && r < 0.30) {
-              val ws = seen(rnd.nextInt(seen.size))._2.split(" ")
-              ws(rnd.nextInt(ws.length)) = word()
-              ws.mkString(" ")
-            } else if (seen.nonEmpty && r < 0.35) seen(rnd.nextInt(seen.size))._2
-            else Seq.fill(30 + rnd.nextInt(30))(word()).mkString(" ")
-          next += 1
-          (next, text)
-        }
-      }
-      seen ++= out
-      out
-    }
-  }
+  private lazy val spark = TestSpark.spark
 
   private val maintain = IngestStream.MaintainConfig(compactEvery = 3,
     maxRowsPerBucket = 40L, vacuumKeepVersions = 2)
@@ -214,5 +186,37 @@ class IngestBatchSpec extends AnyFunSuite {
       prior.toDF(Sampling.ManifestSchema.fieldNames.toSeq: _*)).collect())
     assert(Iterator.iterate[Throwable](dist)(_.getCause).takeWhile(_ != null)
       .exists(e => Option(e.getMessage).exists(_.contains(msg))), dist.toString)
+  }
+}
+
+object IngestBatchSpec {
+  /** Seeded batches of `n` docs: 20 % near-duplicates of an earlier
+    * doc (one word swapped), 5 % exact copies under a new id, 10 %
+    * re-deliveries of an earlier (id, text).
+    */
+  def batches(seed: Long, count: Int, n: Int): Seq[Seq[(Long, String)]] = {
+    val rnd = new scala.util.Random(seed)
+    def word() = s"w${rnd.nextInt(3000)}"
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    var next = 0L
+    (0 until count).map { _ =>
+      val out = (0 until n).map { _ =>
+        val r = rnd.nextDouble()
+        if (seen.nonEmpty && r < 0.10) seen(rnd.nextInt(seen.size))
+        else {
+          val text =
+            if (seen.nonEmpty && r < 0.30) {
+              val ws = seen(rnd.nextInt(seen.size))._2.split(" ")
+              ws(rnd.nextInt(ws.length)) = word()
+              ws.mkString(" ")
+            } else if (seen.nonEmpty && r < 0.35) seen(rnd.nextInt(seen.size))._2
+            else Seq.fill(30 + rnd.nextInt(30))(word()).mkString(" ")
+          next += 1
+          (next, text)
+        }
+      }
+      seen ++= out
+      out
+    }
   }
 }

@@ -5,12 +5,27 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.Success
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-/** Counting the Spark jobs a block runs, for the job-budget specs. */
+/** Counting the Spark jobs a block runs, for the job-budget specs,
+  * and the classes it compiles.
+  */
 object SparkJobs {
+
+  /** The classes Spark's code generator compiled while `body` ran: the
+    * delta of its compile counter, one count per cache miss. The
+    * counter is JVM-wide; forked suites run one after another, so
+    * only `body` and the threads it starts compile meanwhile.
+    */
+  def compiles(body: => Unit): Long = {
+    def count = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val before = count
+    body
+    count - before
+  }
 
   /** One job as a listener saw it: its local properties, its stages
     * and the innermost program frame of its call site ([[siteOf]]) —

@@ -24,6 +24,7 @@ import argparse
 import json
 import os
 import re
+import signal
 import statistics
 import subprocess
 import sys
@@ -98,6 +99,9 @@ def summarize(records, benchmark_json):
 
 
 def main():
+    # die quietly on a closed pipe (`--summarize log | head`), as other
+    # filters do, instead of a BrokenPipeError traceback
+    signal.signal(signal.SIGPIPE, signal.SIG_DFL)
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent")
     ap.add_argument("--change")
